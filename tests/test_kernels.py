@@ -5,6 +5,8 @@ Mirrors the reference's kernel oracle values (hard-coded outputs of R
 structural invariants of the conversion matrix.
 """
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -13,6 +15,7 @@ from numpy.testing import assert_allclose
 from tsdisagg_spark import kernels
 
 REF_DATA = "/root/reference/tests/data"
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def test_chow_lin_covariance_golden():
@@ -261,7 +264,8 @@ def test_denton_banded_long_series():
 # ---------------------------------------------------------------------------
 
 def test_banded_lu_solve_grid_matches_dense():
-    """The grid-vectorized banded LU must agree with dense solves and
+    """The grid-vectorized banded LU (transposed band storage, the layout
+    the banded GLS scan assembles) must agree with dense solves and
     slogdet for every stacked system."""
     rng = np.random.default_rng(11)
     G, n, kl = 5, 40, 3
@@ -273,12 +277,12 @@ def test_banded_lu_solve_grid_matches_dense():
                 A[g, i, j] = rng.standard_normal()
         A[g] += np.eye(n) * 0.5
     B = rng.standard_normal((G, n, 2))
-    ab = np.zeros((G, 2 * kl + ku + 1, n))
+    abt = np.zeros((G, n, 2 * kl + ku + 1))
     for g in range(G):
         for i in range(n):
             for j in range(max(0, i - kl), min(n, i + ku + 1)):
-                ab[g, kl + ku + i - j, j] = A[g, i, j]
-    x, logdet = kernels.banded_lu_solve_grid(ab, kl, ku, B.copy())
+                abt[g, j, kl + ku + i - j] = A[g, i, j]
+    x, logdet = kernels._banded_lu_solve_grid_t(abt, kl, ku, B.copy())
     for g in range(G):
         np.testing.assert_allclose(A[g] @ x[g], B[g], atol=1e-8)
         np.testing.assert_allclose(logdet[g], np.linalg.slogdet(A[g])[1], atol=1e-9)
@@ -459,7 +463,9 @@ def test_litterman_banded_equals_dense(factor, agg, rho):
     u = np.cumsum(0.3 * rng.standard_normal(n))  # random-walk disturbance
     y = C @ (2.0 * X.ravel() + u)
 
-    yh_b, beta_b, s_b, nll_b = kernels.litterman_banded_solve(y, X, C, rho)
+    yh_b, beta_b, s_b, nll_b = kernels._gls_banded_solve_fixed(
+        y, X, C, rho, "litterman"
+    )
 
     Sigma0 = kernels.litterman_covariance(rho, 1.0, n)
     beta_d = kernels.gls_beta(Sigma0, y, X, C)
@@ -488,7 +494,7 @@ def test_litterman_banded_full_fit_equals_dense():
     u = np.cumsum(0.3 * rng.standard_normal(n))
     y = C @ (2.0 * X.ravel() + u)
 
-    yh_b, res_b, info_b = kernels.litterman_banded_fit(y, X, C)
+    yh_b, res_b, info_b = kernels._gls_banded_fit(y, X, C, "litterman")
     res_d = kernels.fit_rho_sigma(y, X, C, kernels.litterman_covariance)
     np.testing.assert_allclose(res_b.fun, res_d.fun, rtol=1e-9)
     np.testing.assert_allclose(res_b.x, res_d.x, rtol=1e-6)
@@ -518,49 +524,205 @@ def test_solve_series_dispatches_banded_litterman():
     y = C @ (2.0 * X.ravel() + u)
     y_hat, result, info = kernels.solve_series(y, X, C, "litterman")
     assert result is not None and "beta" in info
-    yh_b, res_b, _ = kernels.litterman_banded_fit(y, X, C)
+    yh_b, res_b, _ = kernels._gls_banded_fit(y, X, C, "litterman")
     np.testing.assert_array_equal(y_hat, yh_b)
     np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9)
 
 
-def test_coarse_v0_cache_is_transparent():
-    """The coarse-grid (V0, logdet) cache must be numerically invisible:
-    a cached fit returns bit-identical results to a cold one, and series
-    sharing (builder, n, C) actually hit the cache."""
-    rng = np.random.default_rng(11)
-    factor, n_low = 12, 6
+# ---------------------------------------------------------------------------
+# closed-form V0 and the regression fit path below BANDED_THRESHOLD
+# ---------------------------------------------------------------------------
+
+def _dense_sigma0(method: str, rho: float, n: int) -> np.ndarray:
+    """Unit-scale Sigma0 as a dense n x n matrix.  Litterman's is formed
+    from its factor (Delta^{-1} H^{-1})(Delta^{-1} H^{-1})' rather than by
+    inverting the precision, which near rho = 1 loses ~1e-8 relative."""
+    if method == "chow-lin":
+        return kernels.chow_lin_covariance(rho, 1.0, n)
+    lag = np.subtract.outer(np.arange(n), np.arange(n))
+    H_inv = np.where(lag >= 0, rho ** np.maximum(lag, 0), 0.0)
+    F = np.tril(np.ones((n, n))) @ H_inv
+    return F @ F.T
+
+
+@pytest.mark.parametrize("factor", [3, 4, 12])
+@pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_closed_form_v0_equals_dense(method, agg, factor):
+    """V0 = C Sigma0(rho) C' from the closed form equals the dense product
+    to 1e-13 relative on the coarse scan grid and on a refinement bracket
+    (the top one, where litterman is worst conditioned), with a 13-period
+    backcast ahead of the first constraint."""
+    n_low, backcast = 8, 13
+    high_labels = np.concatenate(
+        [np.full(backcast, -1), np.repeat(np.arange(n_low), factor)]
+    )
+    C = kernels.conversion_matrix(np.arange(n_low), high_labels, factor, agg)
+    n = C.shape[1]
+    coarse = np.linspace(1e-5, 1 - 1e-5, 41)
+    grid = np.concatenate([coarse, np.linspace(coarse[-2], coarse[-1], 33)])
+    V0 = kernels._v0_grid_fn(C, kernels.COVARIANCE_BUILDERS[method])(grid)
+    assert V0.shape == (len(grid), n_low, n_low)
+    for g, rho in enumerate(grid):
+        dense = C @ _dense_sigma0(method, rho, n) @ C.T
+        np.testing.assert_allclose(V0[g], dense, rtol=1e-13, atol=1e-13 * np.abs(dense).max())
+
+
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_long_fit_allocates_no_sigma_stack(method):
+    """A 100-year monthly fit (n = 1200, below BANDED_THRESHOLD) runs on the
+    closed-form path: its traced peak stays under two n x n matrices (the
+    dense builders hold at least three while forming one Sigma0), let alone
+    a (G, n, n) covariance stack (41 x 1200^2 doubles = 472 MB)."""
+    import tracemalloc
+
+    rng = np.random.default_rng(12)
+    n_low, factor = 100, 12
     n = n_low * factor
     C = kernels.conversion_matrix(
         np.arange(n_low), np.repeat(np.arange(n_low), factor), factor, "sum"
     )
-    fits = []
-    for method in ("chow-lin", "litterman"):
-        for trial in range(2):
-            X = np.column_stack(
-                [rng.uniform(1, 3, n), np.ones(n)]
-            )
-            y = C @ (1.5 * X[:, 0] + 0.3 * rng.standard_normal(n))
-            kernels._COARSE_V0_CACHE.clear()
-            cold = kernels.solve_series(y, X, C, method)
-            # coarse pass + its refinement bracket both cached
-            assert len(kernels._COARSE_V0_CACHE) == 2
-            warm = kernels.solve_series(y, X, C, method)
-            np.testing.assert_array_equal(cold[0], warm[0])
-            assert cold[1].x[0] == warm[1].x[0]
-            fits.append(cold)
-    kernels._COARSE_V0_CACHE.clear()
+    X = np.column_stack([rng.uniform(1, 3, n), np.ones(n)])
+    y = C @ (2.0 * X[:, 0] + np.cumsum(rng.normal(0.0, 0.3, n)))
+    tracemalloc.start()
+    try:
+        y_hat, _result, info = kernels.solve_series(y, X, C, method)
+        _current, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 2 * n * n * 8, f"peak {peak / 2**20:.1f} MiB"
+    np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9)
+    assert np.all(np.isfinite(info["std_beta"]))
 
 
-def test_coarse_v0_cache_skips_oversized_entries():
-    """Stacks past the byte cap are returned but never pinned."""
-    n_low = 200  # 41 * 200^2 * 8 bytes ~ 13 MB > 4 MB cap
-    factor = 3
-    n = n_low * factor
+def _ld_solve(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Gaussian elimination with partial pivoting in the arrays' dtype
+    (np.linalg has no long double routines)."""
+    A, B = A.copy(), B.copy()
+    n = len(A)
+    for c in range(n):
+        p = c + int(np.argmax(np.abs(A[c:, c])))
+        A[[c, p]], B[[c, p]] = A[[p, c]], B[[p, c]]
+        f = A[c + 1 :, c] / A[c, c]
+        A[c + 1 :] -= f[:, None] * A[c]
+        B[c + 1 :] -= f[:, None] * B[c]
+    for c in range(n - 1, -1, -1):
+        B[c] = (B[c] - A[c, c + 1 :] @ B[c + 1 :]) / A[c, c]
+    return B
+
+
+def _litterman_y_hat_longdouble(y, X, C, rho):
+    """Litterman GLS + distribution step at fixed rho in np.longdouble,
+    through the factor F = Delta^{-1} H^{-1} (Sigma0 = F F')."""
+    ld = np.longdouble
+    n = X.shape[0]
+    r = ld(rho)
+    geo = np.concatenate([[ld(0)], np.cumsum(r ** np.arange(n, dtype=ld))])
+    lag = np.subtract.outer(np.arange(n), np.arange(n))
+    F = np.where(lag >= 0, geo[np.maximum(lag, 0) + 1], ld(0))
+    CF = C.astype(ld) @ F
+    CX, yl = C.astype(ld) @ X.astype(ld), y.astype(ld)
+    solved = _ld_solve(CF @ CF.T, np.column_stack([CX, yl]))
+    k = X.shape[1]
+    beta = _ld_solve(CX.T @ solved[:, :k], (CX.T @ solved[:, k])[:, None])[:, 0]
+    z = _ld_solve(CF @ CF.T, (yl - CX @ beta)[:, None])[:, 0]
+    return X.astype(ld) @ beta + F @ (CF.T @ z)
+
+
+def test_regression_fit_matches_dense_fixture():
+    """Differential test against the dense-Sigma fit path of commit 92f6fb7
+    (tests/dense_fixture.py: chow-lin and litterman, every agg_func,
+    A->M, Q->M and A->Q, 3/10/30 years, backcast 0 and 13).
+
+    * C y_hat = y.
+    * y_hat matches the fixture to 1e-10, or else the fitted rho differs
+      only where the profile likelihood is flat to rounding: the new NLL at
+      both rhos agrees to 1e-12, and y_hat recomputed at the fixture's rho
+      matches to 1e-10.  (With first/last over 12 months the low-frequency
+      points are a year apart, so for small rho the profile is flat to
+      ~1e-16 and the argmin is decided by rounding.)
+    * Litterman fits near the upper rho bound are also recomputed in long
+      double: the new y_hat must be at least as close to it as the fixture
+      (to 1e-12), because the dense path solved an ill-conditioned
+      precision there.
+    """
+    import dense_fixture
+
+    ref = np.load(os.path.join(HERE, "data", "dense_fixture.npz"))
+    n_cases = 0
+    for i, (key, y, X, C) in enumerate(dense_fixture.cases()):
+        method = key[0]
+        want = ref["y_hat"][ref["offsets"][i] : ref["offsets"][i + 1]]
+        rho_ref = float(ref["rho"][i])
+
+        def rel(a, b=want):
+            return float(np.abs(a - b).max() / np.abs(b).max())
+
+        y_hat, _result, info = kernels.solve_series(y, X, C, method)
+        np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9, err_msg=str(key))
+        at_ref, _b, _s, nll_ref = kernels._gls_solve_fixed(y, X, C, rho_ref, method)
+        if rel(y_hat) > 1e-10:
+            _y, _b, _s, nll_new = kernels._gls_solve_fixed(y, X, C, info["rho"], method)
+            assert abs(nll_new - nll_ref) <= 1e-12 * abs(nll_ref), key
+            assert rel(at_ref) <= 1e-10, key
+        else:
+            np.testing.assert_allclose(info["rho"], rho_ref, rtol=1e-6, atol=1e-8)
+            np.testing.assert_allclose(info["beta"], ref["beta"][i], rtol=1e-6)
+            np.testing.assert_allclose(info["sigma2"], ref["sigma2"][i], rtol=1e-6)
+        if method == "litterman" and rho_ref > 0.999:
+            exact = _litterman_y_hat_longdouble(y, X, C, rho_ref).astype(float)
+            assert rel(at_ref, exact) <= max(rel(want, exact), 1e-12), key
+        n_cases += 1
+    assert n_cases == len(ref["rho"]) == 144
+
+
+def _exact_fit_case(seed: int):
+    """A 3-7 year monthly series whose yearly target is the sum of its own
+    first indicator: y = C x1 with X = (x1, x2, 1)."""
+    rng = np.random.default_rng([7, seed])
+    years = int(rng.integers(3, 8))
+    n = 12 * years
+    x2 = rng.integers(1000, 3000, n).astype(float)
+    x1 = np.round(x2 * rng.uniform(1400, 1600, n) * (1 + 0.003 * np.arange(n)), 2)
     C = kernels.conversion_matrix(
-        np.arange(n_low), np.repeat(np.arange(n_low), factor), factor, "sum"
+        np.arange(years), np.repeat(np.arange(years), 12), 12, "sum"
     )
-    kernels._COARSE_V0_CACHE.clear()
-    V0, logdet = kernels._coarse_v0(C, n, kernels.chow_lin_covariance)
-    assert V0.shape == (41, n_low, n_low)
-    assert len(kernels._COARSE_V0_CACHE) == 0
-    kernels._COARSE_V0_CACHE.clear()
+    return C @ x1, np.column_stack([x1, x2, np.ones(n)]), C
+
+
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_exact_fit_recovers_indicator(method):
+    """On an exact fit the profiled scale hits its 1e-300 floor.  beta and
+    the distribution step come from the unit-scale Sigma0, so y_hat is the
+    indicator itself, finite, and the standard errors are finite."""
+    for seed in range(40):
+        y, X, C = _exact_fit_case(seed)
+        y_hat, _result, info = kernels.solve_series(y, X, C, method)
+        assert np.all(np.isfinite(y_hat)), seed
+        np.testing.assert_allclose(y_hat, X[:, 0], rtol=1e-8, err_msg=f"seed {seed}")
+        assert np.all(np.isfinite(info["std_beta"])), seed
+
+
+def test_exact_fit_tpch_series():
+    """The series behind ``disagg_two_indicators``' null ``y``: monthly
+    shipped value (x1) and quantity (x2) of return flag 'A' in the seeded
+    TPC-H-shaped schema (seed 11), with the yearly sum of x1 as target.  The
+    dense-Sigma post-fit overflowed at sigma2 ~ 7e-301 and returned NaN."""
+    from tsdisagg_spark.disagg import disaggregate_full
+
+    m = pd.read_csv(
+        os.path.join(HERE, "data", "exact_fit_monthly.csv"),
+        parse_dates=["ts"], index_col="ts",
+    )
+    low = m["x1"].groupby(m.index.year).sum()
+    low.index = pd.to_datetime([f"{y}-01-01" for y in low.index])
+    arts = disaggregate_full(
+        low.to_frame("y"), m.assign(intercept=1.0), method="chow-lin",
+        agg_func="sum", verbose=False,
+    )
+    out = arts["output"]
+    assert np.all(np.isfinite(out.to_numpy()))
+    full = out.groupby(out.index.year).agg(["sum", "count"])
+    full = full[full["count"] == 12]
+    np.testing.assert_allclose(full["sum"], low.loc[low.index.year.isin(full.index)], rtol=1e-9)
+    assert np.all(np.isfinite(arts["report"].select_dtypes("number").to_numpy()))

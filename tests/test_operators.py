@@ -2562,35 +2562,6 @@ def test_sample_fraction_deterministic_and_nested(spark):
     assert s20c != s20a
 
 
-def test_monthly_timeline_matches_date_range(spark):
-    """monthly_timeline == pd.date_range for start and end stamps across
-    month steps, including the month-end snap."""
-    from tsdisagg_spark.spark import periods
-
-    pdf = pd.DataFrame(
-        {
-            "s": pd.to_datetime(["2020-01-01", "2021-11-01"]),
-            "e": pd.to_datetime(["2020-07-01", "2023-05-01"]),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    for step, stamp in [(1, "start"), (3, "start"), (1, "end"), (6, "end")]:
-        got = (
-            df.select(
-                periods.monthly_timeline(df, "s", "e", step, stamp).alias("t")
-            )
-            .toPandas()["t"]
-            .tolist()
-        )
-        for (s, e), arr in zip(pdf[["s", "e"]].itertuples(index=False), got):
-            want = pd.date_range(s, e, freq=f"{step}MS")
-            if stamp == "end":
-                want = want + pd.offsets.MonthEnd(0)
-            assert [d.isoformat() for d in arr] == [
-                d.date().isoformat() for d in want
-            ], (step, stamp, arr, list(want))
-
-
 def test_hll_sketches_merge_across_groups(spark):
     """Mergeable-sketch workflow for distinct counts at fleet scale:
     per-shard HLL sketches built independently, unioned, and estimated —

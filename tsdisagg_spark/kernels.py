@@ -1,9 +1,17 @@
-"""Dense per-series numerical kernels for temporal disaggregation.
+"""Per-series numerical kernels for temporal disaggregation.
 
-Pure NumPy/SciPy — importable and unit-testable without Spark.  On the
-cluster these run *inside* a grouped-map pandas UDF (one call per series), so
-every function here operates on a single series' small dense arrays
-(n = high-frequency length, typically 10^2-10^3).
+Pure NumPy — importable and unit-testable without Spark.  On the cluster
+these run *inside* a grouped-map pandas UDF (one call per series), so every
+function here operates on a single series' arrays (n = high-frequency
+length, typically 10^2-10^3).
+
+Paths (:func:`solve_series` dispatches): the Denton family solves with dense
+n x n matrices below ``BANDED_THRESHOLD`` points and a banded KKT above it;
+the Chow-Lin / Litterman fits use closed-form V0 = C Sigma0 C' stacks below
+it and the banded KKT above it — neither regression path forms an n x n
+covariance.  The dense covariance builders (:func:`chow_lin_covariance`,
+:func:`litterman_covariance`, :func:`gls_beta`, :func:`distribution_matrix`)
+remain as the reference forms, and for the reference's Nelder-Mead surface.
 
 The math reproduces the reference semantics (cites into
 ``/root/reference/tsdisagg/ts_disagg.py``) but the code is an independent
@@ -344,203 +352,250 @@ def _nelder_mead_minimize(
     return best_x, best_f, nit, nfev
 
 
-def _chow_lin_covariance_stack(grid: np.ndarray, n: int) -> np.ndarray:
-    """Unit-scale AR(1) covariances for every rho in ``grid`` at once:
-    one vectorized power over a (G, n, n) tensor instead of G toeplitz
-    builds (same values as :func:`chow_lin_covariance` with sigma2=1)."""
-    lags = np.abs(np.subtract.outer(np.arange(n), np.arange(n)))
-    g = np.asarray(grid, dtype=float)
-    # rho^|i-j| has only n distinct exponents: power-table then gather, so
-    # the tensor costs G*n pows + an indexed broadcast instead of G*n^2 pows
-    pow_table = g[:, None] ** np.arange(n)[None, :]          # (G, n)
-    scale = 1.0 / (1.0 - g**2)
-    return scale[:, None, None] * pow_table[:, lags]
+# ---------------------------------------------------------------------------
+# closed-form V0 = C Sigma0(rho) C' for a whole rho grid (no n x n matrix)
+#
+# Every period constraint the relational layer builds has contiguous,
+# non-overlapping row support [s_a, e_a] with weights w_a, so V0 follows
+# from per-row geometric sums instead of an n x n Sigma0 per rho:
+#
+#   * Chow-Lin, Sigma0 = rho^|i-j| / (1-rho^2):  for a < b
+#       V0[a,b] = A_a rho^(s_b - e_a) B_b / (1-rho^2),
+#       A_a = sum_r w_ar rho^(e_a - s_a - r),  B_b = sum_r w_br rho^r,
+#     and each diagonal entry is one m x m sum over its own row.
+#   * Litterman, Sigma0 = Delta^{-1} H^{-1} H^{-T} Delta^{-T} (H = I - rho L):
+#       V0 = M M',  M = (C Delta^{-1}) H^{-1}.
+#     C Delta^{-1} is a reverse cumsum of each row (its total weight W_a
+#     before s_a), and H^{-1} a discounted reverse cumsum, so before its
+#     row's block M[a, j] = W_a g(s_a - j) + rho^(s_a - j) M[a, s_a] with
+#     g(k) = sum_{i<k} rho^i: all terms positive, stable up to rho -> 1.
+#
+# The post-fit step needs only Sigma0 (C' z) for one vector, which both
+# families give through O(n) first-order recursions (_SIGMA_TIMES), and the
+# band precision (_apply_precision_band) for the standard errors.
+# ---------------------------------------------------------------------------
+
+def _v0_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(lo, hi, W)``: each constraint row's first and last column and its
+    weights, zero-padded to the longest row (``W[a, r] = C[a, lo_a + r]``).
+    ``ValueError`` unless rows are contiguous and do not overlap."""
+    lo, hi = _constraint_blocks(C)
+    if np.any(lo[1:] <= hi[:-1]):
+        raise ValueError("constraint rows overlap")
+    lens = hi - lo + 1
+    rows = np.repeat(np.arange(len(lo)), lens)
+    cols = _block_col_idx(lo, lens)
+    W = np.zeros((len(lo), int(lens.max())))
+    W[rows, cols - lo[rows]] = C[rows, cols]
+    return lo, hi, W
 
 
-# chow-lin's unit-scale covariance stack vectorizes over the rho grid (the
-# batched profile-likelihood scan dispatches on this attribute; litterman
-# falls back to a per-rho loop — its builder needs a linear solve each time)
-chow_lin_covariance.batched = _chow_lin_covariance_stack  # type: ignore[attr-defined]
+def _chow_lin_v0(rho: np.ndarray, blocks: tuple, n: int) -> np.ndarray:
+    """(G, n_low, n_low) Chow-Lin V0 stack (see the section comment)."""
+    lo, hi, W = blocks
+    n_low, m = W.shape
+    pw = rho[:, None] ** np.arange(n)[None, :]                  # (G, n)
+    r = np.arange(m)
+    to_last = np.maximum((hi - lo)[:, None] - r[None, :], 0)    # e_a - s_a - r
+    A = np.einsum("ar,gar->ga", W, pw[:, to_last])
+    B = np.einsum("ar,gr->ga", W, pw[:, :m])
+    gap = np.maximum(lo[None, :] - hi[:, None], 0)              # s_b - e_a
+    V = np.triu(A[:, :, None] * B[:, None, :] * pw[:, gap], 1)
+    V += V.transpose(0, 2, 1)
+    diag = np.arange(n_low)
+    lags = np.abs(r[:, None] - r[None, :])
+    V[:, diag, diag] = np.einsum("ar,grs,as->ga", W, pw[:, lags], W)
+    return V / (1.0 - rho**2)[:, None, None]
 
 
-def _litterman_V0_stack(grid: np.ndarray, n: int, C: np.ndarray) -> np.ndarray:
-    """C Sigma_L(rho) C' for every rho at once, without forming Sigma_L.
+def _litterman_v0(rho: np.ndarray, blocks: tuple, n: int) -> np.ndarray:
+    """(G, n_low, n_low) Litterman V0 stack = M M' (see the section
+    comment), from prefix sums instead of the (G, n_low, n) factor.
 
-    Sigma_L = (Delta' H'H Delta)^{-1} with H = I - rho L, and
-    H'H = I - rho (L + L') + rho^2 L'L, so the stacked Gram is the quadratic
-    pencil ``M0 - rho M1 + rho^2 M2`` built from three fixed matrices; the
-    grid of C Sigma C' then comes from ONE batched solve with n_low
-    right-hand sides — the scalar builder's per-rho full n x n inverse
-    (litterman_covariance) never happens on the grid path.
-    """
-    delta = difference_matrix(n, 1)
-    L = np.eye(n, k=-1)
-    M0 = delta.T @ delta
-    M1 = delta.T @ (L + L.T) @ delta
-    M2 = delta.T @ (L.T @ L) @ delta
-    g = np.asarray(grid, dtype=float)[:, None, None]
-    A = M0[None] - g * M1[None] + g**2 * M2[None]            # (G, n, n)
-    X = np.linalg.solve(A, np.broadcast_to(C.T, (len(grid), *C.T.shape)))
-    return np.matmul(C, X)                                    # (G, n_low, n_low)
+    Row a of M is zero after e_a, equals ``in_row`` on its block, and before
+    it is W_a g(k) + mu_a rho^k at k = s_a - j.  With g(k + q) = g(q) +
+    rho^q g(k), every entry M[b, j] with j <= e_a < s_b splits as
+    W_b g(kap) + rho^kap (W_b g(q) + mu_b rho^q), kap = s_b - e_a - 1 and
+    q = e_a + 1 - j, so V0[a, b] needs only three per-row sums over j <= e_a
+    (t1, t2, t3), and those follow from prefix sums of g, rho^k and their
+    products."""
+    lo, hi, W = blocks
+    n_low, m = W.shape
+    G = len(rho)
+    pw = rho[:, None] ** np.arange(n + 1)[None, :]              # rho^k, (G, n+1)
+    g = np.concatenate([np.zeros((G, 1)), np.cumsum(pw[:, :n], axis=1)], axis=1)
 
+    def prefix(terms: np.ndarray) -> np.ndarray:                # sum over k = 1..K
+        return np.concatenate([np.zeros((G, 1)), np.cumsum(terms[:, 1:], axis=1)], axis=1)
 
-litterman_covariance.batched_V0 = _litterman_V0_stack  # type: ignore[attr-defined]
-
-
-#: fixed coarse scan grid for the profile likelihood (fit_rho_sigma); being
-#: a module constant is what makes the V0 cache below valid — the cached
-#: values are keyed on (builder, n, C) with the grid implicit
-_COARSE_GRID = np.linspace(_RHO_LO, _RHO_HI, 41)
-_COARSE_GRID.setflags(write=False)
-
-#: coarse-pass V0 = C Sigma0(rho) C' stacks and their slogdets, keyed
-#: (builder name, n, C bytes).  At fleet width an applyInPandas worker
-#: solves hundreds of series that share the SAME period structure (same n,
-#: same constraint matrix) — only y/X differ — so the rho-independent
-#: coarse-scan algebra is identical across them and was measured at ~20%
-#: of per-series CPU (chow-lin; more for litterman, whose V0 stack needs a
-#: batched linear solve to even build).  Values are read-only; a bounded
-#: FIFO keeps the cache a few MB.
-_COARSE_V0_CACHE: dict = {}
-_COARSE_V0_CACHE_MAX = 64  # coarse + refinement-bracket entries
-
-
-def _coarse_v0(
-    C: np.ndarray,
-    n: int,
-    cov_builder: Callable[[float, float, int], np.ndarray],
-) -> tuple[np.ndarray, np.ndarray]:
-    """(V0 stack, logdet stack) for the fixed coarse grid, cached."""
-    # key on the builder OBJECT (kept alive by the cache entry), not its
-    # name: two distinct builders can share a __name__ (lambdas), and an
-    # id() can be reused after GC — either would silently cross-wire
-    # covariance families
-    key = (cov_builder, n, C.tobytes())
-    hit = _COARSE_V0_CACHE.get(key)
-    if hit is None:
-        V0 = _grid_v0(_COARSE_GRID, n, C, cov_builder)
-        _sign, logdet0 = np.linalg.slogdet(V0)
-        # don't let one long-series fleet pin hundreds of MB per worker:
-        # a (41, n_low, n_low) stack past a few MB (n_low ~ 180+) is cheap
-        # to rebuild relative to its own solve cost anyway
-        if V0.nbytes > (4 << 20):
-            return V0, logdet0
-        V0.setflags(write=False)
-        logdet0.setflags(write=False)
-        if len(_COARSE_V0_CACHE) >= _COARSE_V0_CACHE_MAX:
-            _COARSE_V0_CACHE.pop(next(iter(_COARSE_V0_CACHE)))
-        hit = _COARSE_V0_CACHE[key] = (V0, logdet0)
-    return hit
-
-
-def _bracket_v0(
-    C: np.ndarray,
-    n: int,
-    cov_builder: Callable[[float, float, int], np.ndarray],
-    best: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(fine grid, V0 stack, logdet stack) for the refinement bracket
-    around coarse point ``best`` — cached like :func:`_coarse_v0`.
-
-    The fine grid is fully determined by the coarse argmin index (one of
-    41 possible brackets), and a fleet of same-structure series lands on a
-    handful of brackets, so the refinement pass caches as well as the
-    coarse one.  Grid values are bit-identical to the uncached
-    ``np.linspace(lo, hi, 33)``."""
-    lo = _COARSE_GRID[max(best - 1, 0)]
-    hi = _COARSE_GRID[min(best + 1, len(_COARSE_GRID) - 1)]
-    key = (cov_builder, n, C.tobytes(), int(best))
-    hit = _COARSE_V0_CACHE.get(key)
-    if hit is None:
-        fine = np.linspace(lo, hi, 33)
-        V0 = _grid_v0(fine, n, C, cov_builder)
-        _sign, logdet0 = np.linalg.slogdet(V0)
-        if V0.nbytes > (4 << 20):
-            return fine, V0, logdet0
-        for arr in (fine, V0, logdet0):
-            arr.setflags(write=False)
-        if len(_COARSE_V0_CACHE) >= _COARSE_V0_CACHE_MAX:
-            _COARSE_V0_CACHE.pop(next(iter(_COARSE_V0_CACHE)))
-        hit = _COARSE_V0_CACHE[key] = (fine, V0, logdet0)
-    return hit
-
-
-def _grid_v0(
-    grid: np.ndarray,
-    n: int,
-    C: np.ndarray,
-    cov_builder: Callable[[float, float, int], np.ndarray],
-) -> np.ndarray:
-    """V0 = C Sigma0(rho) C' for every rho in ``grid`` — builder dispatch
-    shared by the cached coarse pass and the per-series fine pass."""
-    v0_fn = getattr(cov_builder, "batched_V0", None)
-    if v0_fn is not None:
-        return v0_fn(grid, n, C)
-    stack_fn = getattr(cov_builder, "batched", None)
-    if stack_fn is not None:
-        Sig = stack_fn(grid, n)
-    else:
-        Sig = np.empty((len(grid), n, n))
-        for i, r in enumerate(grid):
-            Sig[i] = cov_builder(r, 1.0, n)
-    return np.matmul(np.matmul(C, Sig), C.T)
-
-
-def _profile_grid_nll(
-    grid: np.ndarray,
-    y: np.ndarray,
-    X: np.ndarray,
-    C: np.ndarray,
-    cov_builder: Callable[[float, float, int], np.ndarray],
-) -> np.ndarray:
-    """Concentrated negative log-likelihood at every grid point via *stacked*
-    linalg: the per-point algebra of :func:`profile_negative_loglik` is
-    expressed over a (G, n, n) covariance tensor so the whole scan costs a
-    handful of batched LAPACK calls instead of G sequential ones.  At fleet
-    width (thousands of series inside ``applyInPandas`` groups) the grid scan
-    dominated the solve; batching removes the per-call numpy overhead and is
-    numerically the same computation.
-    """
-    n = X.shape[0]
-    # the scan only ever needs V0 = C Sigma C' — builders may supply it
-    # directly (litterman avoids G full inverses that way); the coarse
-    # fixed-grid pass reuses the rho-independent (V0, logdet) across every
-    # series with the same period structure
-    if grid is _COARSE_GRID:
-        V0, logdet0 = _coarse_v0(np.ascontiguousarray(C), n, cov_builder)
-    else:
-        V0 = _grid_v0(grid, n, C, cov_builder)
-        _sign, logdet0 = np.linalg.slogdet(V0)
-    return _nll_from_v0(V0, logdet0, len(grid), y, X, C)
-
-
-def _nll_from_v0(
-    V0: np.ndarray,
-    logdet0: np.ndarray,
-    G: int,
-    y: np.ndarray,
-    X: np.ndarray,
-    C: np.ndarray,
-) -> np.ndarray:
-    """The per-series half of the grid scan: everything downstream of the
-    (rho-independent, cacheable) V0 stack."""
-    n_low = y.shape[0]
-    CX = C @ X                                  # (n_low, k)
-    y2 = np.asarray(y, dtype=float).reshape(-1, 1)
-    rhs = np.hstack([CX, y2])                   # (n_low, k+1)
-    solved = np.linalg.solve(V0, np.broadcast_to(rhs, (G, *rhs.shape)))
-    Vinv_CX, Vinv_y = solved[:, :, : CX.shape[1]], solved[:, :, CX.shape[1] :]
-    A = np.matmul(CX.T, Vinv_CX)                # (G, k, k)
-    b = np.matmul(CX.T, Vinv_y)                 # (G, k, 1)
-    beta = np.linalg.solve(A, b)                # (G, k, 1)
-    resid = y2 - np.matmul(CX, beta)            # (G, n_low, 1)
-    # V0^{-1} resid reuses the factored RHS: V0^{-1}y - V0^{-1}CX @ beta
-    Vinv_resid = Vinv_y - np.matmul(Vinv_CX, beta)
-    q0 = np.einsum("gij,gij->g", resid, Vinv_resid)
-    s_star = np.maximum(q0 / n_low, 1e-300)
-    return 0.5 * (
-        n_low * np.log(2.0 * np.pi) + n_low * np.log(s_star) + logdet0 + n_low
+    sg, sp = prefix(g)[:, lo], prefix(pw)[:, lo]
+    sgg, sgp, spp = (prefix(t)[:, lo] for t in (g * g, g * pw, pw * pw))
+    K = np.cumsum(W[:, ::-1], axis=1)[:, ::-1]                  # C Delta^{-1} in-row
+    r = np.arange(m)
+    upper = np.triu(pw[:, np.abs(r[None, :] - r[:, None])])    # rho^(s-r), s >= r
+    in_row = np.einsum("grs,as->gar", upper, K)                 # (G, n_low, m)
+    tot, mu = K[:, 0], in_row[:, :, 0]
+    lens = hi - lo + 1
+    q = np.maximum(lens[:, None] - r[None, :], 0)               # e_a + 1 - j on the block
+    before1 = tot * sg + mu * sp
+    t1 = before1 + in_row.sum(axis=2)
+    t2 = (g[:, lens] * before1 + pw[:, lens] * (tot * sgg + mu * sgp)
+          + np.einsum("gar,gar->ga", in_row, g[:, q]))
+    t3 = pw[:, lens] * (tot * sgp + mu * spp) + np.einsum("gar,gar->ga", in_row, pw[:, q])
+    kap = np.maximum(lo[None, :] - hi[:, None] - 1, 0)          # s_b - e_a - 1
+    V = np.triu(
+        tot[None, None, :] * g[:, kap] * t1[:, :, None]
+        + pw[:, kap] * (tot[None, None, :] * t2[:, :, None] + mu[:, None, :] * t3[:, :, None]),
+        1,
     )
+    V += V.transpose(0, 2, 1)
+    diag = np.arange(n_low)
+    V[:, diag, diag] = (tot**2 * sgg + 2.0 * tot * mu * sgp + mu**2 * spp
+                        + np.einsum("gar,gar->ga", in_row, in_row))
+    return V
+
+
+def _ar_filter(v: np.ndarray, rho: float, reverse: bool = False) -> np.ndarray:
+    """H^{-1} v (``u_t = v_t + rho u_{t-1}``), or H^{-T} v when ``reverse``."""
+    vals = v[::-1] if reverse else v
+    out, acc = [], 0.0
+    for x in vals.tolist():
+        acc = x + rho * acc
+        out.append(acc)
+    out = np.array(out)
+    return out[::-1] if reverse else out
+
+
+def _chow_lin_sigma_times(rho: float, v: np.ndarray) -> np.ndarray:
+    """Sigma0 v for the unit AR(1) covariance: forward plus backward
+    discounted sums (the diagonal counted once)."""
+    return (_ar_filter(v, rho) + _ar_filter(v, rho, reverse=True) - v) / (1.0 - rho**2)
+
+
+def _litterman_sigma_times(rho: float, v: np.ndarray) -> np.ndarray:
+    """Sigma0 v = Delta^{-1} H^{-1} H^{-T} Delta^{-T} v."""
+    u = _ar_filter(np.cumsum(v[::-1])[::-1], rho, reverse=True)
+    return np.cumsum(_ar_filter(u, rho))
+
+
+_V0_FORMS = {"chow-lin": _chow_lin_v0, "litterman": _litterman_v0}
+_SIGMA_TIMES = {"chow-lin": _chow_lin_sigma_times, "litterman": _litterman_sigma_times}
+
+
+def _v0_grid_fn(
+    C: np.ndarray, cov_builder: Callable[[float, float, int], np.ndarray]
+) -> Callable[[np.ndarray], np.ndarray]:
+    """``grid -> V0 stack`` for ``cov_builder``: the closed form for the two
+    built-in families on block-structured C; otherwise C Sigma0 C' per rho
+    from the builder (custom builders, or hand-made constraint matrices)."""
+    n = C.shape[1]
+    method = next((m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder), None)
+    if method is not None:
+        try:
+            blocks = _v0_blocks(C)
+        except ValueError:
+            pass
+        else:
+            return lambda grid: _V0_FORMS[method](np.asarray(grid, dtype=float), blocks, n)
+    return lambda grid: np.stack([C @ cov_builder(r, 1.0, n) @ C.T for r in grid])
+
+
+def _concentrate(
+    y: np.ndarray,
+    CX: np.ndarray,
+    Vinv_CX: np.ndarray,
+    Vinv_y: np.ndarray,
+    logdet: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Concentrated GLS over a rho grid from V^{-1}[CX, y] (``(G, n_low,
+    k)`` and ``(G, n_low)``) and log det V of the unit-scale V = C Sigma0 C':
+    ``(nll, s_star, beta, z)`` per grid point, z = V^{-1}(y - CX beta).
+    sigma2 is a pure scale of Sigma, so the likelihood profiles it out at
+    s_star = resid' z / n_low; beta and z do not depend on it."""
+    n_low = y.shape[0]
+    A = np.einsum("ik,gil->gkl", CX, Vinv_CX)
+    b = np.einsum("ik,gi->gk", CX, Vinv_y)
+    beta = np.linalg.solve(A, b[..., None])[..., 0]
+    resid = y[None, :] - beta @ CX.T
+    z = Vinv_y - np.einsum("gik,gk->gi", Vinv_CX, beta)
+    s_star = np.maximum(np.einsum("gi,gi->g", resid, z) / n_low, 1e-300)
+    nll = 0.5 * (n_low * np.log(2.0 * np.pi) + n_low * np.log(s_star) + logdet + n_low)
+    return nll, s_star, beta, z
+
+
+def _gls_terms(y: np.ndarray, CX: np.ndarray, V0: np.ndarray) -> tuple:
+    """:func:`_concentrate` for a dense V0 stack."""
+    k = CX.shape[1]
+    rhs = np.column_stack([CX, y])
+    solved = np.linalg.solve(V0, np.broadcast_to(rhs, (len(V0), *rhs.shape)))
+    _sign, logdet = np.linalg.slogdet(V0)
+    return _concentrate(y, CX, solved[..., :k], solved[..., k], logdet)
+
+
+def _scan(fn: Callable[[np.ndarray], np.ndarray], grid: np.ndarray, member_bytes: int,
+          budget: int) -> np.ndarray:
+    """``fn`` over ``grid`` in chunks whose working set fits ``budget``."""
+    chunk = max(1, budget // max(member_bytes, 1))
+    return np.concatenate([fn(grid[s : s + chunk]) for s in range(0, len(grid), chunk)])
+
+
+#: working-set budget of one chunk of the closed-form profile scan
+_V0_SCAN_BYTES = 256 << 20
+
+
+def _profile_fit(
+    nll_grid: Callable[[np.ndarray], np.ndarray],
+    evaluate: Callable[[float], tuple],
+) -> tuple[float, tuple, int]:
+    """The two-level profile-likelihood search both fit paths share.
+
+    A coarse 41-point scan over (_RHO_LO, _RHO_HI) guards against
+    non-convex profiles; a 33-point scan inside the winning bracket plus one
+    parabolic step refines it (y_hat is stationary in rho at the optimum, so
+    the ~1e-6 rho accuracy is far below what the distribution step can
+    observe).  ``evaluate(rho)`` returns a tuple whose first item is the
+    NLL; if the parabola overshoots a non-quadratic kink the best fine point
+    is used instead.  Returns ``(rho_star, evaluate(rho_star), nfev)``."""
+    grid = np.linspace(_RHO_LO, _RHO_HI, 41)
+    best = int(np.argmin(nll_grid(grid)))
+    fine = np.linspace(grid[max(best - 1, 0)], grid[min(best + 1, len(grid) - 1)], 33)
+    fvals = nll_grid(fine)
+    j = int(np.argmin(fvals))
+    rho_star = float(fine[j])
+    nfev = len(grid) + len(fine) + 1
+    if 0 < j < len(fine) - 1:
+        f0, f1, f2 = fvals[j - 1], fvals[j], fvals[j + 1]
+        denom = f0 - 2.0 * f1 + f2
+        if denom > 0:  # proper local parabola: vertex for equispaced points
+            step = 0.5 * (fine[1] - fine[0]) * (f0 - f2) / denom
+            rho_star = float(np.clip(fine[j] + step, fine[j - 1], fine[j + 1]))
+    out = evaluate(rho_star)
+    if out[0] > fvals[j]:
+        rho_star = float(fine[j])
+        out = evaluate(rho_star)
+        nfev += 1
+    return rho_star, out, nfev
+
+
+def _gls_at(
+    rho: float, y: np.ndarray, CX: np.ndarray, v0: Callable[[np.ndarray], np.ndarray]
+) -> tuple[float, float, np.ndarray, np.ndarray]:
+    """``(nll, s_star, beta, z)`` at one rho."""
+    return tuple(a[0] for a in _gls_terms(y, CX, v0(np.array([rho]))))
+
+
+def _gls_solve_fixed(
+    y: np.ndarray, X: np.ndarray, C: np.ndarray, rho: float, reg_method: str
+) -> tuple[np.ndarray, np.ndarray, float, float]:
+    """Fixed-rho GLS and distribution step ``(y_hat, beta, s_star, nll)``
+    from V0(rho) and Sigma0 C' z, with no n x n matrix.  beta and y_hat
+    come from the unit-scale Sigma0, so they do not depend on sigma2 (an
+    exact fit pins it at the 1e-300 floor)."""
+    y = np.asarray(y, dtype=float)
+    v0 = _v0_grid_fn(C, COVARIANCE_BUILDERS[reg_method])
+    nll, s_star, beta, z = _gls_at(rho, y, C @ X, v0)
+    y_hat = X @ beta + _SIGMA_TIMES[reg_method](rho, C.T @ z)
+    return y_hat, beta, s_star, nll
 
 
 def profile_negative_loglik(
@@ -550,9 +605,11 @@ def profile_negative_loglik(
     C: np.ndarray,
     cov_builder: Callable[[float, float, int], np.ndarray],
 ) -> tuple[float, float]:
-    """Concentrated ML objective: sigma2 enters the covariance as a pure scale
-    (Sigma = s * Sigma0(rho) for both Chow-Lin and Litterman), so the Gaussian
-    likelihood profiles it out exactly at s* = resid' V0^{-1} resid / n_low.
+    """Concentrated ML objective at one rho, from a dense Sigma0 (the
+    reference form of what :func:`fit_rho_sigma` scans in closed form):
+    sigma2 enters the covariance as a pure scale (Sigma = s * Sigma0(rho)
+    for both Chow-Lin and Litterman), so the Gaussian likelihood profiles it
+    out exactly at s* = resid' V0^{-1} resid / n_low.
 
     Returns ``(nll_at_optimal_scale, s_star)`` where ``s_star`` is the scale
     *after* the reference's (1+rho) rescale (see :func:`negative_loglik`);
@@ -583,9 +640,8 @@ def fit_rho_sigma(
 
     Default strategy differs from the reference (which runs a 2-D scipy
     solver from (0.8, 0.8)): sigma2 is concentrated out analytically, leaving
-    a 1-D profile likelihood in rho that a coarse grid scan + Brent refinement
-    solves to ~1e-10 — tighter than any of the reference's optimizer
-    configurations.
+    a 1-D profile likelihood in rho that :func:`_profile_fit` searches with
+    batched closed-form V0 stacks (no n x n covariance is formed).
 
     ``optimizer_kwargs['method']`` is honored, not ignored: ``'nelder-mead'``
     runs a real bounded 2-D Nelder-Mead on the reference's objective from the
@@ -627,43 +683,22 @@ def fit_rho_sigma(
             "Brent-profile default."
         )
 
-    # Coarse global scan guards against non-convex profiles, then a second
-    # stacked scan inside the winning bracket plus one parabolic step.  Both
-    # levels run as single batched-LAPACK passes (_profile_grid_nll); the
-    # earlier Brent refinement converged to ~1e-10 but paid ~40 sequential
-    # dense solves per fit — at fleet width that was ~40% of kernel CPU for
-    # precision far below what the distribution step can observe (y_hat is
-    # stationary in rho at the optimum; goldens pass at rtol 1e-3 with the
-    # two-level grid's ~1e-6 rho accuracy).
-    grid = _COARSE_GRID
-    values = _profile_grid_nll(grid, y, X, C, cov_builder)
-    best = int(np.argmin(values))
-    fine, fine_V0, fine_logdet = _bracket_v0(
-        np.ascontiguousarray(C), X.shape[0], cov_builder, best
+    y = np.asarray(y, dtype=float)
+    v0 = _v0_grid_fn(C, cov_builder)
+    CX = C @ X
+    n_low, n = C.shape
+    member_bytes = 64 * (n_low * n_low + n)  # a few (n_low, n_low) and (n,) temporaries
+    rho_star, (nll_star, s_star, _beta, _z), nfev = _profile_fit(
+        lambda grid: _scan(
+            lambda g: _gls_terms(y, CX, v0(g))[0], grid, member_bytes, _V0_SCAN_BYTES
+        ),
+        lambda rho: _gls_at(rho, y, CX, v0),
     )
-    fvals = _nll_from_v0(fine_V0, fine_logdet, len(fine), y, X, C)
-    j = int(np.argmin(fvals))
-    rho_star = float(fine[j])
-    nfev = len(grid) + len(fine)
-    if 0 < j < len(fine) - 1:
-        f0, f1, f2 = fvals[j - 1], fvals[j], fvals[j + 1]
-        denom = f0 - 2.0 * f1 + f2
-        if denom > 0:  # proper local parabola: vertex for equispaced points
-            h = fine[1] - fine[0]
-            step = 0.5 * h * (f0 - f2) / denom
-            rho_star = float(np.clip(fine[j] + step, fine[j - 1], fine[j + 1]))
-    nll_star, s_star = profile_negative_loglik(rho_star, y, X, C, cov_builder)
-    nfev += 1
-    if nll_star > fvals[j]:  # parabola overshot a non-quadratic kink
-        rho_star = float(fine[j])
-        nll_star, s_star = profile_negative_loglik(rho_star, y, X, C, cov_builder)
-        nfev += 1
-    sigma2 = s_star / (1.0 + rho_star)
     return FitResult(
-        x=np.array([rho_star, sigma2]),
-        fun=nll_star,
+        x=np.array([rho_star, s_star / (1.0 + rho_star)]),
+        fun=float(nll_star),
         nfev=nfev,
-        extras={"scaled_sigma2": s_star},
+        extras={"scaled_sigma2": float(s_star)},
     )
 
 
@@ -885,12 +920,12 @@ def denton_banded(
     return p + sol[pos]
 
 
-#: above this high-frequency length the Denton family dispatches to the
 # ---------------------------------------------------------------------------
-# banded Chow-Lin (SURVEY.md §4 scale path: the AR(1) covariance has a
-# closed-form TRIDIAGONAL inverse, so the whole GLS fit — profile likelihood
-# included — runs through the same interleaved banded KKT as the Denton
-# family, O(n b^2) per rho instead of O(n^3), never materializing Sigma)
+# banded Chow-Lin / Litterman (SURVEY.md §4 scale path: the AR(1) covariance
+# has a closed-form TRIDIAGONAL inverse, Litterman's a pentadiagonal one, so
+# the whole GLS fit — profile likelihood included — runs through the same
+# interleaved banded KKT as the Denton family, O(n b^2) per rho, never
+# materializing Sigma)
 #
 # Identities used (M = unit-sigma2 AR(1) covariance, rho^|i-j| / (1-rho^2)):
 #   * M^{-1} = tridiag(diag=[1, 1+rho^2, ..., 1+rho^2, 1], off=-rho)
@@ -901,28 +936,16 @@ def denton_banded(
 #     log det M^{-1} = log(1 - rho^2)  (det of the AR(1) precision).
 # ---------------------------------------------------------------------------
 
-def banded_lu_solve_grid(
-    ab: np.ndarray, kl: int, ku: int, b: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized multi-RHS :func:`banded_lu_solve` over a leading stack
-    axis: ``ab`` is ``(G, 2*kl + ku + 1, n)`` in LAPACK band layout,
-    ``b`` is ``(G, n, m)``; the same elimination runs data-parallel across
-    all ``G`` systems (the rho grid of a profile-likelihood scan),
-    amortizing the per-column Python overhead that would otherwise dominate
-    G sequential factorizations.
-
-    Returns ``(x, logabsdet)`` with ``x`` of shape ``(G, n, m)`` and
-    ``logabsdet`` the log|det| of each system (sum of log|pivot|).  ``b``
-    is modified in place.
-    """
-    abt = np.ascontiguousarray(ab.transpose(0, 2, 1))
-    return _banded_lu_solve_grid_t(abt, kl, ku, b)
-
-
 def _banded_lu_solve_grid_t(
     abt: np.ndarray, kl: int, ku: int, b: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Grid banded LU on TRANSPOSED band storage ``abt`` (G, n, W) with
+    """:func:`banded_lu_solve` run data-parallel over a stack of ``G``
+    systems (the rho grid of a profile-likelihood scan), amortizing the
+    per-column Python overhead, with multi-RHS ``b`` of shape (G, n, m).
+    Returns ``(x, logabsdet)``: the (G, n, m) solutions and each system's
+    log|det| (sum of log|pivot|).
+
+    Band storage is TRANSPOSED, ``abt`` (G, n, W) with
     ``abt[g, c, kl + ku + i - c] = A[i, c]`` (one system-column per
     C-contiguous row).  In this layout the elimination's parallelogram
     update, multiplier row, and back-substitution row are all REGULAR
@@ -1160,32 +1183,18 @@ def _gls_profile_grid_banded(
     skel: dict,
     reg_method: str = "chow-lin",
 ) -> np.ndarray:
-    """Banded twin of ``_profile_grid_nll``: the same concentrated
-    objective values, computed through the KKT identities instead of dense
-    Sigma stacks."""
-    n_low, k = CX.shape
+    """Banded twin of the closed-form scan in :func:`fit_rho_sigma`: the
+    same concentrated objective values, computed through the KKT identities
+    instead of V0 stacks."""
+    k = CX.shape[1]
     B_low = np.hstack([CX, y.reshape(-1, 1)])
-    out = np.empty(len(grid))
-    member_bytes = (3 * skel["bw"] + 1) * skel["N"] * 8
-    chunk = max(1, min(len(grid), _BANDED_SCAN_BYTES // max(member_bytes, 1)))
-    for s in range(0, len(grid), chunk):
-        sub = np.asarray(grid[s : s + chunk], dtype=float)
+
+    def nll(sub: np.ndarray) -> np.ndarray:
         Ainv_B, _W, logdetA = _gls_kkt_solve(sub, skel, B_low, reg_method)
-        Ainv_CX, Ainv_y = Ainv_B[:, :, :k], Ainv_B[:, :, k]
-        M1 = np.einsum("ij,gil->gjl", CX, Ainv_CX)
-        r1 = np.einsum("ij,gi->gj", CX, Ainv_y)
-        beta = np.linalg.solve(M1, r1[..., None])[..., 0]
-        resid = y[None, :] - beta @ CX.T
-        Ainv_resid = Ainv_y - np.einsum("gik,gk->gi", Ainv_CX, beta)
-        q0 = np.einsum("gi,gi->g", resid, Ainv_resid)
-        s_star = np.maximum(q0 / n_low, 1e-300)
-        out[s : s + len(sub)] = 0.5 * (
-            n_low * np.log(2.0 * np.pi)
-            + n_low * np.log(s_star)
-            + logdetA
-            + n_low
-        )
-    return out
+        return _concentrate(y, CX, Ainv_B[:, :, :k], Ainv_B[:, :, k], logdetA)[0]
+
+    member_bytes = (3 * skel["bw"] + 1) * skel["N"] * 8
+    return _scan(nll, np.asarray(grid, dtype=float), member_bytes, _BANDED_SCAN_BYTES)
 
 
 def _gls_banded_eval(
@@ -1197,28 +1206,20 @@ def _gls_banded_eval(
     reg_method: str = "chow-lin",
 ) -> tuple[float, float, np.ndarray, np.ndarray]:
     """One full GLS evaluation at fixed rho through the banded KKT:
-    concentrated NLL, profiled scale, GLS beta, and distributed series —
-    the banded mirror of (profile_negative_loglik, gls_beta,
-    distribution_matrix) combined, from ONE factorization."""
-    n_low, k = CX.shape
+    concentrated NLL, profiled scale, GLS beta, and distributed series,
+    from ONE factorization."""
+    k = CX.shape[1]
     B_low = np.hstack([CX, y.reshape(-1, 1)])
     Ainv_B, W_B, logdetA = _gls_kkt_solve(
         np.array([rho_val]), skel, B_low, reg_method
     )
-    Ainv_CX, Ainv_y = Ainv_B[0, :, :k], Ainv_B[0, :, k]
-    beta = np.linalg.solve(CX.T @ Ainv_CX, CX.T @ Ainv_y)
-    resid = y - CX @ beta
-    q0 = float(resid @ (Ainv_y - Ainv_CX @ beta))
-    s_star = max(q0 / n_low, 1e-300)
-    nll = 0.5 * (
-        n_low * np.log(2.0 * np.pi)
-        + n_low * np.log(s_star)
-        + float(logdetA[0])
-        + n_low
+    nll, s_star, beta, _z = _concentrate(
+        y, CX, Ainv_B[:, :, :k], Ainv_B[:, :, k], logdetA
     )
+    beta = beta[0]
     # distribution by linearity: w(resid) = w(y) - w(CX) @ beta
     y_hat = X @ beta + (W_B[0, :, k] - W_B[0, :, :k] @ beta)
-    return nll, s_star, beta, y_hat
+    return float(nll[0]), float(s_star[0]), beta, y_hat
 
 
 def _banded_CX(X: np.ndarray, C, skel: dict) -> np.ndarray:
@@ -1248,6 +1249,15 @@ def _apply_precision_band(rho: float, X: np.ndarray, reg_method: str) -> np.ndar
     return out
 
 
+def _std_errors(rho: float, sigma2: float, X: np.ndarray, reg_method: str) -> np.ndarray:
+    """sqrt(diag((X' Sigma^{-1} X)^{-1})) with Sigma = sigma2 * Sigma0(rho),
+    through the band precision (ts_disagg.py:452-455).  sigma2 is applied
+    last, so an exact fit (sigma2 at the profile's 1e-300 floor) gives tiny
+    standard errors instead of overflowing."""
+    xtsx0 = X.T @ _apply_precision_band(rho, X, reg_method)
+    return np.sqrt(np.diagonal(np.linalg.inv(xtsx0)) * sigma2)
+
+
 def _gls_banded_solve_fixed(
     y: np.ndarray, X: np.ndarray, C, rho: float, reg_method: str
 ) -> tuple[np.ndarray, np.ndarray, float, float]:
@@ -1270,17 +1280,6 @@ def chow_lin_banded_solve(
     return _gls_banded_solve_fixed(y, X, C, rho, "chow-lin")
 
 
-def litterman_banded_solve(
-    y: np.ndarray, X: np.ndarray, C, rho: float
-) -> tuple[np.ndarray, np.ndarray, float, float]:
-    """Fixed-rho banded Litterman — same contract as
-    :func:`chow_lin_banded_solve` with the pentadiagonal random-walk
-    precision.  The dense path additionally pays an O(n^3) INVERSE just to
-    build Sigma (litterman_covariance); here the precision goes straight
-    into the KKT band."""
-    return _gls_banded_solve_fixed(y, X, C, rho, "litterman")
-
-
 def _gls_banded_fit(
     y: np.ndarray,
     X: np.ndarray,
@@ -1288,6 +1287,9 @@ def _gls_banded_fit(
     reg_method: str,
     optimizer_kwargs: dict | None = None,
 ) -> tuple[np.ndarray, "FitResult", dict]:
+    """Full banded fit of ``reg_method`` ('chow-lin' or 'litterman'): the
+    same :func:`_profile_fit` search as :func:`fit_rho_sigma`, with every
+    evaluation a banded KKT solve."""
     kwargs = dict(optimizer_kwargs or {})
     method = str(kwargs.get("method", "brent-profile")).lower()
     if method not in ("brent-profile", "profile"):
@@ -1301,43 +1303,11 @@ def _gls_banded_fit(
     skel = _gls_kkt_indices(C, n=n, n_diags=n_diags)
     CX = _banded_CX(X, C, skel)
 
-    # identical two-level scan to fit_rho_sigma's default path
-    grid = np.linspace(_RHO_LO, _RHO_HI, 41)
-    values = _gls_profile_grid_banded(grid, y, CX, skel, reg_method)
-    best = int(np.argmin(values))
-    lo_g = grid[max(best - 1, 0)]
-    hi_g = grid[min(best + 1, len(grid) - 1)]
-    fine = np.linspace(lo_g, hi_g, 33)
-    fvals = _gls_profile_grid_banded(fine, y, CX, skel, reg_method)
-    j = int(np.argmin(fvals))
-    rho_star = float(fine[j])
-    nfev = len(grid) + len(fine)
-    if 0 < j < len(fine) - 1:
-        f0, f1, f2 = fvals[j - 1], fvals[j], fvals[j + 1]
-        denom = f0 - 2.0 * f1 + f2
-        if denom > 0:
-            h = fine[1] - fine[0]
-            step = 0.5 * h * (f0 - f2) / denom
-            rho_star = float(np.clip(fine[j] + step, fine[j - 1], fine[j + 1]))
-
-    nll_star, s_star, beta, y_hat = _gls_banded_eval(
-        rho_star, y, X, CX, skel, reg_method
+    rho_star, (nll_star, s_star, beta, y_hat), nfev = _profile_fit(
+        lambda grid: _gls_profile_grid_banded(grid, y, CX, skel, reg_method),
+        lambda rho: _gls_banded_eval(rho, y, X, CX, skel, reg_method),
     )
-    nfev += 1
-    if nll_star > fvals[j]:  # parabola overshot a non-quadratic kink
-        rho_star = float(fine[j])
-        nll_star, s_star, beta, y_hat = _gls_banded_eval(
-            rho_star, y, X, CX, skel, reg_method
-        )
-        nfev += 1
     sigma2 = s_star / (1.0 + rho_star)
-
-    # std errors through the banded precision: X' Sigma^{-1} X with
-    # Sigma = sigma2 * M (the dense solve_series builds Sigma from the
-    # UN-rescaled sigma2 — mirror that, not the (1+rho) ML-internal scale)
-    xtsx = (X.T @ _apply_precision_band(rho_star, X, reg_method)) / sigma2
-    std_beta = np.sqrt(np.diagonal(np.linalg.inv(xtsx)))
-
     result = FitResult(
         x=np.array([rho_star, sigma2]),
         fun=nll_star,
@@ -1348,7 +1318,7 @@ def _gls_banded_fit(
         "beta": beta,
         "rho": rho_star,
         "sigma2": sigma2,
-        "std_beta": std_beta,
+        "std_beta": _std_errors(rho_star, sigma2, X, reg_method),
     }
     return y_hat, result, info
 
@@ -1359,11 +1329,11 @@ def chow_lin_banded_fit(
     C,
     optimizer_kwargs: dict | None = None,
 ) -> tuple[np.ndarray, "FitResult", dict]:
-    """Full banded Chow-Lin solve — the very-long-series twin of the dense
-    ``fit_rho_sigma`` + ``gls_beta`` + ``distribution_matrix`` pipeline,
-    with the SAME two-level profile-likelihood grid (identical rho
-    semantics) but O(n b^2) per evaluation and O(n b) memory.  A 96k-point
-    series fits in seconds where dense Sigma alone would need 74 GB.
+    """Full banded Chow-Lin solve — the very-long-series twin of
+    :func:`solve_series`' regression path, with the SAME two-level
+    profile-likelihood grid (identical rho semantics) but O(n b^2) per
+    evaluation and O(n b) memory, and no dense constraint matrix needed.
+    A 96k-point series fits in seconds.
 
     Only the default (profile) optimizer is supported; callers wanting the
     reference's 2-D Nelder-Mead surface fall back to the dense path.
@@ -1373,21 +1343,10 @@ def chow_lin_banded_fit(
     return _gls_banded_fit(y, X, C, "chow-lin", optimizer_kwargs)
 
 
-def litterman_banded_fit(
-    y: np.ndarray,
-    X: np.ndarray,
-    C,
-    optimizer_kwargs: dict | None = None,
-) -> tuple[np.ndarray, "FitResult", dict]:
-    """Full banded Litterman solve — same contract and grid semantics as
-    :func:`chow_lin_banded_fit`, using the pentadiagonal random-walk
-    precision (whose unit-triangular factors make the KKT log-det
-    correction zero)."""
-    return _gls_banded_fit(y, X, C, "litterman", optimizer_kwargs)
-
-
-#: banded KKT path (dense is O(n^3): ~10 s and ~200 MB at 3000, hopeless at
-#: 10^5; the banded path is linear in n)
+#: from this high-frequency length on, solve_series takes the banded KKT
+#: paths (the Denton family's dense path is O(n^3); the regression fits'
+#: banded scan costs a per-column Python loop, the closed form O(n_low^3)
+#: per rho)
 BANDED_THRESHOLD = 2000
 
 
@@ -1425,48 +1384,38 @@ def solve_series(
 
     n, k = X.shape
     n_low = y.shape[0]
-    result: FitResult | None = None
-    info: dict = {}
 
-    if method in ("denton", "denton-cholette"):
-        if k != 1:
-            raise ValueError(f"{method} supports exactly one indicator column")
+    if method in REGRESSION_METHODS:
         if n >= BANDED_THRESHOLD:
-            try:
-                y_hat = denton_banded(y, X, C, method, order, criterion)
-                return y_hat, None, {}
-            except ValueError:
-                pass  # non-contiguous constraints: fall through to dense
-        if method == "denton":
-            Sigma = denton_covariance(n, X, order, criterion)
-            D = distribution_matrix(Sigma, C)
-        else:
-            D = denton_cholette_distribution(n, n_low, C, X, order, criterion)
-        p = X.ravel()
-    else:
-        if n >= BANDED_THRESHOLD:
-            # dense Sigma is O(n^2) memory / O(n^3) flops (litterman even
-            # pays an O(n^3) inverse just to BUILD it); the banded AR
-            # precisions make the whole fit O(n b^2).  Falls through to
-            # dense for non-contiguous constraints or a non-profile
-            # optimizer request (both only realistic at small n).
+            # the closed-form V0 stacks cost O(n_low^3) per rho; the banded
+            # AR precisions make the whole fit O(n b^2).  Falls through for
+            # non-contiguous constraints or a non-profile optimizer request
+            # (both only realistic at small n).
             try:
                 return _gls_banded_fit(y, X, C, method, optimizer_kwargs)
             except ValueError:
                 pass
-        cov_builder = COVARIANCE_BUILDERS[method]
-        result = fit_rho_sigma(y, X, C, cov_builder, optimizer_kwargs)
+        result = fit_rho_sigma(y, X, C, COVARIANCE_BUILDERS[method], optimizer_kwargs)
         rho, sigma2 = result.x
-        Sigma = cov_builder(rho, sigma2, n)
-        beta = gls_beta(Sigma, y, X, C)
+        y_hat, beta, _s, _nll = _gls_solve_fixed(y, X, C, rho, method)
         info = {
             "beta": beta,
             "rho": rho,
             "sigma2": sigma2,
-            "std_beta": beta_std_errors(Sigma, X),
+            "std_beta": _std_errors(rho, sigma2, X, method),
         }
-        p = X @ beta
-        D = distribution_matrix(Sigma, C)
+        return y_hat, result, info
 
-    y_hat = p + D @ (y - C @ p)
-    return y_hat, result, info
+    if k != 1:
+        raise ValueError(f"{method} supports exactly one indicator column")
+    if n >= BANDED_THRESHOLD:
+        try:
+            return denton_banded(y, X, C, method, order, criterion), None, {}
+        except ValueError:
+            pass  # non-contiguous constraints: fall through to dense
+    if method == "denton":
+        D = distribution_matrix(denton_covariance(n, X, order, criterion), C)
+    else:
+        D = denton_cholette_distribution(n, n_low, C, X, order, criterion)
+    p = X.ravel()
+    return p + D @ (y - C @ p), None, {}

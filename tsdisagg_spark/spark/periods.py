@@ -79,34 +79,6 @@ def tumbling_period(ts: Column, family: str) -> Column:
     )
 
 
-def monthly_timeline(
-    df: DataFrame,
-    start_col: str,
-    end_col: str,
-    step_months: int = 1,
-    stamp: str = "start",
-) -> Column:
-    """Array of period stamps from ``start_col`` to ``end_col`` inclusive,
-    stepping ``step_months`` — the distributed analogue of ``pd.date_range``
-    built with ``sequence`` so generation happens on executors, not the
-    driver (one array per row; explode to rows).
-
-    ``stamp='start'`` yields period-start dates, ``'end'`` yields the last
-    day of the stamp month (for ``ME``/``QE``/``YE``-style calendars).
-    """
-    months = F.sequence(
-        F.lit(0),
-        F.floor(
-            F.months_between(F.col(end_col), F.col(start_col))
-        ).cast("int"),
-        F.lit(step_months),
-    )
-    stamps = F.transform(months, lambda m: F.add_months(F.col(start_col), m))
-    if stamp == "end":
-        stamps = F.transform(stamps, F.last_day)
-    return stamps
-
-
 def coverage(
     high: DataFrame,
     ts_col: str,

@@ -42,6 +42,20 @@ ENGINE_DEFAULTS: dict[str, str] = {
 }
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode driver heap sized to this machine: half of ``MemTotal``
+    (the other half is left to the Python workers and the OS), between 1g
+    and 16g.  ``4g`` when ``meminfo`` is unreadable (no procfs)."""
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{min(max(total_kb // 2048, 1024), 16384)}m"
+
+
 def get_spark(
     app_name: str = "tsdisagg-spark",
     master: str | None = None,
@@ -91,11 +105,12 @@ def get_spark(
         # memory. That starves window sorts into spills and fails
         # broadcast builds on data that is nowhere near big (a 10x
         # scale-stress run died broadcasting a dimension-sized frame).
-        # Size the single JVM for the machine; on a real cluster this
-        # branch never fires and executor sizing is the deployment's job.
+        # Size the single JVM for the machine (SPARK_GRAFT_DRIVER_MEM
+        # overrides); on a real cluster this branch never fires and
+        # executor sizing is the deployment's job.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     builder = builder.config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     for key, value in ENGINE_DEFAULTS.items():
