@@ -14,17 +14,39 @@ from tsdisagg_spark.spark.disagg import disaggregate, fit_reports
 DATA = "/root/reference/tests/data"
 
 
-@pytest.fixture(scope="module")
-def multi_series(spark):
-    """Five synthetic series derived from the sales/exports fixtures by
-    deterministic scaling, in long format."""
+def _reference_sources():
+    """The reference's sales/exports fixtures: 36 yearly targets from 1975
+    and a quarterly indicator from 1972."""
     sales = pd.read_csv(f"{DATA}/sales_a.csv", index_col=0)
     sales.index = pd.date_range("1975-01-01", freq="YS", periods=len(sales))
     sales.columns = ["y"]
     exports = pd.read_csv(f"{DATA}/exports_q.csv", index_col=0)
     exports.index = pd.date_range("1972-01-01", freq="QS-OCT", periods=len(exports))
     exports.columns = ["x1"]
+    return sales, exports
 
+
+def _synthetic_sources(seed=7):
+    """Seeded stand-in of the reference's shape: 36 ``YS`` targets from 1975
+    and a ``QS-OCT`` indicator from 1972 covering them.  The target is twice
+    the indicator's yearly sum plus a random-walk disturbance, so the
+    Chow-Lin fit finds a positive autocorrelation."""
+    rng = np.random.default_rng(seed)
+    quarters = pd.date_range("1972-01-01", "2010-10-01", freq="QS-OCT")
+    trend = 100.0 + 1.5 * np.arange(len(quarters))
+    x1 = trend + rng.normal(0.0, 4.0, len(quarters))
+    exports = pd.DataFrame({"x1": x1}, index=quarters)
+    years = pd.date_range("1975-01-01", freq="YS", periods=36)
+    in_years = exports.loc["1975":"2010", "x1"]
+    yearly = in_years.groupby(in_years.index.year).sum().to_numpy()
+    drift = np.cumsum(rng.normal(0.0, 25.0, len(years)))
+    sales = pd.DataFrame({"y": 2.0 * yearly + drift}, index=years)
+    return sales, exports
+
+
+def _long_frames(spark, sales, exports):
+    """Five series derived from one target/indicator pair by deterministic
+    scaling, in long format, with their pandas twins."""
     low_rows, ind_rows, locals_ = [], [], {}
     for i in range(5):
         scale = 1.0 + 0.25 * i
@@ -49,6 +71,21 @@ def multi_series(spark):
     low_sdf = spark.createDataFrame(pd.concat(low_rows, ignore_index=True))
     ind_sdf = spark.createDataFrame(pd.concat(ind_rows, ignore_index=True))
     return low_sdf, ind_sdf, locals_
+
+
+@pytest.fixture(scope="module", params=["reference", "synthetic"])
+def multi_series(spark, request):
+    """Five series scaled from the reference fixtures or from their seeded
+    synthetic twin, in long format."""
+    sources = _reference_sources if request.param == "reference" else _synthetic_sources
+    return _long_frames(spark, *sources())
+
+
+@pytest.fixture(scope="module")
+def synthetic_series(spark):
+    """The synthetic member of :func:`multi_series`, for tests that need no
+    reference twin."""
+    return _long_frames(spark, *_synthetic_sources())
 
 
 def _collect_by_series(sdf):
@@ -112,6 +149,21 @@ def test_spark_errors_skip(multi_series, spark):
         disaggregate(poisoned, ind_sdf, method="chow-lin", errors="raise").count()
 
 
+def test_spark_errors_skip_all_series_fail(synthetic_series):
+    """When every series fails under errors='skip' the result is an empty
+    frame of the declared schema, not an error."""
+    low_sdf, ind_sdf, _ = synthetic_series
+    poisoned = low_sdf.filter(F.year("ts") % 2 == 1)
+    out = disaggregate(poisoned, ind_sdf, method="chow-lin", agg_func="sum",
+                       errors="skip")
+    assert out.schema.simpleString() == (
+        "struct<series_id:string,ts:timestamp,y_hat:double>"
+    )
+    got = out.toPandas()
+    assert got.empty
+    assert list(got.columns) == ["series_id", "ts", "y_hat"]
+
+
 def test_fit_reports(multi_series):
     low_sdf, ind_sdf, _ = multi_series
     rep = fit_reports(low_sdf, ind_sdf, method="chow-lin", agg_func="sum").toPandas()
@@ -122,22 +174,56 @@ def test_fit_reports(multi_series):
     assert rep["rho"].between(0, 1).all()
 
 
-def test_single_shuffle_plan(multi_series):
-    """The distributed plan must contain exactly one exchange: the hash
-    partition by series_id feeding the grouped kernel."""
-    low_sdf, ind_sdf, _ = multi_series
-    plan = (
-        disaggregate(low_sdf, ind_sdf, method="denton-cholette")
-        ._jdf.queryExecution().executedPlan().toString()
+def test_fit_reports_failure_names_series(synthetic_series):
+    """A series whose low frequency cannot be inferred (its even years are
+    dropped) fails the fit_reports job with an error naming that series."""
+    low_sdf, ind_sdf, _ = synthetic_series
+    poisoned = low_sdf.filter(
+        ~((F.col("series_id") == "s0") & (F.year("ts") % 2 == 0))
     )
-    assert plan.count("Exchange") == 1, plan
+    with pytest.raises(Exception, match="series 's0'"):
+        fit_reports(poisoned, ind_sdf, method="chow-lin", agg_func="sum").collect()
 
 
-def test_csv_source_ingest_and_disagg(spark, tmp_path):
-    """S2/S3 through the Spark CSV source: read a reference fixture with
+def test_single_shuffle_plan(multi_series):
+    """The distributed plans of disaggregate and fit_reports must each
+    contain exactly one exchange: the explicit hash partition by series_id
+    (REPARTITION_BY_NUM) feeding the grouped kernel."""
+    low_sdf, ind_sdf, _ = multi_series
+    for out in (
+        disaggregate(low_sdf, ind_sdf, method="denton-cholette"),
+        fit_reports(low_sdf, ind_sdf, method="chow-lin"),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "REPARTITION_BY_NUM" in plan, plan
+
+
+@pytest.fixture(params=["reference", "synthetic"])
+def quarterly_csv(request, tmp_path):
+    """A quarterly CSV with ``period`` as yyyy/M/d and blank ``Value`` rows:
+    the reference fixture, or a seeded synthetic one written to tmp_path."""
+    if request.param == "reference":
+        return f"{DATA}/AL_Quarterly_Data_Modified.csv"
+    rng = np.random.default_rng(11)
+    stamps = pd.date_range("1990-01-01", periods=48, freq="QS")
+    values = [f"{v:.2f}" for v in 500.0 + np.cumsum(rng.normal(5.0, 20.0, 44))]
+    values += [""] * 4  # trailing periods without an observation
+    path = tmp_path / "quarterly.csv"
+    pd.DataFrame(
+        {
+            "period": [f"{ts.year}/{ts.month}/{ts.day}" for ts in stamps],
+            "Value": values,
+        }
+    ).to_csv(path, index=False)
+    return str(path)
+
+
+def test_csv_source_ingest_and_disagg(spark, quarterly_csv):
+    """S2/S3 through the Spark CSV source: read a quarterly CSV with
     spark.read.csv + to_date, then the result of the distributed path on it
     must equal the pandas API on the pandas-parsed twin."""
-    src = f"{DATA}/AL_Quarterly_Data_Modified.csv"
+    src = quarterly_csv
 
     sdf = (
         spark.read.csv(src, header=True, inferSchema=True)

@@ -372,18 +372,15 @@ def fiscal_year_revenue(spark, sf_dir):
     )
 
 
-@query("disagg_fit_reports")
-def disagg_fit_reports(spark, sf_dir):
-    """Per-series GLS diagnostics as a queryable table (no SQL oracle —
-    dense GLS): the engine's replacement for the reference's stdout report
-    (ts_disagg.py:179-210)."""
-    from tsdisagg_spark.spark.disagg import fit_reports
-
+def _priority_series(spark, sf_dir):
+    """The order-priority series' kernel inputs: yearly order revenue as
+    the target ``(series_id, ts, y)`` and monthly shipped value plus an
+    intercept as the indicators ``(series_id, ts, x1, intercept)``."""
     o = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
     low = o.groupBy(
         F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").cast("date").alias("ts"),
+        F.date_trunc("year", "o_orderdate").alias("ts"),
     ).agg(F.sum("o_totalprice").alias("y"))
     ind = (
         li.join(
@@ -392,11 +389,37 @@ def disagg_fit_reports(spark, sf_dir):
         )
         .groupBy(
             F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").cast("date").alias("ts"),
+            F.date_trunc("month", "l_shipdate").alias("ts"),
         )
         .agg(F.sum("l_extendedprice").alias("x1"))
         .withColumn("intercept", F.lit(1.0))
     )
+    return low, ind
+
+
+def _complete_years(out, col="y", agg=F.sum):
+    """Re-aggregate kernel output ``(series_id, ts, y_hat)`` to years with
+    ``agg``, rounded to cents as ``col``, keeping only years with all 12
+    months — the relational side of the C @ y_hat = y check."""
+    return (
+        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
+        .agg(
+            F.round(agg("y_hat"), 2).alias(col),
+            F.count(F.lit(1)).alias("n_months"),
+        )
+        .filter(F.col("n_months") == 12)
+        .drop("n_months")
+    )
+
+
+@query("disagg_fit_reports")
+def disagg_fit_reports(spark, sf_dir):
+    """Per-series GLS diagnostics as a queryable table (no SQL oracle —
+    dense GLS): the engine's replacement for the reference's stdout report
+    (ts_disagg.py:179-210)."""
+    from tsdisagg_spark.spark.disagg import fit_reports
+
+    low, ind = _priority_series(spark, sf_dir)
     return fit_reports(low, ind, method="chow-lin", agg_func="sum")
 
 
@@ -421,28 +444,7 @@ def disagg_fit_report_checks(spark, sf_dir):
     column misalignment, a dropped series, or a swapped CI bound breaks
     the hash.  The coefficient VALUES stay golden-tested library-side
     against the R fixtures."""
-    from tsdisagg_spark.spark.disagg import fit_reports
-
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").cast("date").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").cast("date").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
-    r = fit_reports(low, ind, method="chow-lin", agg_func="sum")
-    return r.select(
+    return disagg_fit_reports(spark, sf_dir).select(
         "series_id",
         "variable",
         (F.round(F.col("t") - F.col("coef") / F.col("sd_err"), 6) == 0).alias(
@@ -1056,24 +1058,7 @@ def disagg_chow_lin_priority(spark, sf_dir):
     constraint on identical data."""
     from tsdisagg_spark.spark.disagg import disaggregate
 
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
+    low, ind = _priority_series(spark, sf_dir)
     out = disaggregate(low, ind, method="chow-lin", agg_func="last")
     # single pass over the kernel output: a windowed max/count avoids the
     # self-join that would re-run the grouped GLS a second time, and the
@@ -1222,15 +1207,7 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
     # one aggregation pass over the kernel output; no semi-join back to `low`
     # (it would re-scan lineitem — every 12-month year group is a low year
     # by construction, since low is derived from the same monthly frame)
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _complete_years(out)
 
 
 @query(
@@ -1263,34 +1240,10 @@ def disagg_reagg_check(spark, sf_dir):
     breaks the constraint shows up as a value-hash mismatch."""
     from tsdisagg_spark.spark.disagg import disaggregate
 
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
+    low, ind = _priority_series(spark, sf_dir)
     out = disaggregate(low, ind, method="chow-lin", agg_func="sum")
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-        .join(low.select("series_id", "ts"), ["series_id", "ts"], "left_semi")
+    return _complete_years(out).join(
+        low.select("series_id", "ts"), ["series_id", "ts"], "left_semi"
     )
 
 
@@ -1341,15 +1294,7 @@ def disagg_two_indicators(spark, sf_dir):
     out = disaggregate(
         low, ind, method="chow-lin", agg_func="sum", errors="skip"
     )
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _complete_years(out)
 
 
 @query(
@@ -1399,8 +1344,9 @@ def disagg_litterman_nation(spark, sf_dir):
     start no later than the low series (ts_disagg.py:233-240 raises
     otherwise), be gap-free, and span >= 3 low periods."""
     from tsdisagg_spark.operators._par import pin_compute_parallelism
-    from tsdisagg_spark.spark.disagg import _SRC_IND, _SRC_LOW, _TAG
-    from tsdisagg_spark.spark.disagg import _disaggregate_unioned
+    from tsdisagg_spark.spark.disagg import (
+        _SRC_IND, _TAG, _disaggregate_unioned, _tagged_union,
+    )
 
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -1434,24 +1380,10 @@ def disagg_litterman_nation(spark, sf_dir):
             F.date_trunc("month", "l_shipdate").alias("ts"),
         )
         .agg(F.sum("l_extendedprice").alias("x1"))
+        .withColumn("intercept", F.lit(1.0))
     )
-    unioned = low.select(
-        "series_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("y").cast("double").alias("y"),
-        F.lit(None).cast("double").alias("x1"),
-        F.lit(None).cast("double").alias("intercept"),
-        F.lit(_SRC_LOW).alias(_TAG),
-    ).unionByName(
-        ind.select(
-            "series_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.lit(None).cast("double").alias("y"),
-            F.col("x1").cast("double").alias("x1"),
-            F.lit(1.0).alias("intercept"),
-            F.lit(_SRC_IND).alias(_TAG),
-        )
-    )
+    unioned, ind_cols = _tagged_union(low, ind, "series_id", "ts", "y")
+    cols = unioned.columns
     # pin the per-series width before the window so the byte-tiny exchange
     # keeps cluster parallelism and the kernel stage reuses it (same fix
     # as disagg_chow_lin_suppliers)
@@ -1473,25 +1405,17 @@ def disagg_litterman_nation(spark, sf_dir):
                == (F.months_between("last_y", "lo") / 12).cast("long") + 1)
             & (F.col("n_years") >= 3)
         )
-        .select("series_id", "ts", "y", "x1", "intercept", _TAG)
+        .select(*cols)
     )
     out = _disaggregate_unioned(
         unioned,
-        ["x1", "intercept"],
+        ind_cols,
         method="litterman",
         agg_func="sum",
         errors="skip",
         pre_partitioned=True,
     )
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _complete_years(out)
 
 
 @query(
@@ -1583,15 +1507,7 @@ def disagg_denton_mean(spark, sf_dir):
     out = disaggregate(
         low, ind, method="denton-cholette", agg_func="mean", errors="skip"
     )
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.avg("y_hat"), 2).alias("y_mean"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _complete_years(out, "y_mean", F.avg)
 
 
 @query(

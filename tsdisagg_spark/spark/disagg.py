@@ -10,6 +10,10 @@ Architecture (Spark-first, not a port):
   series' few hundred rows, Arrow-transferred, solved with the exact same
   pure-NumPy kernels that are golden-tested against R ``tempdisagg``
   (:mod:`tsdisagg_spark.kernels`, :mod:`tsdisagg_spark.disagg`).
+* One kernel stage (:func:`_kernel_stage`) serves both entry points:
+  :func:`disaggregate` emits each series' high-frequency path and
+  :func:`fit_reports` its regression report, over the same repartition,
+  per-series unpacking and error isolation.
 
 Scale design — the whole plan has exactly ONE shuffle:
 
@@ -25,9 +29,6 @@ length, so very long series belong on the banded-kernel path anyway).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,32 +38,6 @@ from tsdisagg_spark.disagg import disaggregate_full
 
 _SRC_LOW, _SRC_IND = 0, 1
 _TAG = "__src"
-
-
-def _partition_for_kernel(df: DataFrame, series_col: str, num_partitions: int | None) -> DataFrame:
-    """Explicitly hash-partition on the series key before the grouped kernel.
-
-    The kernel stage is CPU-bound, not byte-bound: a million series shuffle
-    only a few hundred bytes each, so AQE's coalescePartitions sees a "tiny"
-    shuffle and would collapse it to one or two tasks — serializing hours of
-    per-series solves onto one core.  A user-specified ``repartition(n, key)``
-    is exempt from AQE coalescing, and hash partitioning on the series key
-    satisfies the grouped-map distribution requirement, so no second exchange
-    is inserted (verified via explain: one ShuffleExchange, partitioning
-    REPARTITION_BY_NUM).  3.2x on 1000 series / 32 cores; the gap widens with
-    core count.
-
-    The default is exactly one partition per core: each applyInPandas task
-    pays a fixed JVM<->Python Arrow stream setup, so oversubscribing (the
-    earlier 4x default) multiplied that fixed cost for no balancing benefit —
-    with hash-partitioned series, per-partition load is already the sum of
-    many independent groups, which self-averages once partitions hold tens of
-    series (measured: 938 series on local[32], 32 partitions 2.0s vs 128
-    partitions 3.3s).  Pass ``num_partitions`` explicitly for fleets with few,
-    wildly skewed series where straggler-smoothing beats per-task overhead."""
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(num_partitions, series_col)
 
 
 def _tagged_union(
@@ -100,130 +75,47 @@ def _tagged_union(
     return low_part.unionByName(ind_part), ind_cols
 
 
-def disaggregate(
-    low: DataFrame,
-    indicators: DataFrame | None = None,
-    *,
-    method: str = "denton-cholette",
-    agg_func: str = "sum",
-    criterion: str = "proportional",
-    h: int = 1,
-    target_freq: str | None = None,
-    optimizer_kwargs: dict | None = None,
-    series_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "y",
-    errors: str = "raise",
-    num_partitions: int | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """Disaggregate many low-frequency series to a higher frequency at once.
-
-    Parameters
-    ----------
-    low : DataFrame ``(series_col, ts_col, value_col)``
-        Long-format low-frequency targets, one row per (series, period stamp).
-    indicators : DataFrame ``(series_col, ts_col, x1, ..., xk)``, optional
-        High-frequency indicator columns per series.  When omitted the
-        companion timeline is synthesized per series (Denton-family only),
-        exactly as the single-series API does; ``target_freq`` is then
-        required unless each series' frequency can be stepped down
-        automatically.
-    errors : ``'raise'`` | ``'skip'``
-        ``'skip'`` drops series whose solve fails (logged into the plan as an
-        empty group) instead of failing the job — at millions of series one
-        malformed group should not kill a 1000-executor stage.
-    num_partitions : int, optional
-        Partition count for the kernel stage; defaults to one partition per
-        core (see :func:`_partition_for_kernel`).
-    pre_partitioned : bool
-        Skip the kernel-stage repartition entirely: pass ``True`` when
-        ``low`` already carries a hash distribution on ``series_col`` the
-        grouped kernel can reuse — e.g. a series-bucketed table
-        (``sources.write_bucketed``) on the companion-index path (no
-        indicators; an internal union would otherwise discard the input's
-        partitioning).  The nightly re-run over a bucketed layout then has
-        ZERO exchanges before the kernel (plan-asserted in tests).
-
-    Returns
-    -------
-    DataFrame ``(series_col, ts_col, y_hat)`` on the high-frequency axis.
-    """
-    if errors not in ("raise", "skip"):
-        raise ValueError("errors must be 'raise' or 'skip'")
-    if pre_partitioned and indicators is not None:
-        # the internal union with the indicator frame discards any input
-        # partitioning, so honoring the flag here would hand AQE a byte-tiny
-        # unguarded shuffle it coalesces to 1-2 tasks — the serialization
-        # pathology _partition_for_kernel exists to prevent
-        raise ValueError(
-            "pre_partitioned=True is only valid without indicators: the "
-            "internal target/indicator union discards the input's "
-            "partitioning, so the kernel repartition cannot be skipped."
-        )
-
-    unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
-    return _disaggregate_unioned(
-        unioned,
-        ind_cols,
-        method=method,
-        agg_func=agg_func,
-        criterion=criterion,
-        h=h,
-        target_freq=target_freq,
-        optimizer_kwargs=optimizer_kwargs,
-        series_col=series_col,
-        ts_col=ts_col,
-        value_col=value_col,
-        errors=errors,
-        num_partitions=num_partitions,
-        pre_partitioned=pre_partitioned,
-    )
-
-
-def _disaggregate_unioned(
+def _kernel_stage(
     unioned: DataFrame,
     ind_cols: list[str],
+    emit,
+    schema_tail: list[T.StructField],
     *,
-    method: str,
-    agg_func: str,
-    criterion: str = "proportional",
-    h: int = 1,
-    target_freq: str | None = None,
-    optimizer_kwargs: dict | None = None,
-    series_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "y",
+    series_col: str,
+    ts_col: str,
+    value_col: str,
     errors: str = "raise",
-    num_partitions: int | None = None,
     pre_partitioned: bool = False,
 ) -> DataFrame:
-    """Kernel stage over an ALREADY-TAGGED union frame.
+    """The one grouped-map kernel stage behind :func:`disaggregate` and
+    :func:`fit_reports`.
 
-    ``unioned`` must match :func:`_tagged_union`'s output shape exactly:
-    ``(series_col, ts_col TIMESTAMP, value_col DOUBLE, *ind_cols DOUBLE,
-    _TAG INT)`` with ``value_col`` null on indicator rows and every
-    ``ind_cols`` entry null on target rows.  Callers that can DERIVE the
-    union in one pass over a shared upstream aggregate (e.g. via grouping
-    sets, or with post-union window eligibility) use this entry point so
-    the shared subtree has exactly ONE consumer in the physical plan —
-    the separate low/indicator legs of the internal union otherwise race
-    to materialize a cold cached upstream and compute it once per leg
-    (measured: the lineitem month aggregation ran 2-4x per action in
-    disagg_chow_lin_suppliers before the round-14 restructure)."""
+    ``unioned`` has :func:`_tagged_union`'s shape: ``(series_col, ts_col
+    TIMESTAMP, value_col DOUBLE, *ind_cols DOUBLE, _TAG INT)``, with
+    ``value_col`` null on indicator rows and ``ind_cols`` null on target
+    rows.  Each series is unpacked into a target frame and an indicator
+    frame (``None`` without indicator values) and handed to ``emit(low_df,
+    high_df)``, which returns the ``schema_tail`` columns or ``None`` for no
+    rows; the stage prepends the series key.  A failing series raises an
+    error naming it, or under ``errors='skip'`` yields no rows.
+
+    The stage is CPU-bound, not byte-bound: AQE would coalesce its byte-tiny
+    shuffle to one or two tasks and serialize the solves.  An explicit
+    ``repartition(n, series_col)`` is exempt from coalescing and satisfies
+    the grouped-map distribution, so it is the plan's only exchange
+    (REPARTITION_BY_NUM; 3.2x on 1000 series / 32 cores).  ``n`` is one
+    partition per core: each task pays a fixed Arrow stream setup, and
+    hash-partitioned load self-averages (938 series on local[32]: 32
+    partitions 2.0s, 128 partitions 3.3s).  ``pre_partitioned`` input
+    already carries that distribution and skips the repartition."""
     if errors not in ("raise", "skip"):
         raise ValueError("errors must be 'raise' or 'skip'")
-
-    series_field = unioned.schema[series_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(series_col, series_field.dataType),
-            T.StructField(ts_col, T.TimestampType()),
-            T.StructField("y_hat", T.DoubleType()),
-        ]
+    schema = T.StructType(
+        [T.StructField(series_col, unioned.schema[series_col].dataType), *schema_tail]
     )
+    empty = pd.DataFrame(columns=schema.names)
 
-    def solve_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = pdf[series_col].iloc[0]
         try:
             low_rows = (
@@ -246,39 +138,139 @@ def _disaggregate_unioned(
                 ).dropna(axis=1, how="all")
                 if high_df.shape[1] == 0:
                     high_df = None
-            arts = disaggregate_full(
-                low_df,
-                high_df,
-                target_freq=target_freq,
-                agg_func=agg_func,
-                method=method,
-                criterion=criterion,
-                h=h,
-                optimizer_kwargs=optimizer_kwargs,
-                verbose=False,
-                compute_report=False,
-            )
-            out = arts["output"]
-            return pd.DataFrame(
-                {
-                    series_col: sid,
-                    ts_col: out.index,
-                    "y_hat": out.to_numpy(dtype=float),
-                }
-            )
+            out = emit(low_df, high_df)
         except Exception as exc:  # noqa: BLE001 — per-series isolation
             if errors == "skip":
-                return pd.DataFrame(
-                    {series_col: [], ts_col: [], "y_hat": []}
-                ).astype({ts_col: "datetime64[ns]", "y_hat": "float64"})
+                return empty
             raise RuntimeError(f"disaggregation failed for series {sid!r}: {exc}") from exc
+        if out is None:
+            return empty
+        out.insert(0, series_col, sid)
+        return out
 
-    partitioned = (
-        unioned
-        if pre_partitioned
-        else _partition_for_kernel(unioned, series_col, num_partitions)
+    if not pre_partitioned:
+        width = unioned.sparkSession.sparkContext.defaultParallelism
+        unioned = unioned.repartition(width, series_col)
+    return unioned.groupBy(series_col).applyInPandas(run_group, schema=schema)
+
+
+def disaggregate(
+    low: DataFrame,
+    indicators: DataFrame | None = None,
+    *,
+    method: str = "denton-cholette",
+    agg_func: str = "sum",
+    criterion: str = "proportional",
+    h: int = 1,
+    target_freq: str | None = None,
+    optimizer_kwargs: dict | None = None,
+    series_col: str = "series_id",
+    ts_col: str = "ts",
+    value_col: str = "y",
+    errors: str = "raise",
+    pre_partitioned: bool = False,
+) -> DataFrame:
+    """Disaggregate many low-frequency series to a higher frequency at once.
+
+    Parameters
+    ----------
+    low : DataFrame ``(series_col, ts_col, value_col)``
+        Long-format low-frequency targets, one row per (series, period stamp).
+    indicators : DataFrame ``(series_col, ts_col, x1, ..., xk)``, optional
+        High-frequency indicator columns per series.  When omitted the
+        companion timeline is synthesized per series (Denton-family only),
+        exactly as the single-series API does; ``target_freq`` is then
+        required unless each series' frequency can be stepped down
+        automatically.
+    errors : ``'raise'`` | ``'skip'``
+        ``'skip'`` drops series whose solve fails instead of failing the job
+        — at millions of series one malformed group should not kill a
+        1000-executor stage.  A dropped series leaves no record: it is
+        simply absent from the output.
+    pre_partitioned : bool
+        Skip the kernel-stage repartition entirely: pass ``True`` when
+        ``low`` already carries a hash distribution on ``series_col`` the
+        grouped kernel can reuse — e.g. a series-bucketed table
+        (``sources.write_bucketed``) on the companion-index path (no
+        indicators; an internal union would otherwise discard the input's
+        partitioning).  The nightly re-run over a bucketed layout then has
+        ZERO exchanges before the kernel (plan-asserted in tests).
+
+    Returns
+    -------
+    DataFrame ``(series_col, ts_col, y_hat)`` on the high-frequency axis.
+    """
+    if pre_partitioned and indicators is not None:
+        # the internal union with the indicator frame discards any input
+        # partitioning, so honoring the flag here would hand AQE a byte-tiny
+        # unguarded shuffle it coalesces to 1-2 tasks — the serialization
+        # pathology the kernel-stage repartition exists to prevent
+        raise ValueError(
+            "pre_partitioned=True is only valid without indicators: the "
+            "internal target/indicator union discards the input's "
+            "partitioning, so the kernel repartition cannot be skipped."
+        )
+
+    unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
+    return _disaggregate_unioned(
+        unioned,
+        ind_cols,
+        method=method,
+        agg_func=agg_func,
+        criterion=criterion,
+        h=h,
+        target_freq=target_freq,
+        optimizer_kwargs=optimizer_kwargs,
+        series_col=series_col,
+        ts_col=ts_col,
+        value_col=value_col,
+        errors=errors,
+        pre_partitioned=pre_partitioned,
     )
-    return partitioned.groupBy(series_col).applyInPandas(solve_group, schema=out_schema)
+
+
+def _disaggregate_unioned(
+    unioned: DataFrame,
+    ind_cols: list[str],
+    *,
+    method: str,
+    agg_func: str,
+    criterion: str = "proportional",
+    h: int = 1,
+    target_freq: str | None = None,
+    optimizer_kwargs: dict | None = None,
+    series_col: str = "series_id",
+    ts_col: str = "ts",
+    value_col: str = "y",
+    errors: str = "raise",
+    pre_partitioned: bool = False,
+) -> DataFrame:
+    """:func:`disaggregate` over an ALREADY-TAGGED union frame (shape as in
+    :func:`_kernel_stage`).
+
+    Callers that can DERIVE the union in one pass over a shared upstream
+    aggregate (e.g. via grouping sets, or with post-union window
+    eligibility) use this entry point so the shared subtree has exactly ONE
+    consumer in the physical plan — the separate low/indicator legs of the
+    internal union otherwise race to materialize a cold cached upstream and
+    compute it once per leg (measured: the lineitem month aggregation ran
+    2-4x per action in disagg_chow_lin_suppliers before the round-14
+    restructure)."""
+
+    def emit(low_df, high_df) -> pd.DataFrame:
+        out = disaggregate_full(
+            low_df, high_df, target_freq=target_freq, agg_func=agg_func,
+            method=method, criterion=criterion, h=h,
+            optimizer_kwargs=optimizer_kwargs, verbose=False, compute_report=False,
+        )["output"]
+        return pd.DataFrame({ts_col: out.index, "y_hat": out.to_numpy(dtype=float)})
+
+    tail = [T.StructField(ts_col, T.TimestampType()), T.StructField("y_hat", T.DoubleType())]
+    return _kernel_stage(
+        unioned, ind_cols, emit, tail,
+        series_col=series_col, ts_col=ts_col, value_col=value_col,
+        errors=errors, pre_partitioned=pre_partitioned,
+    )
 
 
 _REPORT_SCHEMA_TAIL = [
@@ -304,44 +296,24 @@ def fit_reports(
     series_col: str = "series_id",
     ts_col: str = "ts",
     value_col: str = "y",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-series GLS regression diagnostics as a DataFrame
     ``(series, variable, coef, sd_err, t, p_value, ci_low, ci_high, rho,
     sigma2)`` — the engine's replacement for the reference's stdout report
-    (ts_disagg.py:179-210), queryable instead of printed."""
-    unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
-    series_field = low.schema[series_col]
-    schema = T.StructType(
-        [T.StructField(series_col, series_field.dataType), *_REPORT_SCHEMA_TAIL]
-    )
+    (ts_disagg.py:179-210), queryable instead of printed.  A series whose
+    fit fails fails the job with an error naming it."""
 
-    def report_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = pdf[series_col].iloc[0]
-        low_rows = (
-            pdf[pdf[_TAG] == _SRC_LOW].sort_values(ts_col).dropna(subset=[value_col])
-        )
-        ind_rows = pdf[pdf[_TAG] == _SRC_IND].sort_values(ts_col)
-        low_df = pd.DataFrame(
-            {value_col: low_rows[value_col].to_numpy()},
-            index=pd.DatetimeIndex(low_rows[ts_col]),
-        )
-        high_df = pd.DataFrame(
-            {c: ind_rows[c].to_numpy() for c in ind_cols},
-            index=pd.DatetimeIndex(ind_rows[ts_col]),
-        ).dropna(axis=1, how="all")
+    def emit(low_df, high_df) -> pd.DataFrame | None:
         arts = disaggregate_full(
             low_df, high_df, agg_func=agg_func, method=method,
             optimizer_kwargs=optimizer_kwargs, verbose=False,
         )
-        report = arts["report"]
-        if report is None:
-            return pd.DataFrame(columns=[series_col] + [f.name for f in _REPORT_SCHEMA_TAIL])
-        report = report.copy()
-        report.insert(0, series_col, sid)
-        report["rho"] = arts["info"]["rho"]
-        report["sigma2"] = arts["info"]["sigma2"]
-        return report
+        if arts["report"] is None:
+            return None
+        return arts["report"].assign(rho=arts["info"]["rho"], sigma2=arts["info"]["sigma2"])
 
-    partitioned = _partition_for_kernel(unioned, series_col, num_partitions)
-    return partitioned.groupBy(series_col).applyInPandas(report_group, schema=schema)
+    unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
+    return _kernel_stage(
+        unioned, ind_cols, emit, _REPORT_SCHEMA_TAIL,
+        series_col=series_col, ts_col=ts_col, value_col=value_col,
+    )
