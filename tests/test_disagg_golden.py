@@ -12,6 +12,7 @@ import pandas.testing as pd_testing
 import pytest
 
 from tsdisagg_spark import disaggregate_series
+from tsdisagg_spark.disagg import disaggregate_full
 
 DATA = "/root/reference/tests/data"
 
@@ -310,6 +311,16 @@ def test_error_regression_requires_indicator():
             method="litterman",
             agg_func="sum",
         )
+
+
+@pytest.mark.parametrize("entry", [disaggregate_series, disaggregate_full])
+def test_error_missing_target_column(entry):
+    low = pd.DataFrame(
+        {"sales": [10.0, 12.0, 11.0]},
+        index=pd.date_range("2000-01-01", periods=3, freq="YS"),
+    )
+    with pytest.raises(ValueError, match="target_column 'revenue'"):
+        entry(low, method="denton-cholette", agg_func="sum", target_column="revenue")
 
 
 def test_error_bad_method_and_args(fixtures):

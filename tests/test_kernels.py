@@ -195,6 +195,12 @@ def test_optimizer_method_honored_and_rejected():
 # banded long-series path
 # ---------------------------------------------------------------------------
 
+def _high_labels(n_low: int, factor: int, backcast: int) -> np.ndarray:
+    """Period labels of a high-frequency axis whose first ``backcast``
+    points precede the first low period and so carry no constraint."""
+    return np.concatenate([np.full(backcast, -1), np.repeat(np.arange(n_low), factor)])
+
+
 def test_banded_lu_solve_matches_dense():
     rng = np.random.default_rng(0)
     for _ in range(25):
@@ -210,7 +216,10 @@ def test_banded_lu_solve_matches_dense():
         for i in range(n):
             for j in range(max(0, i - kl), min(n, i + ku + 1)):
                 ab[kl + ku + i - j, j] = A[i, j]
-        x = kernels.banded_lu_solve(ab, kl, ku, b.copy())
+        x, _logdet = kernels._banded_lu_solve_grid_t(
+            ab.T[None].copy(), kl, ku, b.reshape(1, n, 1).copy()
+        )
+        x = x[0, :, 0]
         np.testing.assert_allclose(A @ x, b, atol=1e-8)
 
 
@@ -218,13 +227,13 @@ def test_banded_lu_solve_matches_dense():
 @pytest.mark.parametrize("criterion", ["proportional", "additive"])
 @pytest.mark.parametrize("order", [1, 2])
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
-def test_denton_banded_equals_dense(method, criterion, order, agg):
+def test_denton_banded_equals_dense(method, criterion, order, agg, backcast=0):
     rng = np.random.default_rng(7)
     n_years, factor = 8, 12
-    n = n_years * factor
+    n = n_years * factor + backcast
     X = rng.uniform(1, 3, n).reshape(-1, 1)
     C = kernels.conversion_matrix(
-        np.arange(n_years), np.repeat(np.arange(n_years), factor), factor, agg
+        np.arange(n_years), _high_labels(n_years, factor, backcast), factor, agg
     )
     y = rng.uniform(10, 30, n_years)
     p = X.ravel()
@@ -236,6 +245,16 @@ def test_denton_banded_equals_dense(method, criterion, order, agg):
     dense = p + D @ (y - C @ p)
     banded = kernels.denton_banded(y, X, C, method, order, criterion)
     np.testing.assert_allclose(banded, dense, atol=1e-7)
+
+
+@pytest.mark.parametrize("method", ["denton", "denton-cholette"])
+@pytest.mark.parametrize("criterion", ["proportional", "additive"])
+@pytest.mark.parametrize("order", [1, 2])
+@pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
+def test_denton_banded_equals_dense_backcast(method, criterion, order, agg):
+    """The same battery with 13 leading unconstrained points, which the
+    interleaved KKT places before the first constraint row."""
+    test_denton_banded_equals_dense(method, criterion, order, agg, backcast=13)
 
 
 def test_denton_banded_long_series():
@@ -292,17 +311,17 @@ def test_banded_lu_solve_grid_matches_dense():
 @pytest.mark.parametrize("k", [1, 2])
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
 @pytest.mark.parametrize("rho", [0.1, 0.85])
-def test_chow_lin_banded_equals_dense(factor, k, agg, rho):
+def test_chow_lin_banded_equals_dense(factor, k, agg, rho, backcast=0):
     """32 configs: at fixed rho the banded Chow-Lin machinery (GLS beta,
     distribution, concentrated NLL) must reproduce the dense pipeline at
     1e-7 — the direct analog of the Denton banded-vs-dense battery (which
     also compares the solve at fixed hyperparameters)."""
     rng = np.random.default_rng(factor + k)
     n_low = 30
-    n = n_low * factor
+    n = n_low * factor + backcast
     X = rng.uniform(1, 3, (n, k))
     C = kernels.conversion_matrix(
-        np.arange(n_low), np.repeat(np.arange(n_low), factor), factor, agg
+        np.arange(n_low), _high_labels(n_low, factor, backcast), factor, agg
     )
     beta_true = np.linspace(2.0, 3.0, k)
     u = np.empty(n)
@@ -326,6 +345,15 @@ def test_chow_lin_banded_equals_dense(factor, k, agg, rho):
     np.testing.assert_allclose(yh_b, yh_d, rtol=1e-7, atol=1e-7)
     np.testing.assert_allclose(s_b, s_d, rtol=1e-7)
     np.testing.assert_allclose(nll_b, nll_d, rtol=1e-9, atol=1e-8)
+
+
+@pytest.mark.parametrize("factor", [3, 12])
+@pytest.mark.parametrize("k", [1, 2])
+@pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
+@pytest.mark.parametrize("rho", [0.1, 0.85])
+def test_chow_lin_banded_equals_dense_backcast(factor, k, agg, rho):
+    """The same 32 configs with 13 leading unconstrained points."""
+    test_chow_lin_banded_equals_dense(factor, k, agg, rho, backcast=13)
 
 
 def test_chow_lin_banded_full_fit_equals_dense():
@@ -449,23 +477,21 @@ def test_chow_lin_banded_96k_points():
 @pytest.mark.parametrize("factor", [3, 12])
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
 @pytest.mark.parametrize("rho", [0.15, 0.8])
-def test_litterman_banded_equals_dense(factor, agg, rho):
+def test_litterman_banded_equals_dense(factor, agg, rho, backcast=0):
     """Litterman through the same banded KKT (pentadiagonal random-walk
     precision): fixed-rho parity vs the dense pipeline at 1e-7 — note the
     dense path pays an O(n^3) inverse just to BUILD Sigma."""
     rng = np.random.default_rng(factor)
     n_low = 25
-    n = n_low * factor
+    n = n_low * factor + backcast
     X = rng.uniform(1, 3, (n, 1))
     C = kernels.conversion_matrix(
-        np.arange(n_low), np.repeat(np.arange(n_low), factor), factor, agg
+        np.arange(n_low), _high_labels(n_low, factor, backcast), factor, agg
     )
     u = np.cumsum(0.3 * rng.standard_normal(n))  # random-walk disturbance
     y = C @ (2.0 * X.ravel() + u)
 
-    yh_b, beta_b, s_b, nll_b = kernels._gls_banded_solve_fixed(
-        y, X, C, rho, "litterman"
-    )
+    nll_b, s_b, beta_b, yh_b = kernels._regression_backend(y, X, C, "litterman", True)[1](rho)
 
     Sigma0 = kernels.litterman_covariance(rho, 1.0, n)
     beta_d = kernels.gls_beta(Sigma0, y, X, C)
@@ -481,6 +507,14 @@ def test_litterman_banded_equals_dense(factor, agg, rho):
     np.testing.assert_allclose(nll_b, nll_d, rtol=1e-9, atol=1e-8)
 
 
+@pytest.mark.parametrize("factor", [3, 12])
+@pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
+@pytest.mark.parametrize("rho", [0.15, 0.8])
+def test_litterman_banded_equals_dense_backcast(factor, agg, rho):
+    """The same battery with 13 leading unconstrained points."""
+    test_litterman_banded_equals_dense(factor, agg, rho, backcast=13)
+
+
 def test_litterman_banded_full_fit_equals_dense():
     """Full banded Litterman fit vs the dense fit: same two-level grid, so
     rho/sigma2/beta and the distributed series must agree."""
@@ -494,7 +528,7 @@ def test_litterman_banded_full_fit_equals_dense():
     u = np.cumsum(0.3 * rng.standard_normal(n))
     y = C @ (2.0 * X.ravel() + u)
 
-    yh_b, res_b, info_b = kernels._gls_banded_fit(y, X, C, "litterman")
+    yh_b, res_b, info_b = kernels._regression_fit(y, X, C, "litterman", None, banded=True)
     res_d = kernels.fit_rho_sigma(y, X, C, kernels.litterman_covariance)
     np.testing.assert_allclose(res_b.fun, res_d.fun, rtol=1e-9)
     np.testing.assert_allclose(res_b.x, res_d.x, rtol=1e-6)
@@ -524,7 +558,7 @@ def test_solve_series_dispatches_banded_litterman():
     y = C @ (2.0 * X.ravel() + u)
     y_hat, result, info = kernels.solve_series(y, X, C, "litterman")
     assert result is not None and "beta" in info
-    yh_b, res_b, _ = kernels._gls_banded_fit(y, X, C, "litterman")
+    yh_b, res_b, _ = kernels._regression_fit(y, X, C, "litterman", None, banded=True)
     np.testing.assert_array_equal(y_hat, yh_b)
     np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9)
 
@@ -660,9 +694,10 @@ def test_regression_fit_matches_dense_fixture():
 
         y_hat, _result, info = kernels.solve_series(y, X, C, method)
         np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9, err_msg=str(key))
-        at_ref, _b, _s, nll_ref = kernels._gls_solve_fixed(y, X, C, rho_ref, method)
+        evaluate = kernels._regression_backend(y, X, C, method, False)[1]
+        nll_ref, _s, _b, at_ref = evaluate(rho_ref)
         if rel(y_hat) > 1e-10:
-            _y, _b, _s, nll_new = kernels._gls_solve_fixed(y, X, C, info["rho"], method)
+            nll_new, _s, _b, _y = evaluate(info["rho"])
             assert abs(nll_new - nll_ref) <= 1e-12 * abs(nll_ref), key
             assert rel(at_ref) <= 1e-10, key
         else:
@@ -726,3 +761,62 @@ def test_exact_fit_tpch_series():
     full = full[full["count"] == 12]
     np.testing.assert_allclose(full["sum"], low.loc[low.index.year.isin(full.index)], rtol=1e-9)
     assert np.all(np.isfinite(arts["report"].select_dtypes("number").to_numpy()))
+
+
+def test_fit_rho_sigma_rejects_other_builders():
+    y, X, C = _degenerate_case("two_years")
+    with pytest.raises(ValueError, match="COVARIANCE_BUILDERS"):
+        kernels.fit_rho_sigma(y, X, C, lambda rho, s2, n: kernels.chow_lin_covariance(rho, s2, n))
+
+
+def _degenerate_case(name: str):
+    """``(y, X, C)`` of a degenerate yearly->monthly regression input."""
+    years, backcast, agg = {
+        "two_years": (2, 0, "sum"), "k_equals_n_low": (3, 0, "sum"),
+        "backcast_mean": (10, 36, "mean"),
+    }.get(name, (10, 0, "sum"))
+    rng = np.random.default_rng(41)
+    n = 12 * years + backcast
+    C = kernels.conversion_matrix(np.arange(years), _high_labels(years, 12, backcast), 12, agg)
+    x1, x2 = 50.0 + 0.3 * np.arange(n) + rng.normal(0.0, 2.0, (2, n))
+    y = C @ (2.0 * x1 + np.cumsum(rng.normal(0.0, 1.0, n)))
+    X = np.column_stack([x1, np.ones(n)])
+    if name == "k_equals_n_low":
+        X = np.column_stack([x1, x2, np.ones(n)])
+    elif name == "constant_y":
+        y = np.full(years, 120.0)
+    elif name == "zero_y":
+        y = np.zeros(years)
+    elif name == "collinear":
+        X = np.column_stack([x1, 2.0 * x1, np.ones(n)])
+    elif name == "constant_x":
+        X = np.ones((n, 2))
+    return y, X, C
+
+
+@pytest.mark.parametrize("banded", [False, True])
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+@pytest.mark.parametrize(
+    "case", ["two_years", "k_equals_n_low", "constant_y", "zero_y", "backcast_mean"]
+)
+def test_degenerate_inputs_meet_constraint(case, method, banded):
+    """Both regression back ends give a finite y_hat with C y_hat = y and
+    finite standard errors on degenerate input.  With k >= n_low the
+    profile likelihood is flat, so the back ends may pick different rho:
+    only the constraint is asserted, not rho."""
+    y, X, C = _degenerate_case(case)
+    y_hat, _result, info = kernels._regression_fit(y, X, C, method, None, banded)
+    assert np.all(np.isfinite(y_hat))
+    np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9, atol=1e-9)
+    assert np.all(np.isfinite(info["std_beta"]))
+
+
+@pytest.mark.parametrize("banded", [False, True])
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+@pytest.mark.parametrize("case", ["collinear", "constant_x"])
+def test_degenerate_indicators_raise(case, method, banded):
+    """Collinear or constant indicator columns make CX' V^{-1} CX singular:
+    both back ends raise instead of returning a silent NaN series."""
+    y, X, C = _degenerate_case(case)
+    with pytest.raises(np.linalg.LinAlgError):
+        kernels._regression_fit(y, X, C, method, None, banded)

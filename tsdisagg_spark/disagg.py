@@ -230,6 +230,8 @@ def disaggregate_full(
         )
 
     target_column = target_column or low_freq_df.columns[0]
+    if target_column not in low_freq_df.columns:
+        raise ValueError(f"target_column {target_column!r} is not a column of low_freq_df")
     target_pos = int(np.flatnonzero(low_freq_df.columns == target_column)[0])
 
     merged, low_df, high_df, factor, low_code, high_code = prepare_inputs(

@@ -5,11 +5,15 @@ these run *inside* a grouped-map pandas UDF (one call per series), so every
 function here operates on a single series' arrays (n = high-frequency
 length, typically 10^2-10^3).
 
-Paths (:func:`solve_series` dispatches): the Denton family solves with dense
-n x n matrices below ``BANDED_THRESHOLD`` points and a banded KKT above it;
-the Chow-Lin / Litterman fits use closed-form V0 = C Sigma0 C' stacks below
-it and the banded KKT above it — neither regression path forms an n x n
-covariance.  The dense covariance builders (:func:`chow_lin_covariance`,
+Paths (:func:`solve_series` dispatches): all four methods solve the same
+interleaved KKT [[P, C'], [C, 0]] at and above ``BANDED_THRESHOLD`` points,
+through one assembly (:func:`_kkt_solve`) and one grid banded LU; P is the
+difference-operator Gram for the Denton family and the band precision for
+Chow-Lin / Litterman.  Below it the Denton family solves with dense n x n
+matrices.  One regression driver (:func:`_regression_fit`) fits Chow-Lin and
+Litterman on either back end: closed-form V0 = C Sigma0 C' stacks below the
+threshold, the banded KKT above it — neither forms an n x n covariance.  The
+dense covariance builders (:func:`chow_lin_covariance`,
 :func:`litterman_covariance`, :func:`gls_beta`, :func:`distribution_matrix`)
 remain as the reference forms, and for the reference's Nelder-Mead surface.
 
@@ -245,7 +249,6 @@ def negative_loglik(
 
 #: rho search interval matching the reference's bounds (ts_disagg.py:438-439)
 _RHO_LO, _RHO_HI = 1e-5, 1.0 - 1e-5
-_GOLDEN = 0.3819660112501051  # (3 - sqrt(5)) / 2
 
 
 def _nelder_mead_minimize(
@@ -485,19 +488,16 @@ _SIGMA_TIMES = {"chow-lin": _chow_lin_sigma_times, "litterman": _litterman_sigma
 def _v0_grid_fn(
     C: np.ndarray, cov_builder: Callable[[float, float, int], np.ndarray]
 ) -> Callable[[np.ndarray], np.ndarray]:
-    """``grid -> V0 stack`` for ``cov_builder``: the closed form for the two
-    built-in families on block-structured C; otherwise C Sigma0 C' per rho
-    from the builder (custom builders, or hand-made constraint matrices)."""
+    """``grid -> V0 stack`` for one of the two ``COVARIANCE_BUILDERS``: the
+    closed form on block-structured C; otherwise C Sigma0 C' per rho from
+    the builder (hand-made constraint matrices)."""
     n = C.shape[1]
-    method = next((m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder), None)
-    if method is not None:
-        try:
-            blocks = _v0_blocks(C)
-        except ValueError:
-            pass
-        else:
-            return lambda grid: _V0_FORMS[method](np.asarray(grid, dtype=float), blocks, n)
-    return lambda grid: np.stack([C @ cov_builder(r, 1.0, n) @ C.T for r in grid])
+    try:
+        blocks = _v0_blocks(C)
+    except ValueError:
+        return lambda grid: np.stack([C @ cov_builder(r, 1.0, n) @ C.T for r in grid])
+    v0_form = _V0_FORMS[next(m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder)]
+    return lambda grid: v0_form(np.asarray(grid, dtype=float), blocks, n)
 
 
 def _concentrate(
@@ -523,15 +523,6 @@ def _concentrate(
     return nll, s_star, beta, z
 
 
-def _gls_terms(y: np.ndarray, CX: np.ndarray, V0: np.ndarray) -> tuple:
-    """:func:`_concentrate` for a dense V0 stack."""
-    k = CX.shape[1]
-    rhs = np.column_stack([CX, y])
-    solved = np.linalg.solve(V0, np.broadcast_to(rhs, (len(V0), *rhs.shape)))
-    _sign, logdet = np.linalg.slogdet(V0)
-    return _concentrate(y, CX, solved[..., :k], solved[..., k], logdet)
-
-
 def _scan(fn: Callable[[np.ndarray], np.ndarray], grid: np.ndarray, member_bytes: int,
           budget: int) -> np.ndarray:
     """``fn`` over ``grid`` in chunks whose working set fits ``budget``."""
@@ -547,7 +538,8 @@ def _profile_fit(
     nll_grid: Callable[[np.ndarray], np.ndarray],
     evaluate: Callable[[float], tuple],
 ) -> tuple[float, tuple, int]:
-    """The two-level profile-likelihood search both fit paths share.
+    """The two-level profile-likelihood search both regression back ends
+    share.
 
     A coarse 41-point scan over (_RHO_LO, _RHO_HI) guards against
     non-convex profiles; a 33-point scan inside the winning bracket plus one
@@ -575,27 +567,6 @@ def _profile_fit(
         out = evaluate(rho_star)
         nfev += 1
     return rho_star, out, nfev
-
-
-def _gls_at(
-    rho: float, y: np.ndarray, CX: np.ndarray, v0: Callable[[np.ndarray], np.ndarray]
-) -> tuple[float, float, np.ndarray, np.ndarray]:
-    """``(nll, s_star, beta, z)`` at one rho."""
-    return tuple(a[0] for a in _gls_terms(y, CX, v0(np.array([rho]))))
-
-
-def _gls_solve_fixed(
-    y: np.ndarray, X: np.ndarray, C: np.ndarray, rho: float, reg_method: str
-) -> tuple[np.ndarray, np.ndarray, float, float]:
-    """Fixed-rho GLS and distribution step ``(y_hat, beta, s_star, nll)``
-    from V0(rho) and Sigma0 C' z, with no n x n matrix.  beta and y_hat
-    come from the unit-scale Sigma0, so they do not depend on sigma2 (an
-    exact fit pins it at the 1e-300 floor)."""
-    y = np.asarray(y, dtype=float)
-    v0 = _v0_grid_fn(C, COVARIANCE_BUILDERS[reg_method])
-    nll, s_star, beta, z = _gls_at(rho, y, C @ X, v0)
-    y_hat = X @ beta + _SIGMA_TIMES[reg_method](rho, C.T @ z)
-    return y_hat, beta, s_star, nll
 
 
 def profile_negative_loglik(
@@ -628,80 +599,6 @@ def profile_negative_loglik(
     return nll, s_star
 
 
-def fit_rho_sigma(
-    y: np.ndarray,
-    X: np.ndarray,
-    C: np.ndarray,
-    cov_builder: Callable[[float, float, int], np.ndarray],
-    optimizer_kwargs: dict | None = None,
-) -> FitResult:
-    """Bounded ML fit of (rho, sigma2) with rho in (1e-5, 1-1e-5), matching
-    the reference's feasible region (ts_disagg.py:438-448).
-
-    Default strategy differs from the reference (which runs a 2-D scipy
-    solver from (0.8, 0.8)): sigma2 is concentrated out analytically, leaving
-    a 1-D profile likelihood in rho that :func:`_profile_fit` searches with
-    batched closed-form V0 stacks (no n x n covariance is formed).
-
-    ``optimizer_kwargs['method']`` is honored, not ignored: ``'nelder-mead'``
-    runs a real bounded 2-D Nelder-Mead on the reference's objective from the
-    reference's x0=(0.8, 0.8) (ts_disagg.py:441-448), so ``return_optim_res``
-    consumers get scipy-semantics ``nit``/``nfev``.  ``'powell'`` and
-    ``'l-bfgs-b'`` (scipy solvers the reference passes through; scipy is not
-    a dependency here) are solved via the same bounded Nelder-Mead with the
-    substitution recorded in ``FitResult.message``.  Unknown method names
-    raise ``ValueError`` instead of being silently accepted.
-    ``optimizer_kwargs['options']`` supports ``xatol``/``fatol``/``maxiter``.
-    """
-    kwargs = dict(optimizer_kwargs or {})
-    method = str(kwargs.get("method", "brent-profile")).lower()
-    options = dict(kwargs.get("options") or {})
-    if method in ("nelder-mead", "powell", "l-bfgs-b"):
-        def f2(params: np.ndarray) -> float:
-            return negative_loglik(params, y, X, C, cov_builder)
-
-        x, fx, nit, nfev = _nelder_mead_minimize(
-            f2,
-            np.full(2, 0.8),  # reference x0 (ts_disagg.py:441)
-            lower=np.array([_RHO_LO, 1e-5]),
-            upper=np.array([_RHO_HI, np.inf]),
-            xatol=float(options.get("xatol", 1e-6)),
-            fatol=float(options.get("fatol", 1e-8)),
-            max_iter=options.get("maxiter"),
-        )
-        message = (
-            "converged"
-            if method == "nelder-mead"
-            else f"method '{method}' solved via bounded Nelder-Mead "
-            "(scipy is not a dependency of this engine)"
-        )
-        return FitResult(x=x, fun=fx, nit=nit, nfev=nfev, message=message)
-    if method not in ("brent-profile", "profile"):
-        raise ValueError(
-            f"Unsupported optimizer method {method!r}: use 'nelder-mead', "
-            "'powell', 'l-bfgs-b', or omit for the concentrated "
-            "Brent-profile default."
-        )
-
-    y = np.asarray(y, dtype=float)
-    v0 = _v0_grid_fn(C, cov_builder)
-    CX = C @ X
-    n_low, n = C.shape
-    member_bytes = 64 * (n_low * n_low + n)  # a few (n_low, n_low) and (n,) temporaries
-    rho_star, (nll_star, s_star, _beta, _z), nfev = _profile_fit(
-        lambda grid: _scan(
-            lambda g: _gls_terms(y, CX, v0(g))[0], grid, member_bytes, _V0_SCAN_BYTES
-        ),
-        lambda rho: _gls_at(rho, y, CX, v0),
-    )
-    return FitResult(
-        x=np.array([rho_star, s_star / (1.0 + rho_star)]),
-        fun=float(nll_star),
-        nfev=nfev,
-        extras={"scaled_sigma2": float(s_star)},
-    )
-
-
 def distribution_matrix(Sigma: np.ndarray, C: np.ndarray) -> np.ndarray:
     """D = Sigma C' (C Sigma C')^{-1} — maps low-frequency residuals onto the
     high-frequency path (ts_disagg.py:96-97)."""
@@ -716,67 +613,25 @@ def beta_std_errors(Sigma: np.ndarray, X: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# banded solver for single very-long series (SURVEY.md §7 M8 extension)
+# one banded KKT for all four methods (SURVEY.md §7 M8 extension)
 #
 # Spark parallelism is across SERIES; a single 10^5-point series still hits
-# the dense kernels' O(n^3) wall.  For the Denton family the solve is an
-# equality-constrained least squares
+# the dense kernels' O(n^3) wall.  Every method's solve is the equality-
+# constrained least squares
 #
-#     min ||W (x - p)||^2   s.t.   C x = y - C p  (shifted: d = x - p)
+#     min w' P w   s.t.   C w = b        KKT: [[P, C'], [C, 0]] [w; mu] = [0; b]
 #
-# whose KKT system [[W'W, C'], [C, 0]] is BANDED once constraint rows are
-# interleaved after their period's last member: W'W couples x_t only with
-# x_{t +/- order}, and each constraint row touches one period's members.
-# Bandwidth ~ factor + order + 1, so the whole solve is O(n * b^2) time and
-# O(n * b) memory — a 100k-point daily series solves in seconds where the
-# dense path would need 10^15 flops and 80 GB for Sigma alone.
+# with P banded: the difference-operator Gram W'W for the Denton family
+# (w = y_hat - p, b = y - C p), the AR(1) / random-walk precision Sigma0^{-1}
+# for Chow-Lin and Litterman.  The KKT is BANDED once each constraint row is
+# interleaved after its period's last member: P couples x_t only with
+# x_{t +/- e} for its e < n_diags diagonals, and each constraint row touches
+# one period's members.  Bandwidth ~ factor + n_diags, so one solve costs
+# O(n * b^2) time and O(n * b) memory — a 100k-point series solves in
+# seconds where the dense path would need 10^15 flops and 80 GB for Sigma.
+# One index skeleton (_gls_kkt_indices), one assembly (_kkt_solve) and one
+# grid LU (_banded_lu_solve_grid_t) serve all four methods.
 # ---------------------------------------------------------------------------
-
-def banded_lu_solve(ab: np.ndarray, kl: int, ku: int, b: np.ndarray) -> np.ndarray:
-    """Solve ``A x = b`` for banded ``A`` via Gaussian elimination with
-    partial pivoting (LAPACK ``dgbtrf`` storage: ``ab[kl + ku + i - j, j] =
-    A[i, j]``, rows ``0..kl-1`` reserved for pivoting fill-in; ab has
-    ``2*kl + ku + 1`` rows).  Pure NumPy (scipy is not a dependency);
-    the per-column loop costs O(n * (kl + ku) * kl) scalar work — linear in
-    n, which is the whole point.  ``ab`` and ``b`` are modified in place.
-    """
-    n = ab.shape[1]
-    if b.shape[0] != n:
-        raise ValueError(f"b has {b.shape[0]} rows, expected {n}")
-    diag = kl + ku
-    for j in range(n):
-        # pivot among A[j .. j+kl, j]
-        col = ab[diag : diag + min(kl, n - 1 - j) + 1, j]
-        pj = int(np.argmax(np.abs(col)))
-        piv = col[pj]
-        if piv == 0.0:
-            raise np.linalg.LinAlgError("singular banded matrix")
-        jend = min(j + ku + kl, n - 1)
-        if pj:
-            cols = np.arange(j, jend + 1)
-            r1, r2 = diag + j - cols, diag + j + pj - cols
-            tmp = ab[r1, cols].copy()
-            ab[r1, cols] = ab[r2, cols]
-            ab[r2, cols] = tmp
-            b[j], b[j + pj] = b[j + pj], b[j]
-        nm = min(kl, n - 1 - j)
-        if nm:
-            m = ab[diag + 1 : diag + nm + 1, j] / ab[diag, j]
-            for c in range(j + 1, jend + 1):
-                start = diag + j + 1 - c
-                ab[start : start + nm, c] -= m * ab[diag + j - c, c]
-            b[j + 1 : j + nm + 1] -= m * b[j]
-    x = np.empty(n)
-    for i in range(n - 1, -1, -1):
-        cend = min(i + ku + kl, n - 1)
-        if cend > i:
-            cols = np.arange(i + 1, cend + 1)
-            s = ab[diag + i - cols, cols] @ x[cols]
-        else:
-            s = 0.0
-        x[i] = (b[i] - s) / ab[diag, i]
-    return x
-
 
 def _difference_gram_band(
     n: int, order: int, scale: np.ndarray | None, trimmed: bool
@@ -812,9 +667,8 @@ def _difference_gram_band(
 
 
 def _constraint_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row contiguous support ``[lo_i, hi_i]`` of the constraint matrix,
-    validating the banded-path preconditions (contiguous support, strictly
-    increasing end columns) — ``ValueError`` otherwise so callers can fall
+    """Per-row contiguous support ``[lo_i, hi_i]`` of the constraint matrix
+    — ``ValueError`` for an empty or non-contiguous row, so callers can fall
     back to the dense path."""
     n_low = C.shape[0]
     lo = np.full(n_low, -1, dtype=int)
@@ -826,8 +680,6 @@ def _constraint_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         lo[i], hi[i] = nz[0], nz[-1]
         if not np.all(np.diff(nz) == 1):
             raise ValueError(f"constraint row {i} support is not contiguous")
-    if np.any(np.diff(hi) <= 0):
-        raise ValueError("constraint rows must end at strictly increasing columns")
     return lo, hi
 
 
@@ -835,113 +687,24 @@ def _interleave_positions(
     n: int, hi: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, int]:
     """Interleaved KKT ordering: x_t, then every lambda_i whose period ends
-    at t — the permutation that makes the KKT system banded."""
-    n_low = hi.shape[0]
-    pos = np.empty(n, dtype=int)       # position of x_t
-    lpos = np.empty(n_low, dtype=int)  # position of lambda_i
-    ci = 0
-    nxt = 0
-    for t in range(n):
-        pos[t] = nxt
-        nxt += 1
-        while ci < n_low and hi[ci] == t:
-            lpos[ci] = nxt
-            nxt += 1
-            ci += 1
-    if ci != n_low:
+    at t — the permutation that makes the KKT system banded.  ``hi`` must
+    be strictly increasing."""
+    if np.any(hi >= n):
         raise ValueError("constraint end column beyond the high-freq axis")
-    return pos, lpos, n + n_low
+    pos = np.arange(n) + np.searchsorted(hi, np.arange(n))  # x_t after every lambda_i, hi_i < t
+    lpos = hi + np.arange(1, hi.shape[0] + 1)               # lambda_i right after x_{hi_i}
+    return pos, lpos, n + hi.shape[0]
 
-
-def denton_banded(
-    y: np.ndarray,
-    X: np.ndarray,
-    C: np.ndarray,
-    method: str,
-    order: int = 1,
-    criterion: str = "proportional",
-) -> np.ndarray:
-    """Banded-KKT Denton / Denton-Cholette solve: identical output to the
-    dense ``distribution_matrix`` / ``denton_cholette_distribution`` path
-    (asserted in tests to ~1e-8), O(n b^2) instead of O(n^3).
-
-    ``C`` must have row-contiguous nonzero support with strictly increasing
-    end columns (true for every time-ordered period constraint the
-    relational layer produces — sum/mean blocks or first/last singletons);
-    a ``ValueError`` otherwise, so callers can fall back to the dense path.
-    """
-    n, k = X.shape
-    if k != 1:
-        raise ValueError("denton supports exactly one indicator column")
-    x = X.ravel().astype(float)
-    p = x
-    scale = None
-    if criterion == "proportional":
-        scale = 1.0 / (x * x.mean())
-    gdiags = _difference_gram_band(
-        n, order, scale, trimmed=(method == "denton-cholette")
-    )
-
-    lo, hi = _constraint_blocks(C)
-    n_low = C.shape[0]
-    pos, lpos, N = _interleave_positions(n, hi)
-
-    # collect symmetric entries (a <= b) of the permuted KKT
-    rows_a, rows_b, vals = [], [], []
-    for e, g in enumerate(gdiags):
-        i = np.arange(n - e)
-        a, b2 = pos[i], pos[i + e]
-        rows_a.append(np.minimum(a, b2))
-        rows_b.append(np.maximum(a, b2))
-        vals.append(g)
-    for i in range(n_low):
-        cols = np.arange(lo[i], hi[i] + 1)
-        a = np.minimum(pos[cols], lpos[i])
-        b2 = np.maximum(pos[cols], lpos[i])
-        rows_a.append(a)
-        rows_b.append(b2)
-        vals.append(C[i, cols])
-    ra = np.concatenate(rows_a)
-    rb = np.concatenate(rows_b)
-    vv = np.concatenate(vals)
-
-    bw = int(np.max(rb - ra))
-    kl = ku = bw
-    ab = np.zeros((2 * kl + ku + 1, N))
-    diag = kl + ku
-    # upper triangle + mirrored lower triangle (skip diagonal double-add)
-    ab[diag + ra - rb, rb] += vv
-    off = ra != rb
-    ab[diag + rb[off] - ra[off], ra[off]] += vv[off]
-
-    rhs = np.zeros(N)
-    rhs[lpos] = y - C @ p
-    sol = banded_lu_solve(ab, kl, ku, rhs)
-    return p + sol[pos]
-
-
-# ---------------------------------------------------------------------------
-# banded Chow-Lin / Litterman (SURVEY.md §4 scale path: the AR(1) covariance
-# has a closed-form TRIDIAGONAL inverse, Litterman's a pentadiagonal one, so
-# the whole GLS fit — profile likelihood included — runs through the same
-# interleaved banded KKT as the Denton family, O(n b^2) per rho, never
-# materializing Sigma)
-#
-# Identities used (M = unit-sigma2 AR(1) covariance, rho^|i-j| / (1-rho^2)):
-#   * M^{-1} = tridiag(diag=[1, 1+rho^2, ..., 1+rho^2, 1], off=-rho)
-#   * [[M^{-1}, C'], [C, 0]] [w; mu] = [0; b]  =>  mu = -(C M C')^{-1} b
-#     and w = M C' (C M C')^{-1} b — one banded solve yields BOTH the GLS
-#     normal-equation pieces (mu rows) and the distribution step (w rows).
-#   * log det(C M C') = log|det KKT| - log det M^{-1},
-#     log det M^{-1} = log(1 - rho^2)  (det of the AR(1) precision).
-# ---------------------------------------------------------------------------
 
 def _banded_lu_solve_grid_t(
     abt: np.ndarray, kl: int, ku: int, b: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`banded_lu_solve` run data-parallel over a stack of ``G``
-    systems (the rho grid of a profile-likelihood scan), amortizing the
-    per-column Python overhead, with multi-RHS ``b`` of shape (G, n, m).
+    """Solve a stack of ``G`` banded systems ``A x = b`` (a rho grid of a
+    profile-likelihood scan, or ``G = 1``) by Gaussian elimination with
+    partial pivoting, data-parallel over the stack so the per-column Python
+    overhead is paid once; ``b`` is multi-RHS, (G, n, m).  Pure NumPy
+    (scipy is not a dependency); the column loop costs O(n * (kl + ku) * kl)
+    scalar work per system — linear in n, which is the whole point.
     Returns ``(x, logabsdet)``: the (G, n, m) solutions and each system's
     log|det| (sum of log|pivot|).
 
@@ -959,6 +722,8 @@ def _banded_lu_solve_grid_t(
     from numpy.lib.stride_tricks import as_strided
 
     G, n, W = abt.shape
+    if not abt.flags.c_contiguous:
+        raise ValueError("band storage must be C-contiguous")  # reshape would copy
     if W != 2 * kl + ku + 1:
         raise ValueError(f"band storage has {W} rows, expected {2 * kl + ku + 1}")
     diag = kl + ku
@@ -1016,42 +781,38 @@ def _banded_lu_solve_grid_t(
 
 
 def _gls_kkt_indices(C, n: int | None = None, n_diags: int = 2) -> dict:
-    """rho-independent skeleton of the banded GLS KKT: constraint blocks,
-    interleaved ordering, flattened scatter indices, and bandwidth.  Built
-    once per series, reused by every grid evaluation.  ``n_diags`` is the
-    precision band width: 2 (tridiagonal) for Chow-Lin's AR(1), 3
-    (pentadiagonal) for Litterman's random-walk-with-AR(1)-innovations.
+    """Skeleton of the interleaved KKT [[P, C'], [C, 0]] (see the section
+    comment): constraint blocks, interleaved ordering, flattened scatter
+    indices, and bandwidth.  Built once per series, reused by every solve.
+    ``n_diags`` is the band width of P: 2 (tridiagonal) for Chow-Lin's
+    AR(1) precision, 3 (pentadiagonal) for Litterman's, ``order + 1`` for
+    the Denton family's difference Gram.
 
     ``C`` is either the dense constraint matrix, or — for series long
     enough that a dense (n_low, n) would itself be the memory wall, e.g.
     8000 x 96000 = 6 GB — the block form ``(lo, hi, vals)`` with per-row
     contiguous support ``[lo_i, hi_i]`` and ``vals`` the concatenated
     nonzero coefficients (requires explicit ``n``)."""
-    if isinstance(C, np.ndarray):
-        n_low, n = C.shape
+    dense = isinstance(C, np.ndarray)
+    if dense:
+        n = C.shape[1]
         lo, hi = _constraint_blocks(C)
-        lens = hi - lo + 1
-        row_idx = np.repeat(np.arange(n_low), lens)
-        col_idx = _block_col_idx(lo, lens)
-        cvals = C[row_idx, col_idx].astype(float)
     else:
         lo, hi, cvals = C
         if n is None:
             raise ValueError("block-form constraints need an explicit n")
         lo, hi = np.asarray(lo, dtype=int), np.asarray(hi, dtype=int)
-        n_low = lo.shape[0]
-        if np.any(np.diff(hi) <= 0):
-            raise ValueError(
-                "constraint rows must end at strictly increasing columns"
-            )
-        if hi[-1] >= n or lo[0] < 0 or np.any(hi < lo):
+        if lo[0] < 0 or np.any(hi < lo):
             raise ValueError("constraint block support out of range")
-        lens = hi - lo + 1
-        row_idx = np.repeat(np.arange(n_low), lens)
-        col_idx = _block_col_idx(lo, lens)
-        cvals = np.asarray(cvals, dtype=float)
-        if cvals.shape[0] != col_idx.shape[0]:
-            raise ValueError("vals length must equal total block support")
+    if np.any(np.diff(hi) <= 0):
+        raise ValueError("constraint rows must end at strictly increasing columns")
+    n_low = lo.shape[0]
+    lens = hi - lo + 1
+    row_idx = np.repeat(np.arange(n_low), lens)
+    col_idx = _block_col_idx(lo, lens)
+    cvals = C[row_idx, col_idx].astype(float) if dense else np.asarray(cvals, dtype=float)
+    if cvals.shape[0] != col_idx.shape[0]:
+        raise ValueError("vals length must equal total block support")
     pos, lpos, N = _interleave_positions(n, hi)
     # scatter targets: the banded precision's diagonals (x_i, x_{i+e}) for
     # e = 0..n_diags-1, then C entries (x_col, lambda_row) — lambda sits
@@ -1065,9 +826,9 @@ def _gls_kkt_indices(C, n: int | None = None, n_diags: int = 2) -> dict:
     )
     bw = int(np.max(rb - ra))
     return {
-        "n": n, "n_low": n_low, "N": N, "pos": pos, "lpos": lpos,
+        "n_low": n_low, "N": N, "pos": pos, "lpos": lpos,
         "ra": ra, "rb": rb, "cvals": cvals, "bw": bw,
-        "row_idx": row_idx, "col_idx": col_idx, "n_diags": n_diags,
+        "row_idx": row_idx, "col_idx": col_idx,
     }
 
 
@@ -1083,6 +844,88 @@ def _block_col_idx(lo: np.ndarray, lens: np.ndarray) -> np.ndarray:
     step[0] = lo[0] + 1  # cumsum yields lo[0] + 1 - 1 = lo[0] at position 0
     return np.cumsum(step) - 1
 
+
+def _kkt_solve(
+    band: np.ndarray, skel: dict, B_low: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Assemble + solve the interleaved KKT [[P, C'], [C, 0]] [w; mu] =
+    [0; B_low] for a stack of G band matrices P.  ``band`` (G, .) holds P's
+    diagonals e = 0..n_diags-1 concatenated in e-order (the layout of the
+    skeleton's scatter indices); ``B_low`` (n_low, m) sits on the lambda
+    rows.
+
+    Returns ``(mu, w, logdet)``: the lambda rows (G, n_low, m), the x rows
+    (G, n, m) — w minimizes w'Pw subject to C w = B_low — and log|det KKT|
+    per member.  For an invertible P, mu = -(C P^{-1} C')^{-1} B_low and
+    w = P^{-1} C' (C P^{-1} C')^{-1} B_low.
+    """
+    N, pos, lpos = skel["N"], skel["pos"], skel["lpos"]
+    ra, rb, cvals, bw = skel["ra"], skel["rb"], skel["cvals"], skel["bw"]
+    kl = ku = bw
+    diag = kl + ku
+    G = band.shape[0]
+    vv = np.concatenate([band, np.broadcast_to(cvals, (G, cvals.shape[0]))], axis=1)
+    # assemble straight into the transposed layout the strided solver wants
+    # (abt[g, c, diag + i - c] = A[i, c]); the skeleton has no duplicate
+    # (a, b) pairs, so fancy += is a plain scatter
+    abt = np.zeros((G, N, 2 * kl + ku + 1))
+    abt[:, rb, diag + ra - rb] += vv
+    off = ra != rb
+    abt[:, ra[off], diag + rb[off] - ra[off]] += vv[:, off]
+
+    B = np.zeros((G, N, B_low.shape[1]))
+    B[:, lpos, :] = B_low[None, :, :]
+    sol, logdet = _banded_lu_solve_grid_t(abt, kl, ku, B)
+    return sol[:, lpos, :], sol[:, pos, :], logdet
+
+
+def denton_banded(
+    y: np.ndarray,
+    X: np.ndarray,
+    C: np.ndarray,
+    method: str,
+    order: int = 1,
+    criterion: str = "proportional",
+) -> np.ndarray:
+    """Banded-KKT Denton / Denton-Cholette solve: identical output to the
+    dense ``distribution_matrix`` / ``denton_cholette_distribution`` path
+    (asserted in tests to ~1e-8), O(n b^2) instead of O(n^3).  P is the
+    difference-operator Gram in band form.
+
+    ``C`` must have row-contiguous nonzero support with strictly increasing
+    end columns (true for every time-ordered period constraint the
+    relational layer produces — sum/mean blocks or first/last singletons);
+    a ``ValueError`` otherwise, so callers can fall back to the dense path.
+    """
+    n, k = X.shape
+    if k != 1:
+        raise ValueError("denton supports exactly one indicator column")
+    p = X.ravel().astype(float)
+    scale = 1.0 / (p * p.mean()) if criterion == "proportional" else None
+    band = np.concatenate(
+        _difference_gram_band(n, order, scale, trimmed=(method == "denton-cholette"))
+    )
+    skel = _gls_kkt_indices(C, n_diags=order + 1)
+    _mu, w, _logdet = _kkt_solve(band[None, :], skel, (y - C @ p)[:, None])
+    return p + w[0, :, 0]
+
+
+# ---------------------------------------------------------------------------
+# banded Chow-Lin / Litterman precisions (SURVEY.md §4 scale path: the AR(1)
+# covariance has a closed-form TRIDIAGONAL inverse, Litterman's a
+# pentadiagonal one, so the whole GLS fit — profile likelihood included —
+# runs through the same _kkt_solve as the Denton family, O(n b^2) per rho,
+# never materializing Sigma)
+#
+# Identities used (M = unit-sigma2 covariance, P = M^{-1} its band precision):
+#   * Chow-Lin: M^{-1} = tridiag(diag=[1, 1+rho^2, ..., 1+rho^2, 1], off=-rho)
+#   * [[M^{-1}, C'], [C, 0]] [w; mu] = [0; b]  =>  mu = -(C M C')^{-1} b
+#     and w = M C' (C M C')^{-1} b — one banded solve yields BOTH the GLS
+#     normal-equation pieces (mu rows) and the distribution step (w rows).
+#   * log det(C M C') = log|det KKT| - log det M^{-1},
+#     log det M^{-1} = log(1 - rho^2) for the AR(1) precision, 0 for
+#     Litterman's (unit-triangular factors).
+# ---------------------------------------------------------------------------
 
 def _gram_band_chow_lin(rho: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
     """Stacked band diagonals of Chow-Lin's AR(1) precision M^{-1} =
@@ -1124,102 +967,11 @@ def _gram_band_litterman(rho: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarra
 _GRAM_BANDS = {"chow-lin": (_gram_band_chow_lin, 2), "litterman": (_gram_band_litterman, 3)}
 
 
-def _gls_kkt_solve(
-    grid: np.ndarray, skel: dict, B_low: np.ndarray, reg_method: str = "chow-lin"
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Assemble + solve the banded GLS KKT for every rho in ``grid`` with
-    the low-frequency RHS ``B_low`` (n_low, m) placed on the lambda rows.
-
-    Returns ``(Ainv_B, W_B, logdetA)``: ``Ainv_B[g] = (C M C')^{-1} B_low``
-    (G, n_low, m), ``W_B[g] = M C' (C M C')^{-1} B_low`` (G, n, m), and
-    ``log det(C M C')`` per grid member, where M is the unit-scale
-    covariance of ``reg_method``.
-    """
-    n, N = skel["n"], skel["N"]
-    pos, lpos = skel["pos"], skel["lpos"]
-    ra, rb, cvals, bw = skel["ra"], skel["rb"], skel["cvals"], skel["bw"]
-    kl = ku = bw
-    diag = kl + ku
-    rho = np.asarray(grid, dtype=float)
-    G = len(rho)
-
-    gram_fn, _nd = _GRAM_BANDS[reg_method]
-    gram_vv, logdet_prec = gram_fn(rho, n)
-    vv = np.concatenate(
-        [gram_vv, np.broadcast_to(cvals, (G, cvals.shape[0]))], axis=1
-    )
-    # assemble straight into the transposed layout the strided solver wants
-    # (abt[g, c, diag + i - c] = A[i, c]); no duplicate (a, b) pairs by
-    # construction (same invariant the dense denton_banded assembly relies
-    # on), so fancy += is a plain scatter
-    abt = np.zeros((G, N, 2 * kl + ku + 1))
-    abt[:, rb, diag + ra - rb] += vv
-    off = ra != rb
-    abt[:, ra[off], diag + rb[off] - ra[off]] += vv[:, off]
-
-    m = B_low.shape[1]
-    B = np.zeros((G, N, m))
-    B[:, lpos, :] = B_low[None, :, :]
-    sol, logdetK = _banded_lu_solve_grid_t(abt, kl, ku, B)
-    # mu rows carry -(C M C')^{-1} B; w rows carry M C' (C M C')^{-1} B
-    Ainv_B = -sol[:, lpos, :]
-    W_B = sol[:, pos, :]
-    # log det(C M C') = log|det KKT| - log det M^{-1}
-    logdetA = logdetK - logdet_prec
-    return Ainv_B, W_B, logdetA
-
-
 #: memory budget for one banded profile-scan pass; the grid chunk adapts to
 #: it.  The wall-clock cost of the scan is dominated by the PER-COLUMN
 #: Python overhead of the elimination loop, paid once per pass — so the
 #: fewer passes the better, as long as the (chunk, 3bw+1, N) stack fits.
 _BANDED_SCAN_BYTES = 2 << 30
-
-
-def _gls_profile_grid_banded(
-    grid: np.ndarray,
-    y: np.ndarray,
-    CX: np.ndarray,
-    skel: dict,
-    reg_method: str = "chow-lin",
-) -> np.ndarray:
-    """Banded twin of the closed-form scan in :func:`fit_rho_sigma`: the
-    same concentrated objective values, computed through the KKT identities
-    instead of V0 stacks."""
-    k = CX.shape[1]
-    B_low = np.hstack([CX, y.reshape(-1, 1)])
-
-    def nll(sub: np.ndarray) -> np.ndarray:
-        Ainv_B, _W, logdetA = _gls_kkt_solve(sub, skel, B_low, reg_method)
-        return _concentrate(y, CX, Ainv_B[:, :, :k], Ainv_B[:, :, k], logdetA)[0]
-
-    member_bytes = (3 * skel["bw"] + 1) * skel["N"] * 8
-    return _scan(nll, np.asarray(grid, dtype=float), member_bytes, _BANDED_SCAN_BYTES)
-
-
-def _gls_banded_eval(
-    rho_val: float,
-    y: np.ndarray,
-    X: np.ndarray,
-    CX: np.ndarray,
-    skel: dict,
-    reg_method: str = "chow-lin",
-) -> tuple[float, float, np.ndarray, np.ndarray]:
-    """One full GLS evaluation at fixed rho through the banded KKT:
-    concentrated NLL, profiled scale, GLS beta, and distributed series,
-    from ONE factorization."""
-    k = CX.shape[1]
-    B_low = np.hstack([CX, y.reshape(-1, 1)])
-    Ainv_B, W_B, logdetA = _gls_kkt_solve(
-        np.array([rho_val]), skel, B_low, reg_method
-    )
-    nll, s_star, beta, _z = _concentrate(
-        y, CX, Ainv_B[:, :, :k], Ainv_B[:, :, k], logdetA
-    )
-    beta = beta[0]
-    # distribution by linearity: w(resid) = w(y) - w(CX) @ beta
-    y_hat = X @ beta + (W_B[0, :, k] - W_B[0, :, :k] @ beta)
-    return float(nll[0]), float(s_star[0]), beta, y_hat
 
 
 def _banded_CX(X: np.ndarray, C, skel: dict) -> np.ndarray:
@@ -1258,16 +1010,169 @@ def _std_errors(rho: float, sigma2: float, X: np.ndarray, reg_method: str) -> np
     return np.sqrt(np.diagonal(np.linalg.inv(xtsx0)) * sigma2)
 
 
-def _gls_banded_solve_fixed(
-    y: np.ndarray, X: np.ndarray, C, rho: float, reg_method: str
-) -> tuple[np.ndarray, np.ndarray, float, float]:
+# ---------------------------------------------------------------------------
+# the regression fit driver: one fit for Chow-Lin and Litterman over two
+# back ends that differ only in where V^{-1} [CX, y] and log det V come
+# from (V = C Sigma0 C' at unit scale): the closed-form V0 stack, or the
+# banded KKT
+# ---------------------------------------------------------------------------
+
+_PROFILE_OPTIMIZERS = ("brent-profile", "profile")
+_SIMPLEX_OPTIMIZERS = ("nelder-mead", "powell", "l-bfgs-b")
+
+
+def _regression_backend(
+    y: np.ndarray, X: np.ndarray, C, method: str, banded: bool
+) -> tuple[Callable[[np.ndarray], np.ndarray], Callable[[float], tuple]]:
+    """``(scan, evaluate)`` of the concentrated GLS fit of ``method``:
+    ``scan(grid)`` is the profile NLL over a rho grid, ``evaluate(rho)`` is
+    ``(nll, s_star, beta, y_hat)`` at one rho.
+
+    ``banded=False`` takes V^{-1} [CX, y] from the closed-form V0 stack and
+    distributes through Sigma0 C' z by the O(n) recursions; ``banded=True``
+    takes it from the banded KKT, whose w rows Sigma0 C' V^{-1} [CX, y] give
+    y_hat by linearity.  ``C`` may be in block form only when banded."""
     y = np.asarray(y, dtype=float)
-    n, _k = X.shape
-    _gram_fn, n_diags = _GRAM_BANDS[reg_method]
-    skel = _gls_kkt_indices(C, n=n, n_diags=n_diags)
-    CX = _banded_CX(X, C, skel)
-    nll, s_star, beta, y_hat = _gls_banded_eval(rho, y, X, CX, skel, reg_method)
-    return y_hat, beta, s_star, nll
+    n, k = X.shape
+    if banded:
+        gram_fn, n_diags = _GRAM_BANDS[method]
+        skel = _gls_kkt_indices(C, n=n, n_diags=n_diags)
+        CX = _banded_CX(X, C, skel)
+        B_low = np.column_stack([CX, y])
+
+        def solve(grid: np.ndarray) -> tuple:
+            band, logdet_prec = gram_fn(grid, n)
+            mu, w, logdet_kkt = _kkt_solve(band, skel, B_low)
+            return -mu, logdet_kkt - logdet_prec, w
+
+        def distribute(rho: float, beta: np.ndarray, z: np.ndarray, w: np.ndarray) -> np.ndarray:
+            return X @ beta + (w[0, :, k] - w[0, :, :k] @ beta)
+
+        member_bytes, budget = (3 * skel["bw"] + 1) * skel["N"] * 8, _BANDED_SCAN_BYTES
+    else:
+        v0 = _v0_grid_fn(C, COVARIANCE_BUILDERS[method])
+        CX = C @ X
+        rhs = np.column_stack([CX, y])
+
+        def solve(grid: np.ndarray) -> tuple:
+            V0 = v0(grid)
+            _sign, logdet = np.linalg.slogdet(V0)
+            return np.linalg.solve(V0, np.broadcast_to(rhs, (len(V0), *rhs.shape))), logdet, None
+
+        def distribute(rho: float, beta: np.ndarray, z: np.ndarray, w: None) -> np.ndarray:
+            return X @ beta + _SIGMA_TIMES[method](rho, C.T @ z)
+
+        # a few (n_low, n_low) and (n,) temporaries per grid member
+        member_bytes, budget = 64 * (C.shape[0] ** 2 + n), _V0_SCAN_BYTES
+
+    def terms(grid: np.ndarray) -> tuple:
+        Vinv_B, logdet, w = solve(grid)
+        return _concentrate(y, CX, Vinv_B[..., :k], Vinv_B[..., k], logdet), w
+
+    def scan(grid: np.ndarray) -> np.ndarray:
+        return _scan(lambda g: terms(g)[0][0], np.asarray(grid, dtype=float), member_bytes, budget)
+
+    def evaluate(rho: float) -> tuple[float, float, np.ndarray, np.ndarray]:
+        (nll, s_star, beta, z), w = terms(np.array([rho]))
+        return float(nll[0]), float(s_star[0]), beta[0], distribute(rho, beta[0], z[0], w)
+
+    return scan, evaluate
+
+
+def _regression_fit(
+    y: np.ndarray,
+    X: np.ndarray,
+    C,
+    method: str,
+    optimizer_kwargs: dict | None,
+    banded: bool,
+) -> tuple[np.ndarray, FitResult, dict]:
+    """Bounded ML fit of (rho, sigma2) for ``method`` ('chow-lin' or
+    'litterman') with rho in (1e-5, 1-1e-5), the reference's feasible region
+    (ts_disagg.py:438-448), plus the distribution step:
+    ``(y_hat, FitResult, info)``.
+
+    Default strategy differs from the reference (which runs a 2-D scipy
+    solver from (0.8, 0.8)): sigma2 is concentrated out analytically,
+    leaving a 1-D profile likelihood in rho that :func:`_profile_fit`
+    searches through the back end's ``scan``; y_hat, beta and s_star come
+    from the ``evaluate`` at rho_star that search already ran.
+
+    ``optimizer_kwargs['method']`` is honored, not ignored: ``'nelder-mead'``
+    runs a real bounded 2-D Nelder-Mead on the reference's objective from the
+    reference's x0=(0.8, 0.8) (ts_disagg.py:441-448), so ``return_optim_res``
+    consumers get scipy-semantics ``nit``/``nfev``, and then ``evaluate``
+    once at its rho.  ``'powell'`` and ``'l-bfgs-b'`` (scipy solvers the
+    reference passes through; scipy is not a dependency here) are solved via
+    the same bounded Nelder-Mead with the substitution recorded in
+    ``FitResult.message``.  Unknown method names raise ``ValueError``
+    instead of being silently accepted; so does any but the profile
+    optimizer on the banded back end.  ``optimizer_kwargs['options']``
+    supports ``xatol``/``fatol``/``maxiter``.
+    """
+    kwargs = dict(optimizer_kwargs or {})
+    opt = str(kwargs.get("method", "brent-profile")).lower()
+    if banded and opt not in _PROFILE_OPTIMIZERS:
+        raise ValueError(
+            f"banded GLS fits support only the concentrated profile optimizer, got method={opt!r}"
+        )
+    if opt not in _PROFILE_OPTIMIZERS + _SIMPLEX_OPTIMIZERS:
+        raise ValueError(
+            f"Unsupported optimizer method {opt!r}: use 'nelder-mead', "
+            "'powell', 'l-bfgs-b', or omit for the concentrated "
+            "Brent-profile default."
+        )
+    scan, evaluate = _regression_backend(y, X, C, method, banded)
+    if opt in _SIMPLEX_OPTIMIZERS:
+        options = dict(kwargs.get("options") or {})
+        x, fx, nit, nfev = _nelder_mead_minimize(
+            lambda params: negative_loglik(params, y, X, C, COVARIANCE_BUILDERS[method]),
+            np.full(2, 0.8),  # reference x0 (ts_disagg.py:441)
+            lower=np.array([_RHO_LO, 1e-5]),
+            upper=np.array([_RHO_HI, np.inf]),
+            xatol=float(options.get("xatol", 1e-6)),
+            fatol=float(options.get("fatol", 1e-8)),
+            max_iter=options.get("maxiter"),
+        )
+        message = (
+            "converged"
+            if opt == "nelder-mead"
+            else f"method '{opt}' solved via bounded Nelder-Mead "
+            "(scipy is not a dependency of this engine)"
+        )
+        result = FitResult(x=x, fun=fx, nit=nit, nfev=nfev, message=message)
+        rho, sigma2 = x
+        _nll, _s, beta, y_hat = evaluate(rho)
+    else:
+        rho, (nll, s_star, beta, y_hat), nfev = _profile_fit(scan, evaluate)
+        sigma2 = s_star / (1.0 + rho)
+        result = FitResult(
+            x=np.array([rho, sigma2]), fun=nll, nfev=nfev, extras={"scaled_sigma2": s_star}
+        )
+    info = {
+        "beta": beta,
+        "rho": rho,
+        "sigma2": sigma2,
+        "std_beta": _std_errors(rho, sigma2, X, method),
+    }
+    return y_hat, result, info
+
+
+def fit_rho_sigma(
+    y: np.ndarray,
+    X: np.ndarray,
+    C: np.ndarray,
+    cov_builder: Callable[[float, float, int], np.ndarray],
+    optimizer_kwargs: dict | None = None,
+) -> FitResult:
+    """The closed-form back end's :class:`FitResult` of
+    :func:`_regression_fit` for the method whose builder in
+    ``COVARIANCE_BUILDERS`` is ``cov_builder`` (``ValueError`` for any
+    other builder)."""
+    method = next((m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder), None)
+    if method is None:
+        raise ValueError("cov_builder must be one of COVARIANCE_BUILDERS")
+    return _regression_fit(y, X, C, method, optimizer_kwargs, banded=False)[1]
 
 
 def chow_lin_banded_solve(
@@ -1277,50 +1182,8 @@ def chow_lin_banded_solve(
     distribution/GLS machinery alone, for callers that bring their own rho
     (and for parity testing against the dense pipeline config-by-config,
     the direct analog of the Denton banded-vs-dense battery)."""
-    return _gls_banded_solve_fixed(y, X, C, rho, "chow-lin")
-
-
-def _gls_banded_fit(
-    y: np.ndarray,
-    X: np.ndarray,
-    C,
-    reg_method: str,
-    optimizer_kwargs: dict | None = None,
-) -> tuple[np.ndarray, "FitResult", dict]:
-    """Full banded fit of ``reg_method`` ('chow-lin' or 'litterman'): the
-    same :func:`_profile_fit` search as :func:`fit_rho_sigma`, with every
-    evaluation a banded KKT solve."""
-    kwargs = dict(optimizer_kwargs or {})
-    method = str(kwargs.get("method", "brent-profile")).lower()
-    if method not in ("brent-profile", "profile"):
-        raise ValueError(
-            "banded GLS fits support only the concentrated profile "
-            f"optimizer, got method={method!r}"
-        )
-    y = np.asarray(y, dtype=float)
-    n, k = X.shape
-    _gram_fn, n_diags = _GRAM_BANDS[reg_method]
-    skel = _gls_kkt_indices(C, n=n, n_diags=n_diags)
-    CX = _banded_CX(X, C, skel)
-
-    rho_star, (nll_star, s_star, beta, y_hat), nfev = _profile_fit(
-        lambda grid: _gls_profile_grid_banded(grid, y, CX, skel, reg_method),
-        lambda rho: _gls_banded_eval(rho, y, X, CX, skel, reg_method),
-    )
-    sigma2 = s_star / (1.0 + rho_star)
-    result = FitResult(
-        x=np.array([rho_star, sigma2]),
-        fun=nll_star,
-        nfev=nfev,
-        extras={"scaled_sigma2": s_star},
-    )
-    info = {
-        "beta": beta,
-        "rho": rho_star,
-        "sigma2": sigma2,
-        "std_beta": _std_errors(rho_star, sigma2, X, reg_method),
-    }
-    return y_hat, result, info
+    nll, s_star, beta, y_hat = _regression_backend(y, X, C, "chow-lin", True)[1](rho)
+    return y_hat, beta, s_star, nll
 
 
 def chow_lin_banded_fit(
@@ -1328,7 +1191,7 @@ def chow_lin_banded_fit(
     X: np.ndarray,
     C,
     optimizer_kwargs: dict | None = None,
-) -> tuple[np.ndarray, "FitResult", dict]:
+) -> tuple[np.ndarray, FitResult, dict]:
     """Full banded Chow-Lin solve — the very-long-series twin of
     :func:`solve_series`' regression path, with the SAME two-level
     profile-likelihood grid (identical rho semantics) but O(n b^2) per
@@ -1340,7 +1203,7 @@ def chow_lin_banded_fit(
     Raises ``ValueError`` for non-contiguous constraint support (same
     contract as :func:`denton_banded`).
     """
-    return _gls_banded_fit(y, X, C, "chow-lin", optimizer_kwargs)
+    return _regression_fit(y, X, C, "chow-lin", optimizer_kwargs, banded=True)
 
 
 #: from this high-frequency length on, solve_series takes the banded KKT
@@ -1392,19 +1255,10 @@ def solve_series(
             # non-contiguous constraints or a non-profile optimizer request
             # (both only realistic at small n).
             try:
-                return _gls_banded_fit(y, X, C, method, optimizer_kwargs)
+                return _regression_fit(y, X, C, method, optimizer_kwargs, banded=True)
             except ValueError:
                 pass
-        result = fit_rho_sigma(y, X, C, COVARIANCE_BUILDERS[method], optimizer_kwargs)
-        rho, sigma2 = result.x
-        y_hat, beta, _s, _nll = _gls_solve_fixed(y, X, C, rho, method)
-        info = {
-            "beta": beta,
-            "rho": rho,
-            "sigma2": sigma2,
-            "std_beta": _std_errors(rho, sigma2, X, method),
-        }
-        return y_hat, result, info
+        return _regression_fit(y, X, C, method, optimizer_kwargs, banded=False)
 
     if k != 1:
         raise ValueError(f"{method} supports exactly one indicator column")
