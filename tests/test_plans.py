@@ -524,7 +524,8 @@ def test_disagg_shared_aggregates_have_one_consumer(spark):
     no InMemoryRelation whose cold materialization the kernel-union /
     broadcast consumers race to compute (the lineitem month aggregation
     ran 2-4x per action in the pre-r14 shape).  One FileScan per source
-    table and zero persists."""
+    table and zero persists.  The disagg queries leave series eligibility
+    to the kernel (errors='skip'), so no eligibility Window either."""
     plan = _plan(Q.QUERIES["disagg_chow_lin_suppliers"](spark, SF))
     assert "InMemoryRelation" not in plan, plan
     assert plan.count("Scan parquet") == 1, plan
@@ -532,6 +533,7 @@ def test_disagg_shared_aggregates_have_one_consumer(spark):
     # of two aggregates over the same frame
     assert "Expand" in plan, plan
     assert "Union" not in plan, plan
+    assert "Window" not in plan, plan
 
     plan = _plan(Q.QUERIES["disagg_litterman_nation"](spark, SF))
     assert "InMemoryRelation" not in plan, plan
@@ -539,6 +541,17 @@ def test_disagg_shared_aggregates_have_one_consumer(spark):
     # (low: o+c+n, ind: l+o+c+n) — 7 scans, none duplicated by a span
     # aggregation or a cached-subtree race
     assert plan.count("Scan parquet") == 7, plan
+    assert "Window" not in plan, plan
+
+    # orders and customer once per union leg (low, ind) — no span
+    # aggregates, no semi-joins
+    plan = _plan(Q.QUERIES["disagg_denton_mean"](spark, SF))
+    assert "InMemoryRelation" not in plan, plan
+    assert plan.count("Scan parquet") == 4, plan
+
+    plan = _plan(Q.QUERIES["disagg_denton_companion"](spark, SF))
+    assert "InMemoryRelation" not in plan, plan
+    assert plan.count("Scan parquet") == 2, plan  # orders + customer once
 
     plan = _plan(Q.QUERIES["part_basket_lift"](spark, SF))
     assert "InMemoryRelation" not in plan, plan
@@ -546,10 +559,12 @@ def test_disagg_shared_aggregates_have_one_consumer(spark):
 
 
 def test_disagg_kernel_width_is_pinned(spark):
-    """The CPU-dense GLS kernel stage must keep cluster width: the
-    explicit repartition (exempt from AQE coalescing) feeds the window
-    AND the grouped kernel — without it the byte-tiny window exchange
-    coalesced to 2 tasks and serialized 1000 solves onto 2 cores."""
-    for name in ("disagg_chow_lin_suppliers", "disagg_litterman_nation"):
+    """The CPU-dense GLS kernel stage must keep cluster width: every
+    kernel-backed disagg query feeds its grouped kernel through the
+    explicit repartition that `_kernel_stage` adds (REPARTITION_BY_NUM,
+    exempt from AQE coalescing) — without it AQE coalesced the byte-tiny
+    kernel exchange to 2 tasks and serialized 1000 solves onto 2 cores."""
+    for name in sorted(n for n in Q.QUERIES if n.startswith("disagg_")):
         plan = _plan(Q.QUERIES[name](spark, SF))
+        assert "FlatMapGroupsInPandas" in plan, (name, plan)
         assert "REPARTITION_BY_NUM" in plan, (name, plan)

@@ -164,6 +164,69 @@ def test_spark_errors_skip_all_series_fail(synthetic_series):
     assert list(got.columns) == ["series_id", "ts", "y_hat"]
 
 
+def _mixed_fleet():
+    """One healthy six-year chow-lin series plus one series per input the
+    kernel rejects, in long format: ``late`` (indicator starts after the
+    target), ``gap`` (a missing month), ``hole`` (a missing low year),
+    ``two`` (two low periods: no inferable frequency) and ``collinear`` (a
+    constant indicator beside the intercept: ``LinAlgError``)."""
+    rng = np.random.default_rng(5)
+    years = pd.date_range("2000-01-01", periods=6, freq="YS")
+    months = pd.date_range("2000-01-01", periods=72, freq="MS")
+    shapes = {  # series -> (low stamps, indicator stamps)
+        "healthy": (years, months),
+        "late": (years, months[2:]),
+        "gap": (years, months.delete(29)),
+        "hole": (years.delete(2), months),
+        "two": (years[1:3], months),
+        "collinear": (years, months),
+    }
+    low, ind = [], []
+    for sid, (ts_low, ts_ind) in shapes.items():
+        n = len(ts_ind)
+        x1 = 3.0 if sid == "collinear" else rng.uniform(1, 3, n) + np.linspace(0, 2, n)
+        y = rng.uniform(200, 400, len(ts_low))
+        low.append(pd.DataFrame({"series_id": sid, "ts": ts_low, "y": y}))
+        ind.append(
+            pd.DataFrame({"series_id": sid, "ts": ts_ind, "x1": x1, "intercept": 1.0})
+        )
+    return pd.concat(low, ignore_index=True), pd.concat(ind, ignore_index=True)
+
+
+def test_spark_errors_semantics_mixed_fleet(spark):
+    """``errors='skip'`` returns only the series the kernel can solve, each
+    meeting C·ŷ = y; ``errors='raise'`` fails on each rejected series alone
+    with an error naming it.  The disaggregation queries rely on this gate
+    to drop ineligible series."""
+    low_pdf, ind_pdf = _mixed_fleet()
+    low, ind = spark.createDataFrame(low_pdf), spark.createDataFrame(ind_pdf)
+
+    got = disaggregate(low, ind, method="chow-lin", errors="skip").toPandas()
+    assert set(got["series_id"]) == {"healthy"}
+    y_hat = got.set_index("ts")["y_hat"].sort_index()
+    want = low_pdf[low_pdf["series_id"] == "healthy"]["y"].to_numpy()
+    np.testing.assert_allclose(
+        y_hat.groupby(y_hat.index.year).sum().to_numpy(), want, rtol=1e-9
+    )
+
+    reasons = {
+        "late": "Start date found on high frequency data",
+        "gap": "Indicator data high_freq_df does not have a valid time index",
+        "hole": "Low frequency dataframe does not have a valid time index",
+        "two": "Low frequency dataframe does not have a valid time index",
+        "collinear": "Singular matrix",
+    }
+    for sid, reason in reasons.items():
+        one = F.col("series_id") == sid
+        with pytest.raises(
+            Exception,
+            match=f"RuntimeError: disaggregation failed for series '{sid}': {reason}",
+        ):
+            disaggregate(
+                low.filter(one), ind.filter(one), method="chow-lin", errors="raise"
+            ).collect()
+
+
 def test_fit_reports(multi_series):
     low_sdf, ind_sdf, _ = multi_series
     rep = fit_reports(low_sdf, ind_sdf, method="chow-lin", agg_func="sum").toPandas()

@@ -1113,12 +1113,9 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
     demonstrates the engine's scale thesis: the dense kernel is per-series
     tiny; throughput comes from hash-partitioned parallelism.
 
-    Eligibility mirrors the engine's own input contract in SQL (so the
-    oracle and the kernel agree on which series solve): the indicator must
-    start in January (reference raises when high-freq data starts after the
-    low-freq series, ts_disagg.py:233-240), be gap-free (a DatetimeIndex
-    with holes has no inferable frequency), and span >= 3 years (a 2-point
-    GLS with k=2 regressors is degenerate)."""
+    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    decides which series solve: errors='skip' drops a series it rejects.
+    Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import _SRC_IND, _SRC_LOW, _TAG
     from tsdisagg_spark.spark.disagg import _disaggregate_unioned
 
@@ -1152,39 +1149,7 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
         F.sum("x1").alias("x1"),
         F.grouping("ts").alias("is_low"),
     )
-    # pin the per-series width BEFORE the window: the explicit repartition
-    # is exempt from AQE coalescing and its hash(series_id) partitioning is
-    # reused by the window AND the kernel stage downstream (pre_partitioned
-    # below) — without it AQE coalesced the byte-tiny window exchange to 2
-    # tasks and the CPU-dense GLS kernel stage rode it, serializing 1000
-    # solves onto 2 cores
-    from tsdisagg_spark.operators._par import pin_compute_parallelism
-
-    gs = pin_compute_parallelism(gs, "series_id")
-    # eligibility as window flags over the tiny per-series row set (month
-    # rows carry is_low=0, year rows is_low=1) — no second consumer, no
-    # broadcast join: n_years is the count of year-level rows (one per
-    # distinct year by construction)
-    w = Window.partitionBy("series_id")
     is_month = F.col("is_low") == 0
-    gs = (
-        gs.withColumn(
-            "first_m", F.min(F.when(is_month, F.col("ts"))).over(w)
-        )
-        .withColumn("last_m", F.max(F.when(is_month, F.col("ts"))).over(w))
-        .withColumn(
-            "n_months", F.count(F.when(is_month, F.lit(1))).over(w)
-        )
-        .withColumn(
-            "n_years", F.count(F.when(~is_month, F.lit(1))).over(w)
-        )
-        .filter(
-            (F.month("first_m") == 1)
-            & (F.col("n_months")
-               == F.months_between("last_m", "first_m").cast("long") + 1)
-            & (F.col("n_years") >= 3)
-        )
-    )
     unioned = gs.select(
         "series_id",
         F.when(is_month, F.col("ts")).otherwise(F.col("yts")).alias("ts"),
@@ -1199,10 +1164,6 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
         method="chow-lin",
         agg_func="sum",
         errors="skip",
-        # the pinned hash(series_id) width above survives the window and
-        # the narrow projections — the kernel reuses it, zero extra
-        # exchange
-        pre_partitioned=True,
     )
     # one aggregation pass over the kernel output; no semi-join back to `low`
     # (it would re-scan lineitem — every 12-month year group is a low year
@@ -1340,13 +1301,11 @@ def disagg_litterman_nation(spark, sf_dir):
     oracle-backed: yearly customer-nation revenue to months guided by
     monthly shipped value, re-aggregated over complete years so the
     Litterman covariance path proves C @ y_hat = y relationally.
-    Eligibility mirrors the engine's input contract in SQL: indicator must
-    start no later than the low series (ts_disagg.py:233-240 raises
-    otherwise), be gap-free, and span >= 3 low periods."""
-    from tsdisagg_spark.operators._par import pin_compute_parallelism
-    from tsdisagg_spark.spark.disagg import (
-        _SRC_IND, _TAG, _disaggregate_unioned, _tagged_union,
-    )
+
+    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    decides which series solve: errors='skip' drops a series it rejects.
+    Only the oracle restates that contract, as its `elig` CTE."""
+    from tsdisagg_spark.spark.disagg import disaggregate
 
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -1357,15 +1316,9 @@ def disagg_litterman_nation(spark, sf_dir):
         .join(n, c["c_nationkey"] == n["n_nationkey"])
         .select("o_orderkey", "o_orderdate", "o_totalprice", "n_name")
     )
-    # Each source aggregate is built ONCE and goes straight into the
-    # tagged kernel union; eligibility is evaluated AFTER the union with
-    # window flags over the tiny per-series row set.  The previous shape
-    # (persist each aggregate, span-agg both, join spans, broadcast the
-    # eligible set back into both legs) gave every cached aggregate two
-    # consumers whose leading query stages raced under AQE and computed
-    # the orders x customer and lineitem join subtrees twice each
-    # (stage-profiled: three near-duplicate stage pairs, ~126s task time
-    # loaded; the ind subtree ran twice in round 13's quiet profile).
+    # each source aggregate must have one consumer, the kernel's tagged
+    # union: under a persist or a second reader the union legs race to
+    # compute the cold shared subtree (measured: each join subtree ran twice)
     low = ordn.groupBy(
         F.col("n_name").alias("series_id"),
         F.date_trunc("year", "o_orderdate").alias("ts"),
@@ -1382,41 +1335,8 @@ def disagg_litterman_nation(spark, sf_dir):
         .agg(F.sum("l_extendedprice").alias("x1"))
         .withColumn("intercept", F.lit(1.0))
     )
-    unioned, ind_cols = _tagged_union(low, ind, "series_id", "ts", "y")
-    cols = unioned.columns
-    # pin the per-series width before the window so the byte-tiny exchange
-    # keeps cluster parallelism and the kernel stage reuses it (same fix
-    # as disagg_chow_lin_suppliers)
-    unioned = pin_compute_parallelism(unioned, "series_id")
-    w = Window.partitionBy("series_id")
-    is_ind = F.col(_TAG) == _SRC_IND
-    unioned = (
-        unioned.withColumn("hi", F.min(F.when(is_ind, F.col("ts"))).over(w))
-        .withColumn("last_m", F.max(F.when(is_ind, F.col("ts"))).over(w))
-        .withColumn("n_months", F.count(F.when(is_ind, F.lit(1))).over(w))
-        .withColumn("lo", F.min(F.when(~is_ind, F.col("ts"))).over(w))
-        .withColumn("last_y", F.max(F.when(~is_ind, F.col("ts"))).over(w))
-        .withColumn("n_years", F.count(F.when(~is_ind, F.lit(1))).over(w))
-        .filter(
-            (F.col("hi") <= F.col("lo"))
-            & (F.col("n_months")
-               == F.months_between("last_m", "hi").cast("long") + 1)
-            & (F.col("n_years")
-               == (F.months_between("last_y", "lo") / 12).cast("long") + 1)
-            & (F.col("n_years") >= 3)
-        )
-        .select(*cols)
-    )
-    out = _disaggregate_unioned(
-        unioned,
-        ind_cols,
-        method="litterman",
-        agg_func="sum",
-        errors="skip",
-        pre_partitioned=True,
-    )
+    out = disaggregate(low, ind, method="litterman", errors="skip")
     return _complete_years(out)
-
 
 @query(
     "disagg_denton_mean",
@@ -1441,7 +1361,7 @@ def disagg_litterman_nation(spark, sf_dir):
                         FROM low GROUP BY 1) l
                     ON i.series_id = l.series_id
                   WHERE i.hi <= l.lo AND i.gap_free AND l.low_gap_free
-                    AND l.ny >= 2),
+                    AND l.ny >= 3),
          union_m AS (SELECT series_id, mts FROM ind_m JOIN elig USING (series_id)
                      UNION SELECT series_id, ts AS mts
                            FROM low JOIN elig USING (series_id)),
@@ -1461,7 +1381,11 @@ def disagg_denton_mean(spark, sf_dir):
     per market segment interpolated to months along average monthly order
     value, then re-AVERAGED over complete years — with C rows of 1/k, the
     monthly y_hat must average back to the yearly mean exactly
-    (conversion_matrix 'mean' rows; ts_disagg.py agg_func='mean')."""
+    (conversion_matrix 'mean' rows; ts_disagg.py agg_func='mean').
+
+    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    decides which series solve: errors='skip' drops a series it rejects.
+    Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import disaggregate
 
     o = t(spark, sf_dir, "orders")
@@ -1472,43 +1396,15 @@ def disagg_denton_mean(spark, sf_dir):
     low = seg.groupBy(
         F.col("c_mktsegment").alias("series_id"),
         F.date_trunc("year", "o_orderdate").alias("ts"),
-    ).agg(F.avg("o_totalprice").alias("y")).persist()
+    ).agg(F.avg("o_totalprice").alias("y"))
     ind = seg.groupBy(
         F.col("c_mktsegment").alias("series_id"),
         F.date_trunc("month", "o_orderdate").alias("ts"),
-    ).agg(F.avg("o_totalprice").alias("x1")).persist()
-    # eligibility mirrors the engine's input contract (a month gap makes the
-    # indicator's frequency uninferable and errors='skip' drops the series;
-    # the oracle must agree on which series solve)
-    ind_span = ind.groupBy("series_id").agg(
-        F.min("ts").alias("hi"),
-        F.max("ts").alias("last_m"),
-        F.count(F.lit(1)).alias("n_months"),
-    )
-    low_span = low.groupBy("series_id").agg(
-        F.min("ts").alias("lo"),
-        F.max("ts").alias("last_y"),
-        F.count(F.lit(1)).alias("n_years"),
-    )
-    elig = (
-        ind_span.join(low_span, "series_id")
-        .filter(
-            (F.col("hi") <= F.col("lo"))
-            & (F.col("n_months")
-               == F.months_between("last_m", "hi").cast("long") + 1)
-            & (F.col("n_years")
-               == (F.months_between("last_y", "lo") / 12).cast("long") + 1)
-            & (F.col("n_years") >= 2)
-        )
-        .select("series_id")
-    )
-    low = low.join(F.broadcast(elig), "series_id", "left_semi")
-    ind = ind.join(F.broadcast(elig), "series_id", "left_semi")
+    ).agg(F.avg("o_totalprice").alias("x1"))
     out = disaggregate(
         low, ind, method="denton-cholette", agg_func="mean", errors="skip"
     )
     return _complete_years(out, "y_mean", F.avg)
-
 
 @query(
     "disagg_denton_companion",
@@ -1520,7 +1416,7 @@ def disagg_denton_mean(spark, sf_dir):
                  GROUP BY 1, 2),
          elig AS (SELECT series_id FROM low GROUP BY 1
                   HAVING COUNT(*) = datediff('quarter', MIN(ts), MAX(ts)) + 1
-                     AND COUNT(*) >= 2)
+                     AND COUNT(*) >= 3)
     SELECT low.series_id, low.ts, ROUND(low.y, 2) AS y
     FROM low JOIN elig USING (series_id)
     """,
@@ -1532,7 +1428,11 @@ def disagg_denton_companion(spark, sf_dir):
     mirroring ts_disagg.py:285-299), then re-summed per quarter — the
     companion timeline covers every low quarter with exactly 3 months, so
     the re-aggregation must reproduce ALL quarterly values (no completeness
-    filter needed, which itself checks the synthesized timeline's shape)."""
+    filter needed, which itself checks the synthesized timeline's shape).
+
+    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    decides which series solve: errors='skip' drops a series it rejects.
+    Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import disaggregate
 
     o = t(spark, sf_dir, "orders")
@@ -1545,24 +1445,7 @@ def disagg_denton_companion(spark, sf_dir):
             F.date_trunc("quarter", "o_orderdate").alias("ts"),
         )
         .agg(F.sum("o_totalprice").alias("y"))
-        .persist()
     )
-    # a quarter gap makes the low index's frequency uninferable, so
-    # errors='skip' would drop the series — the oracle applies the same rule
-    elig = (
-        low.groupBy("series_id")
-        .agg(
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
-            F.count(F.lit(1)).alias("nq"),
-        )
-        .filter(
-            (F.col("nq") == (F.months_between("hi", "lo") / 3).cast("long") + 1)
-            & (F.col("nq") >= 2)
-        )
-        .select("series_id")
-    )
-    low = low.join(F.broadcast(elig), "series_id", "left_semi")
     out = disaggregate(
         low, method="denton", agg_func="sum", target_freq="MS", errors="skip"
     )

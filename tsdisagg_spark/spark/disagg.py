@@ -249,13 +249,12 @@ def _disaggregate_unioned(
     :func:`_kernel_stage`).
 
     Callers that can DERIVE the union in one pass over a shared upstream
-    aggregate (e.g. via grouping sets, or with post-union window
-    eligibility) use this entry point so the shared subtree has exactly ONE
-    consumer in the physical plan — the separate low/indicator legs of the
-    internal union otherwise race to materialize a cold cached upstream and
-    compute it once per leg (measured: the lineitem month aggregation ran
-    2-4x per action in disagg_chow_lin_suppliers before the round-14
-    restructure)."""
+    aggregate (e.g. via grouping sets) use this entry point so the shared
+    subtree has exactly ONE consumer in the physical plan — the separate
+    low/indicator legs of the internal union otherwise race to materialize
+    a cold cached upstream and compute it once per leg (measured: the
+    lineitem month aggregation ran 2-4x per action in
+    disagg_chow_lin_suppliers before the round-14 restructure)."""
 
     def emit(low_df, high_df) -> pd.DataFrame:
         out = disaggregate_full(
