@@ -243,8 +243,8 @@ def test_denton_banded_equals_dense(method, criterion, order, agg, backcast=0):
     else:
         D = kernels.denton_cholette_distribution(n, n_years, C, X, order, criterion)
     dense = p + D @ (y - C @ p)
-    banded = kernels.denton_banded(y, X, C, method, order, criterion)
-    np.testing.assert_allclose(banded, dense, atol=1e-7)
+    y_hat = kernels.solve_series(y, X, C, method, criterion=criterion, order=order)[0]
+    np.testing.assert_allclose(y_hat, dense, atol=1e-7)
 
 
 @pytest.mark.parametrize("method", ["denton", "denton-cholette"])
@@ -252,15 +252,16 @@ def test_denton_banded_equals_dense(method, criterion, order, agg, backcast=0):
 @pytest.mark.parametrize("order", [1, 2])
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
 def test_denton_banded_equals_dense_backcast(method, criterion, order, agg):
-    """The same battery with 13 leading unconstrained points, which the
-    interleaved KKT places before the first constraint row."""
+    """The same battery with 13 leading unconstrained points, which precede
+    the first constraint row."""
     test_denton_banded_equals_dense(method, criterion, order, agg, backcast=13)
 
 
 def test_denton_banded_long_series():
-    """12k-point series: dense would be ~1.7e12 flops / 1.2 GB for Sigma;
-    the banded path solves in under ~2 s and satisfies the constraint to
-    machine precision.  Also exercised through solve_series dispatch."""
+    """12k-point series through solve_series: a dense n x n solve would be
+    ~1.7e12 flops and 1.2 GB for Sigma; the least-norm solve works in
+    matrices of C's shape and satisfies the constraint to machine
+    precision."""
     rng = np.random.default_rng(1)
     n_years, factor = 1000, 12
     n = n_years * factor
@@ -276,6 +277,99 @@ def test_denton_banded_long_series():
     # smoothness sanity: the solution tracks the indicator's shape
     corr = np.corrcoef(y_hat, x)[0, 1]
     assert corr > 0.9
+
+
+def test_denton_matches_fixture():
+    """Differential test against the banded-KKT Denton solve of commit
+    42eb224 (tests/denton_fixture.py: both methods and criteria, every
+    agg_func, h = 1 and 2 over 3, 10 and 166 years yearly->monthly and 10
+    years quarterly->monthly, h = 3 up to 40 years, backcast 0 and 13).
+    y_hat matches to 1e-11 relative for h <= 2 and 1e-8 for h = 3, and
+    C y_hat = y to 1e-14 relative, on every case."""
+    import denton_fixture
+
+    ref = np.load(os.path.join(HERE, "data", "denton_fixture.npz"))
+    n_cases = 0
+    for i, (key, y, X, C) in enumerate(denton_fixture.cases()):
+        method, criterion, order = key[:3]
+        want = ref["y_hat"][ref["offsets"][i] : ref["offsets"][i + 1]]
+        y_hat = kernels.solve_series(y, X, C, method, criterion=criterion, order=order)[0]
+        rel = np.abs(y_hat[denton_fixture.stored(key)] - want).max() / np.abs(want).max()
+        assert rel <= (1e-11 if order <= 2 else 1e-8), (key, rel)
+        assert np.abs(C @ y_hat - y).max() <= 1e-14 * np.abs(y).max(), key
+        n_cases += 1
+    assert n_cases == len(ref["offsets"]) - 1 == 384
+
+
+@pytest.mark.parametrize("years", [100, 166])
+@pytest.mark.parametrize("criterion", ["proportional", "additive"])
+@pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
+def test_denton_order_two_meets_constraint(years, criterion, agg):
+    """Denton with h = 2 below 2000 points meets C y_hat = y to rounding
+    (on these inputs the dense (Delta'Delta)^{-1} form it replaces missed by
+    6e-11 to 2.5e-7 relative)."""
+    rng = np.random.default_rng([12, years])
+    n = years * 12
+    t = np.arange(n)
+    x = 50.0 + 0.4 * t + 5.0 * np.sin(t / 5.0) + rng.normal(0.0, 2.0, n)
+    C = kernels.conversion_matrix(np.arange(years), np.repeat(np.arange(years), 12), 12, agg)
+    y = C @ (2.0 * x + 10.0 + np.cumsum(rng.normal(0.0, 3.0, n)))
+    y_hat = kernels.solve_series(y, x[:, None], C, "denton", criterion=criterion, order=2)[0]
+    assert np.abs(C @ y_hat - y).max() <= 1e-14 * np.abs(y).max()
+
+
+def _three_years_quarterly():
+    years = pd.date_range("2000-01-01", periods=3, freq="YS")
+    quarters = pd.date_range("2000-01-01", periods=12, freq="QS")
+    low = pd.Series([100.0, 120.0, 90.0], index=years, name="y")
+    ind = pd.Series(np.linspace(10.0, 32.0, 12) + np.tile([3.0, -1.0, 2.0, -4.0], 3),
+                    index=quarters, name="x")
+    return low, ind
+
+
+def test_denton_cholette_rejects_fewer_periods_than_order():
+    """With fewer low periods than h, Cholette's first h coordinates are not
+    determined: raise naming both counts instead of returning an arbitrary
+    member of the solution set.  A negative h raises too."""
+    from tsdisagg_spark.disagg import disaggregate_series
+
+    C = kernels.conversion_matrix(np.arange(3), np.repeat(np.arange(3), 4), 4, "sum")
+    x = np.linspace(1.0, 2.0, 12)[:, None]
+    y = np.array([5.0, 6.0, 7.0])
+    with pytest.raises(ValueError, match=r"h = 4 needs at least 4 .* got 3"):
+        kernels.solve_series(y, x, C, "denton-cholette", order=4)
+    with pytest.raises(ValueError, match="h must be >= 0"):
+        kernels.solve_series(y, x, C, "denton", order=-1)
+    low, ind = _three_years_quarterly()
+    with pytest.raises(ValueError, match=r"h = 4 needs at least 4 .* got 3"):
+        disaggregate_series(low, ind, method="denton-cholette", h=4, verbose=False)
+    with pytest.raises(ValueError, match="h must be >= 0"):
+        disaggregate_series(low, ind, method="denton-cholette", h=-1, verbose=False)
+    # h equal to the number of low periods is determined
+    out = disaggregate_series(low, ind, method="denton-cholette", h=3, verbose=False)
+    np.testing.assert_allclose(out.groupby(out.index.year).sum().to_numpy(), low.to_numpy())
+
+
+@pytest.mark.parametrize("method", ["denton", "denton-cholette"])
+@pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
+def test_denton_proportional_zero_indicator(method, agg):
+    """A zero indicator month under 'proportional' gets y_hat = 0 and the
+    series still meets C y_hat = y; a low period whose indicator is all zero
+    raises instead of returning NaN."""
+    from tsdisagg_spark.disagg import disaggregate_series
+
+    low, ind = _three_years_quarterly()
+    zero = 5  # the second quarter of 2001: neither its first nor its last
+    ind.iloc[zero] = 0.0
+    for order in (1, 2):
+        out = disaggregate_series(low, ind, method=method, agg_func=agg, h=order, verbose=False)
+        assert np.isfinite(out.to_numpy()).all()
+        assert out.iloc[zero] == 0.0
+        reagg = getattr(out.groupby(out.index.year), agg)().to_numpy()
+        assert np.abs(reagg - low.to_numpy()).max() <= 1e-13 * low.abs().max()
+    ind.iloc[4:8] = 0.0
+    with pytest.raises(ValueError, match=r"periods \[1\] have an all-zero indicator"):
+        disaggregate_series(low, ind, method=method, agg_func=agg, verbose=False)
 
 
 # ---------------------------------------------------------------------------

@@ -85,71 +85,6 @@ def test_bucketed_self_join_has_no_shuffle_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS tsd_test_orders_bucketed_j")
 
 
-def test_bucketed_disaggregation_skips_kernel_exchange(spark, tmp_path):
-    """The storage layout meets the flagship operator: a series-bucketed low
-    table on the companion-index (no-indicator) path feeds the grouped
-    kernel with ZERO exchanges — the nightly re-run's only shuffle was paid
-    once at write time."""
-    import datetime as dt
-
-    from tsdisagg_spark.spark.disagg import disaggregate
-
-    rows = []
-    for sid in range(6):
-        for year in range(2000, 2006):
-            rows.append(
-                (f"s{sid}", dt.datetime(year, 1, 1), 100.0 + sid + year)
-            )
-    low = spark.createDataFrame(rows, "series_id string, ts timestamp, y double")
-    sources.write_bucketed(
-        low,
-        "tsd_test_low_bucketed",
-        bucket_col="series_id",
-        n_buckets=4,
-        sort_col="ts",
-        path=str(tmp_path / "low_bucketed"),
-    )
-    try:
-        lb = sources.read_bucketed(spark, "tsd_test_low_bucketed")
-        out = disaggregate(
-            lb, None, method="denton", target_freq="QS", pre_partitioned=True
-        )
-        plan = _plan(out)
-        assert "Exchange" not in plan, plan
-        got = out.toPandas()
-        assert len(got) == 6 * 6 * 4  # every series on the quarterly axis
-        # constraint invariant: re-summing quarters reproduces the input
-        reagg = (
-            got.assign(year=got.ts.dt.year)
-            .groupby(["series_id", "year"])["y_hat"]
-            .sum()
-        )
-        assert abs(reagg.loc[("s0", 2000)] - (100.0 + 0 + 2000)) < 1e-6
-    finally:
-        spark.sql("DROP TABLE IF EXISTS tsd_test_low_bucketed")
-
-
-def test_pre_partitioned_rejects_indicator_path(spark):
-    """pre_partitioned with indicators would silently reintroduce the AQE
-    coalescing pathology (the union discards partitioning) — must raise."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from tsdisagg_spark.spark.disagg import disaggregate
-
-    low = spark.createDataFrame(
-        [("s", dt.datetime(2000, 1, 1), 1.0)],
-        "series_id string, ts timestamp, y double",
-    )
-    ind = spark.createDataFrame(
-        [("s", dt.datetime(2000, 1, 1), 1.0)],
-        "series_id string, ts timestamp, x1 double",
-    )
-    with _pytest.raises(ValueError, match="pre_partitioned"):
-        disaggregate(low, ind, pre_partitioned=True)
-
-
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     """ORC source/sink parity: a table written as ORC reads back
     row-identical, and both filter pushdown and column pruning reach the

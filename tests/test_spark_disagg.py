@@ -468,7 +468,7 @@ def test_kernel_stage_skew_and_error_isolation(spark):
         big_sdf, method="denton-cholette", agg_func="sum", target_freq="MS"
     ).count()
     t_big = time.perf_counter() - t0
-    assert n_big == 3600  # 300 years x 12 months, through the banded path
+    assert n_big == 3600  # 300 years x 12 months in one least-norm solve
 
     fleet = spark.createDataFrame(pd.concat(rows + [big, bad], ignore_index=True))
     t0 = time.perf_counter()

@@ -5,17 +5,18 @@ these run *inside* a grouped-map pandas UDF (one call per series), so every
 function here operates on a single series' arrays (n = high-frequency
 length, typically 10^2-10^3).
 
-Paths (:func:`solve_series` dispatches): all four methods solve the same
-interleaved KKT [[P, C'], [C, 0]] at and above ``BANDED_THRESHOLD`` points,
-through one assembly (:func:`_kkt_solve`) and one grid banded LU; P is the
-difference-operator Gram for the Denton family and the band precision for
-Chow-Lin / Litterman.  Below it the Denton family solves with dense n x n
-matrices.  One regression driver (:func:`_regression_fit`) fits Chow-Lin and
-Litterman on either back end: closed-form V0 = C Sigma0 C' stacks below the
-threshold, the banded KKT above it — neither forms an n x n covariance.  The
-dense covariance builders (:func:`chow_lin_covariance`,
+Paths (:func:`solve_series` dispatches): the Denton family takes one
+least-norm solve (:func:`_denton_least_norm`) at every length, in matrices
+of C's shape.  One regression driver (:func:`_regression_fit`) fits
+Chow-Lin and Litterman on either of two back ends: closed-form
+V0 = C Sigma0 C' stacks below ``BANDED_THRESHOLD`` points, and above it the
+interleaved KKT [[P, C'], [C, 0]] with P the band precision, through one
+assembly (:func:`_kkt_solve`) and one grid banded LU — neither forms an
+n x n covariance.  The dense forms (:func:`denton_covariance`,
+:func:`denton_cholette_distribution`, :func:`chow_lin_covariance`,
 :func:`litterman_covariance`, :func:`gls_beta`, :func:`distribution_matrix`)
-remain as the reference forms, and for the reference's Nelder-Mead surface.
+remain as the reference forms, and the covariance builders for the
+reference's Nelder-Mead surface.
 
 The math reproduces the reference semantics (cites into
 ``/root/reference/tsdisagg/ts_disagg.py``) but the code is an independent
@@ -151,6 +152,64 @@ def denton_cholette_distribution(
     kkt_rhs = np.block([[gram, np.zeros((n, n_low))], [C, np.eye(n_low)]])
     solution = np.linalg.solve(kkt_lhs, kkt_rhs)
     return solution[:n, n:]
+
+
+def _denton_least_norm(
+    y: np.ndarray, x: np.ndarray, C: np.ndarray, method: str, order: int, criterion: str
+) -> np.ndarray:
+    """Denton / Denton-Cholette y_hat as one least-norm solve, without an
+    n x n matrix.
+
+    In the coordinates u = Delta^h ((y_hat - x) / d), with d = x mean(x) for
+    ``proportional`` and 1 for ``additive``, the reference's penalty
+    (ts_disagg.py:155-176) is ||u||^2 for Denton and ||u[h:]||^2 for
+    Denton-Cholette, whose difference operator drops its first h rows.
+    C y_hat = y reads M u = b with b = y - C x and M = C diag(d) Delta^{-h}:
+    h reverse cumulative sums along each row of C diag(d).  With k = h for
+    Cholette and 0 for Denton, a complete QR of M[:, :k] leaves u[:k] free
+    and gives Q2, a basis of the complement of its column space; u[k:] is
+    the least-norm solution of Q2' M[:, k:] u[k:] = Q2' b from a QR of that
+    matrix's transpose, and u[:k] follows from the triangular factor.  One
+    refinement step on y - C y_hat brings the constraint to rounding.
+    O(h n n_low + n n_low^2) time; memory of the order of C.
+
+    A zero indicator month under ``proportional`` has d = 0 and so
+    y_hat = 0; a low period whose weighted row C diag(d) is all zero cannot
+    meet its constraint and raises, as do h < 0 and Denton-Cholette with
+    fewer low periods than h (u[:k] would not be determined).
+    """
+    n_low, n = C.shape
+    if order < 0:
+        raise ValueError(f"the differencing order h must be >= 0, got {order}")
+    k = order if method == "denton-cholette" else 0
+    if n_low < k:
+        raise ValueError(
+            f"denton-cholette with h = {order} needs at least {order} "
+            f"low-frequency periods, got {n_low}"
+        )
+    d = x * x.mean() if criterion == "proportional" else np.ones(n)
+    M = C * d
+    empty = np.flatnonzero(~M.any(axis=1))
+    if empty.size:
+        raise ValueError(
+            f"low-frequency periods {empty.tolist()} have an all-zero indicator, "
+            "so the proportional criterion cannot distribute their values"
+        )
+    for _ in range(order):
+        M = np.cumsum(M[:, ::-1], axis=1)[:, ::-1]
+    M = np.ascontiguousarray(M)  # BLAS skips reversed-stride views
+    Q, R = np.linalg.qr(M[:, :k], mode="complete")
+    Qa, Ra = np.linalg.qr((Q[:, k:].T @ M[:, k:]).T)
+
+    def distribute(b: np.ndarray) -> np.ndarray:
+        tail = Qa @ np.linalg.solve(Ra.T, Q[:, k:].T @ b)
+        u = np.concatenate([np.linalg.solve(R[:k], Q[:, :k].T @ (b - M[:, k:] @ tail)), tail])
+        for _ in range(order):
+            u = np.cumsum(u)
+        return d * u
+
+    y_hat = x + distribute(y - C @ x)
+    return y_hat + distribute(y - C @ y_hat)
 
 
 def chow_lin_covariance(rho: float, sigma2: float, n: int) -> np.ndarray:
@@ -613,63 +672,29 @@ def beta_std_errors(Sigma: np.ndarray, X: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# one banded KKT for all four methods (SURVEY.md §7 M8 extension)
+# the banded KKT of the long regression fits (SURVEY.md §7 M8 extension)
 #
-# Spark parallelism is across SERIES; a single 10^5-point series still hits
-# the dense kernels' O(n^3) wall.  Every method's solve is the equality-
-# constrained least squares
+# Spark parallelism is across SERIES; a single long series still hits the
+# closed form's O(n_low^3) per rho.  The GLS distribution step is the
+# equality-constrained least squares
 #
 #     min w' P w   s.t.   C w = b        KKT: [[P, C'], [C, 0]] [w; mu] = [0; b]
 #
-# with P banded: the difference-operator Gram W'W for the Denton family
-# (w = y_hat - p, b = y - C p), the AR(1) / random-walk precision Sigma0^{-1}
-# for Chow-Lin and Litterman.  The KKT is BANDED once each constraint row is
-# interleaved after its period's last member: P couples x_t only with
-# x_{t +/- e} for its e < n_diags diagonals, and each constraint row touches
-# one period's members.  Bandwidth ~ factor + n_diags, so one solve costs
-# O(n * b^2) time and O(n * b) memory — a 100k-point series solves in
-# seconds where the dense path would need 10^15 flops and 80 GB for Sigma.
-# One index skeleton (_gls_kkt_indices), one assembly (_kkt_solve) and one
-# grid LU (_banded_lu_solve_grid_t) serve all four methods.
+# with P the AR(1) / random-walk precision Sigma0^{-1} of Chow-Lin and
+# Litterman.  The KKT is BANDED once each constraint row is interleaved
+# after its period's last member: P couples x_t only with x_{t +/- e} for
+# its e < n_diags diagonals, and each constraint row touches one period's
+# members.  Bandwidth ~ factor + n_diags, so one solve costs O(n * b^2) time
+# and O(n * b) memory — a 100k-point series solves in seconds where the
+# dense path would need 10^15 flops and 80 GB for Sigma.  One index skeleton
+# (_gls_kkt_indices), one assembly (_kkt_solve) and one grid LU
+# (_banded_lu_solve_grid_t) serve both methods.
 # ---------------------------------------------------------------------------
-
-def _difference_gram_band(
-    n: int, order: int, scale: np.ndarray | None, trimmed: bool
-) -> list[np.ndarray]:
-    """Diagonals of ``G = W'W`` where ``W`` is the (optionally column-scaled,
-    optionally first-``order``-rows-trimmed) h-th difference operator —
-    computed directly in band form, never materializing W.  Returns
-    ``diags[e][i] = G[i, i + e]`` for ``e = 0..order``.
-
-    Row ``t`` of ``(I - L)^order`` carries binomial coefficients
-    ``(-1)^d C(order, d)`` at columns ``t - d`` (truncated for ``t < order``
-    in the untrimmed form); trimming drops rows ``t < order``
-    (denton-cholette, ts_disagg.py:164-176).
-    """
-    from math import comb
-
-    coeff = np.array(
-        [(-1.0) ** d * comb(order, d) for d in range(order + 1)]
-    )
-    s = np.ones(n) if scale is None else np.asarray(scale, dtype=float)
-    diags = []
-    for e in range(order + 1):
-        g = np.zeros(n - e)
-        i = np.arange(n - e)
-        for d1 in range(0, order + 1 - e):
-            t = i + e + d1  # the W row where columns i and i+e meet
-            valid = t <= n - 1
-            if trimmed:
-                valid = valid & (t >= order)
-            g[valid] += coeff[d1] * coeff[d1 + e]
-        diags.append(g * s[i] * s[i + e])
-    return diags
-
 
 def _constraint_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Per-row contiguous support ``[lo_i, hi_i]`` of the constraint matrix
     — ``ValueError`` for an empty or non-contiguous row, so callers can fall
-    back to the dense path."""
+    back to the closed form."""
     n_low = C.shape[0]
     lo = np.full(n_low, -1, dtype=int)
     hi = np.full(n_low, -1, dtype=int)
@@ -785,8 +810,7 @@ def _gls_kkt_indices(C, n: int | None = None, n_diags: int = 2) -> dict:
     comment): constraint blocks, interleaved ordering, flattened scatter
     indices, and bandwidth.  Built once per series, reused by every solve.
     ``n_diags`` is the band width of P: 2 (tridiagonal) for Chow-Lin's
-    AR(1) precision, 3 (pentadiagonal) for Litterman's, ``order + 1`` for
-    the Denton family's difference Gram.
+    AR(1) precision, 3 (pentadiagonal) for Litterman's.
 
     ``C`` is either the dense constraint matrix, or — for series long
     enough that a dense (n_low, n) would itself be the memory wall, e.g.
@@ -849,14 +873,14 @@ def _kkt_solve(
     band: np.ndarray, skel: dict, B_low: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Assemble + solve the interleaved KKT [[P, C'], [C, 0]] [w; mu] =
-    [0; B_low] for a stack of G band matrices P.  ``band`` (G, .) holds P's
-    diagonals e = 0..n_diags-1 concatenated in e-order (the layout of the
-    skeleton's scatter indices); ``B_low`` (n_low, m) sits on the lambda
-    rows.
+    [0; B_low] for a stack of G band precisions P, one per rho of a grid.
+    ``band`` (G, .) holds P's diagonals e = 0..n_diags-1 concatenated in
+    e-order (the layout of the skeleton's scatter indices); ``B_low``
+    (n_low, m) sits on the lambda rows.
 
     Returns ``(mu, w, logdet)``: the lambda rows (G, n_low, m), the x rows
     (G, n, m) — w minimizes w'Pw subject to C w = B_low — and log|det KKT|
-    per member.  For an invertible P, mu = -(C P^{-1} C')^{-1} B_low and
+    per member: mu = -(C P^{-1} C')^{-1} B_low and
     w = P^{-1} C' (C P^{-1} C')^{-1} B_low.
     """
     N, pos, lpos = skel["N"], skel["pos"], skel["lpos"]
@@ -877,37 +901,6 @@ def _kkt_solve(
     B[:, lpos, :] = B_low[None, :, :]
     sol, logdet = _banded_lu_solve_grid_t(abt, kl, ku, B)
     return sol[:, lpos, :], sol[:, pos, :], logdet
-
-
-def denton_banded(
-    y: np.ndarray,
-    X: np.ndarray,
-    C: np.ndarray,
-    method: str,
-    order: int = 1,
-    criterion: str = "proportional",
-) -> np.ndarray:
-    """Banded-KKT Denton / Denton-Cholette solve: identical output to the
-    dense ``distribution_matrix`` / ``denton_cholette_distribution`` path
-    (asserted in tests to ~1e-8), O(n b^2) instead of O(n^3).  P is the
-    difference-operator Gram in band form.
-
-    ``C`` must have row-contiguous nonzero support with strictly increasing
-    end columns (true for every time-ordered period constraint the
-    relational layer produces — sum/mean blocks or first/last singletons);
-    a ``ValueError`` otherwise, so callers can fall back to the dense path.
-    """
-    n, k = X.shape
-    if k != 1:
-        raise ValueError("denton supports exactly one indicator column")
-    p = X.ravel().astype(float)
-    scale = 1.0 / (p * p.mean()) if criterion == "proportional" else None
-    band = np.concatenate(
-        _difference_gram_band(n, order, scale, trimmed=(method == "denton-cholette"))
-    )
-    skel = _gls_kkt_indices(C, n_diags=order + 1)
-    _mu, w, _logdet = _kkt_solve(band[None, :], skel, (y - C @ p)[:, None])
-    return p + w[0, :, 0]
 
 
 # ---------------------------------------------------------------------------
@@ -1200,16 +1193,14 @@ def chow_lin_banded_fit(
 
     Only the default (profile) optimizer is supported; callers wanting the
     reference's 2-D Nelder-Mead surface fall back to the dense path.
-    Raises ``ValueError`` for non-contiguous constraint support (same
-    contract as :func:`denton_banded`).
+    Raises ``ValueError`` for non-contiguous constraint support.
     """
     return _regression_fit(y, X, C, "chow-lin", optimizer_kwargs, banded=True)
 
 
-#: from this high-frequency length on, solve_series takes the banded KKT
-#: paths (the Denton family's dense path is O(n^3); the regression fits'
-#: banded scan costs a per-column Python loop, the closed form O(n_low^3)
-#: per rho)
+#: from this high-frequency length on, solve_series fits Chow-Lin and
+#: Litterman on the banded KKT (its scan costs a per-column Python loop, the
+#: closed form O(n_low^3) per rho); the Denton family does not read it
 BANDED_THRESHOLD = 2000
 
 
@@ -1246,8 +1237,6 @@ def solve_series(
         )
 
     n, k = X.shape
-    n_low = y.shape[0]
-
     if method in REGRESSION_METHODS:
         if n >= BANDED_THRESHOLD:
             # the closed-form V0 stacks cost O(n_low^3) per rho; the banded
@@ -1262,14 +1251,4 @@ def solve_series(
 
     if k != 1:
         raise ValueError(f"{method} supports exactly one indicator column")
-    if n >= BANDED_THRESHOLD:
-        try:
-            return denton_banded(y, X, C, method, order, criterion), None, {}
-        except ValueError:
-            pass  # non-contiguous constraints: fall through to dense
-    if method == "denton":
-        D = distribution_matrix(denton_covariance(n, X, order, criterion), C)
-    else:
-        D = denton_cholette_distribution(n, n_low, C, X, order, criterion)
-    p = X.ravel()
-    return p + D @ (y - C @ p), None, {}
+    return _denton_least_norm(y, X.ravel().astype(float), C, method, order, criterion), None, {}

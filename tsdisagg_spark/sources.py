@@ -12,14 +12,14 @@ Two layouts matter for this engine's workloads:
   tests/test_plans.py (``PartitionFilters``).
 
 * **Series-bucketed tables** (``write_bucketed``): ``bucketBy(series)``
-  pre-hashes rows into a fixed number of bucket files per partition.  A
-  downstream ``groupBy(series).applyInPandas`` kernel stage (or a
-  self-join on the series key) reads the bucketing as a satisfied
-  distribution requirement and SKIPS ITS SHUFFLE entirely — for a fleet
-  that re-runs disaggregation every night over the same keyed layout,
-  the biggest exchange in the plan is paid once at write time, never at
-  query time.  Bucketed tables go through the session catalog
-  (``saveAsTable``; parquet ``save`` cannot record bucket metadata).
+  pre-hashes rows into a fixed number of bucket files per partition.  An
+  aggregation or a self-join on the series key reads the bucketing as a
+  satisfied distribution requirement and SKIPS ITS SHUFFLE entirely, so a
+  recurring keyed workload pays that exchange once at write time.  The
+  disaggregation kernel stage is not among them: it repartitions to one
+  partition per core whatever the layout, so it keeps its one exchange.
+  Bucketed tables go through the session catalog (``saveAsTable``;
+  parquet ``save`` cannot record bucket metadata).
 
 The reference library has no storage layer at all (it ingests pandas
 objects, SURVEY.md section 2.1); both layouts here are the idiomatic Spark
@@ -89,10 +89,8 @@ def write_bucketed(
     """Persist ``df`` as a bucketed (and optionally per-bucket sorted)
     catalog table.  ``n_buckets`` fixes the hash fan-out: every downstream
     operator that needs hash distribution on ``bucket_col`` at <=
-    ``n_buckets`` parallelism reads it shuffle-free.  Sorting within
-    buckets additionally lets per-series kernels skip their in-group sort.
-    ``path`` makes it an external table at that location instead of the
-    session warehouse.
+    ``n_buckets`` parallelism reads it shuffle-free.  ``path`` makes it an
+    external table at that location instead of the session warehouse.
     """
     writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
     if sort_col is not None:

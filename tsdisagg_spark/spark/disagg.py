@@ -85,7 +85,6 @@ def _kernel_stage(
     ts_col: str,
     value_col: str,
     errors: str = "raise",
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """The one grouped-map kernel stage behind :func:`disaggregate` and
     :func:`fit_reports`.
@@ -106,8 +105,7 @@ def _kernel_stage(
     (REPARTITION_BY_NUM; 3.2x on 1000 series / 32 cores).  ``n`` is one
     partition per core: each task pays a fixed Arrow stream setup, and
     hash-partitioned load self-averages (938 series on local[32]: 32
-    partitions 2.0s, 128 partitions 3.3s).  ``pre_partitioned`` input
-    already carries that distribution and skips the repartition."""
+    partitions 2.0s, 128 partitions 3.3s)."""
     if errors not in ("raise", "skip"):
         raise ValueError("errors must be 'raise' or 'skip'")
     schema = T.StructType(
@@ -148,9 +146,8 @@ def _kernel_stage(
         out.insert(0, series_col, sid)
         return out
 
-    if not pre_partitioned:
-        width = unioned.sparkSession.sparkContext.defaultParallelism
-        unioned = unioned.repartition(width, series_col)
+    width = unioned.sparkSession.sparkContext.defaultParallelism
+    unioned = unioned.repartition(width, series_col)
     return unioned.groupBy(series_col).applyInPandas(run_group, schema=schema)
 
 
@@ -168,7 +165,6 @@ def disaggregate(
     ts_col: str = "ts",
     value_col: str = "y",
     errors: str = "raise",
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """Disaggregate many low-frequency series to a higher frequency at once.
 
@@ -187,30 +183,11 @@ def disaggregate(
         — at millions of series one malformed group should not kill a
         1000-executor stage.  A dropped series leaves no record: it is
         simply absent from the output.
-    pre_partitioned : bool
-        Skip the kernel-stage repartition entirely: pass ``True`` when
-        ``low`` already carries a hash distribution on ``series_col`` the
-        grouped kernel can reuse — e.g. a series-bucketed table
-        (``sources.write_bucketed``) on the companion-index path (no
-        indicators; an internal union would otherwise discard the input's
-        partitioning).  The nightly re-run over a bucketed layout then has
-        ZERO exchanges before the kernel (plan-asserted in tests).
 
     Returns
     -------
     DataFrame ``(series_col, ts_col, y_hat)`` on the high-frequency axis.
     """
-    if pre_partitioned and indicators is not None:
-        # the internal union with the indicator frame discards any input
-        # partitioning, so honoring the flag here would hand AQE a byte-tiny
-        # unguarded shuffle it coalesces to 1-2 tasks — the serialization
-        # pathology the kernel-stage repartition exists to prevent
-        raise ValueError(
-            "pre_partitioned=True is only valid without indicators: the "
-            "internal target/indicator union discards the input's "
-            "partitioning, so the kernel repartition cannot be skipped."
-        )
-
     unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
     return _disaggregate_unioned(
         unioned,
@@ -225,7 +202,6 @@ def disaggregate(
         ts_col=ts_col,
         value_col=value_col,
         errors=errors,
-        pre_partitioned=pre_partitioned,
     )
 
 
@@ -243,7 +219,6 @@ def _disaggregate_unioned(
     ts_col: str = "ts",
     value_col: str = "y",
     errors: str = "raise",
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """:func:`disaggregate` over an ALREADY-TAGGED union frame (shape as in
     :func:`_kernel_stage`).
@@ -268,7 +243,7 @@ def _disaggregate_unioned(
     return _kernel_stage(
         unioned, ind_cols, emit, tail,
         series_col=series_col, ts_col=ts_col, value_col=value_col,
-        errors=errors, pre_partitioned=pre_partitioned,
+        errors=errors,
     )
 
 
