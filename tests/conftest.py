@@ -5,9 +5,10 @@ import os
 # sets it at session build, and local-mode workers fork with it), but the
 # pytest driver process imports numpy first, and OpenBLAS sizes its pool at
 # library load — so without this the kernel wall-time tests measure the
-# threaded-pool sync penalty (~8 ms per small LAPACK call; the 96k-point
-# banded fit read 218s threaded vs 136s pinned on this box), a
-# configuration the engine never runs in.
+# threaded-pool sync penalty (~8 ms per small LAPACK call), a configuration
+# the engine never runs in.  The 96k-point chow-lin fit of
+# test_chow_lin_banded_96k_points runs the one O(n_low)-per-rho regression
+# path in under a second pinned (single-threaded, 4-vCPU host).
 for _var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_var, "1")
 

@@ -99,6 +99,42 @@ def test_conversion_matrix_invariants(agg_func):
     assert_allclose(agg[:3], grouped.to_numpy()[:3])
 
 
+def _conversion_matrix_loop(low_labels, high_labels, factor, agg_func):
+    """The per-row loop ``conversion_matrix`` was before it was vectorised."""
+    C = np.zeros((len(low_labels), len(high_labels)))
+    weight = 1.0 / factor if agg_func == "mean" else 1.0
+    for i, label in enumerate(low_labels):
+        members = np.flatnonzero(high_labels == label)
+        if members.size == 0 or members.size != factor:
+            continue
+        if agg_func == "first":
+            C[i, members[0]] = weight
+        elif agg_func == "last":
+            C[i, members[-1]] = weight
+        else:
+            C[i, members] = weight
+    return C
+
+
+@pytest.mark.parametrize("agg_func", ["sum", "mean", "first", "last"])
+def test_conversion_matrix_equals_loop(agg_func):
+    """The vectorised constraint matrix is bit-identical to the per-row
+    loop, with a backcast, partial periods at both ends and in the middle,
+    low periods the indicator never reaches, and quarterly lows."""
+    months = pd.date_range("1989-11-01", periods=12 * 9 + 7, freq="MS")
+    months = months.delete(np.arange(40, 43))  # a gap inside 1992
+    for family, factor, low in (
+        ("yearly", 12, pd.date_range("1988-01-01", periods=13, freq="YS")),
+        ("quarterly", 3, pd.date_range("1989-07-01", periods=40, freq="QS")),
+    ):
+        low_labels = kernels.period_labels(low, family)
+        high_labels = kernels.period_labels(months, family)
+        C = kernels.conversion_matrix(low_labels, high_labels, factor, agg_func)
+        want = _conversion_matrix_loop(low_labels, high_labels, factor, agg_func)
+        assert C.any() and (~C.any(axis=1)).sum() >= 3
+        np.testing.assert_array_equal(C, want)
+
+
 def test_conversion_matrix_quarterly_low():
     low_ts = pd.date_range("2000-01-01", periods=8, freq="QS")
     high_ts = pd.date_range("2000-01-01", periods=24, freq="MS")
@@ -199,28 +235,6 @@ def _high_labels(n_low: int, factor: int, backcast: int) -> np.ndarray:
     """Period labels of a high-frequency axis whose first ``backcast``
     points precede the first low period and so carry no constraint."""
     return np.concatenate([np.full(backcast, -1), np.repeat(np.arange(n_low), factor)])
-
-
-def test_banded_lu_solve_matches_dense():
-    rng = np.random.default_rng(0)
-    for _ in range(25):
-        n = int(rng.integers(5, 60))
-        kl = ku = int(rng.integers(1, 5))
-        A = np.zeros((n, n))
-        for i in range(n):
-            for j in range(max(0, i - kl), min(n, i + ku + 1)):
-                A[i, j] = rng.standard_normal()
-        A += np.eye(n) * 0.1
-        b = rng.standard_normal(n)
-        ab = np.zeros((2 * kl + ku + 1, n))
-        for i in range(n):
-            for j in range(max(0, i - kl), min(n, i + ku + 1)):
-                ab[kl + ku + i - j, j] = A[i, j]
-        x, _logdet = kernels._banded_lu_solve_grid_t(
-            ab.T[None].copy(), kl, ku, b.reshape(1, n, 1).copy()
-        )
-        x = x[0, :, 0]
-        np.testing.assert_allclose(A @ x, b, atol=1e-8)
 
 
 @pytest.mark.parametrize("method", ["denton", "denton-cholette"])
@@ -373,40 +387,17 @@ def test_denton_proportional_zero_indicator(method, agg):
 
 
 # ---------------------------------------------------------------------------
-# banded Chow-Lin (tridiagonal AR(1) precision)
+# Chow-Lin and Litterman against the dense pipeline (the test names keep the
+# "banded" of the banded-KKT back end they were written for; every fit now
+# runs the one LDL' recursion)
 # ---------------------------------------------------------------------------
-
-def test_banded_lu_solve_grid_matches_dense():
-    """The grid-vectorized banded LU (transposed band storage, the layout
-    the banded GLS scan assembles) must agree with dense solves and
-    slogdet for every stacked system."""
-    rng = np.random.default_rng(11)
-    G, n, kl = 5, 40, 3
-    ku = kl
-    A = np.zeros((G, n, n))
-    for g in range(G):
-        for i in range(n):
-            for j in range(max(0, i - kl), min(n, i + ku + 1)):
-                A[g, i, j] = rng.standard_normal()
-        A[g] += np.eye(n) * 0.5
-    B = rng.standard_normal((G, n, 2))
-    abt = np.zeros((G, n, 2 * kl + ku + 1))
-    for g in range(G):
-        for i in range(n):
-            for j in range(max(0, i - kl), min(n, i + ku + 1)):
-                abt[g, j, kl + ku + i - j] = A[g, i, j]
-    x, logdet = kernels._banded_lu_solve_grid_t(abt, kl, ku, B.copy())
-    for g in range(G):
-        np.testing.assert_allclose(A[g] @ x[g], B[g], atol=1e-8)
-        np.testing.assert_allclose(logdet[g], np.linalg.slogdet(A[g])[1], atol=1e-9)
-
 
 @pytest.mark.parametrize("factor", [3, 12])
 @pytest.mark.parametrize("k", [1, 2])
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
 @pytest.mark.parametrize("rho", [0.1, 0.85])
 def test_chow_lin_banded_equals_dense(factor, k, agg, rho, backcast=0):
-    """32 configs: at fixed rho the banded Chow-Lin machinery (GLS beta,
+    """32 configs: at fixed rho the Chow-Lin machinery (GLS beta,
     distribution, concentrated NLL) must reproduce the dense pipeline at
     1e-7 — the direct analog of the Denton banded-vs-dense battery (which
     also compares the solve at fixed hyperparameters)."""
@@ -450,10 +441,22 @@ def test_chow_lin_banded_equals_dense_backcast(factor, k, agg, rho):
     test_chow_lin_banded_equals_dense(factor, k, agg, rho, backcast=13)
 
 
+def _assert_dense_profile_optimum(result, y, X, C, cov_builder):
+    """The fit's NLL and sigma2 equal the dense profile likelihood's at the
+    fitted rho, which is a minimum of that profile on a 1e-3 bracket."""
+    rho, sigma2 = result.x
+    nll_d, s_d = kernels.profile_negative_loglik(rho, y, X, C, cov_builder)
+    np.testing.assert_allclose(result.fun, nll_d, rtol=1e-9)
+    np.testing.assert_allclose(sigma2, s_d / (1.0 + rho), rtol=1e-7)
+    for step in (-1e-3, 1e-3):
+        assert kernels.profile_negative_loglik(rho + step, y, X, C, cov_builder)[0] >= nll_d
+
+
 def test_chow_lin_banded_full_fit_equals_dense():
-    """Full banded fit vs full dense fit on a sharply identified AR series:
-    identical two-level grid, so the optimum must agree — rho/sigma2/beta
-    and the distributed series at 1e-7, NLL at the optimum at 1e-9."""
+    """Full fit vs the dense pipeline at its optimum on a sharply
+    identified AR series: ``chow_lin_banded_fit`` and ``fit_rho_sigma`` run
+    the same fit, and y_hat and the standard errors match the dense GLS at
+    the fitted rho/sigma2."""
     rng = np.random.default_rng(2)
     factor, n_low = 4, 60
     n = n_low * factor
@@ -472,6 +475,7 @@ def test_chow_lin_banded_full_fit_equals_dense():
     res_d = kernels.fit_rho_sigma(y, X, C, kernels.chow_lin_covariance)
     np.testing.assert_allclose(res_b.fun, res_d.fun, rtol=1e-9)
     np.testing.assert_allclose(res_b.x, res_d.x, rtol=1e-6)
+    _assert_dense_profile_optimum(res_b, y, X, C, kernels.chow_lin_covariance)
     Sigma = kernels.chow_lin_covariance(*res_d.x, n)
     beta_d = kernels.gls_beta(Sigma, y, X, C)
     D = kernels.distribution_matrix(Sigma, C)
@@ -484,9 +488,9 @@ def test_chow_lin_banded_full_fit_equals_dense():
 
 
 def test_solve_series_dispatches_banded_chow_lin():
-    """Above BANDED_THRESHOLD, solve_series must route chow-lin through the
-    banded fit (the dense grid scan at this size would build a ~2 GB Sigma
-    stack per pass — banded-vs-dense value parity is covered by the
+    """Above BANDED_THRESHOLD, solve_series and chow_lin_banded_fit run the
+    same fit (a dense grid scan at this size would build a ~2 GB Sigma
+    stack per pass — value parity with the dense pipeline is covered by the
     32-config battery and the full-fit test at dense-feasible sizes)."""
     rng = np.random.default_rng(3)
     factor = 12
@@ -513,7 +517,7 @@ def test_solve_series_dispatches_banded_chow_lin():
 
 def test_chow_lin_banded_96k_points():
     """96k-point chow-lin (8000 low periods x 12): dense Sigma alone would
-    be 74 GB / O(n^3) flops — the banded path fits the full profile-ML in
+    be 74 GB / O(n^3) flops — the LDL' recursion fits the full profile-ML in
     well under the dense path's build time, recovers the true AR
     coefficient, and satisfies the aggregation constraint to machine
     precision (C y_hat == y exactly is a Chow-Lin identity).  The constraint
@@ -524,12 +528,13 @@ def test_chow_lin_banded_96k_points():
     superlinear regression pass on a fast one): the test first times the
     SAME kernel at 1/8 the points and asserts the 96k fit stays within a
     linear-scaling envelope of that anchor — 8x the work, x4 allowance
-    for co-tenant contention and fit-iteration count variation.  The
-    banded path is ~linear in n (the per-column python loop in the banded
-    LU dominates; conftest pins BLAS to 1 thread — the engine's worker
-    configuration), so any dense-path regression (an accidental dense
-    materialization is O(n^2) memory — 74 GB at 96k — before it is
-    O(n^3) time) blows a linear envelope by orders of magnitude."""
+    for co-tenant contention and fit-iteration count variation.  The fit
+    is ~linear in n (the per-row python loop of the recursion and the O(n)
+    distribution filters dominate; conftest pins BLAS to 1 thread — the
+    engine's worker configuration), so any dense-path regression (an
+    accidental dense materialization is O(n^2) memory — 74 GB at 96k —
+    before it is O(n^3) time) blows a linear envelope by orders of
+    magnitude."""
     import time
 
     def _fit_case(n_low: int, factor: int = 12):
@@ -557,7 +562,7 @@ def test_chow_lin_banded_96k_points():
     elapsed, y_hat, info, idx, y, x = _fit_case(8000)
     bound = max(60.0, 8 * 4 * t_small)
     assert elapsed < bound, (
-        f"96k-point banded fit took {elapsed:.0f}s vs a linear-scaling "
+        f"96k-point fit took {elapsed:.0f}s vs a linear-scaling "
         f"envelope of {bound:.0f}s (12k anchor {t_small:.1f}s on this box) "
         "— dense-path leak?"
     )
@@ -572,9 +577,9 @@ def test_chow_lin_banded_96k_points():
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
 @pytest.mark.parametrize("rho", [0.15, 0.8])
 def test_litterman_banded_equals_dense(factor, agg, rho, backcast=0):
-    """Litterman through the same banded KKT (pentadiagonal random-walk
-    precision): fixed-rho parity vs the dense pipeline at 1e-7 — note the
-    dense path pays an O(n^3) inverse just to BUILD Sigma."""
+    """Litterman (two-dimensional state of the recursion): fixed-rho parity
+    vs the dense pipeline at 1e-7 — note the dense path pays an O(n^3)
+    inverse just to BUILD Sigma."""
     rng = np.random.default_rng(factor)
     n_low = 25
     n = n_low * factor + backcast
@@ -585,7 +590,7 @@ def test_litterman_banded_equals_dense(factor, agg, rho, backcast=0):
     u = np.cumsum(0.3 * rng.standard_normal(n))  # random-walk disturbance
     y = C @ (2.0 * X.ravel() + u)
 
-    nll_b, s_b, beta_b, yh_b = kernels._regression_backend(y, X, C, "litterman", True)[1](rho)
+    nll_b, s_b, beta_b, yh_b = kernels._regression_backend(y, X, C, "litterman")[1](rho)
 
     Sigma0 = kernels.litterman_covariance(rho, 1.0, n)
     beta_d = kernels.gls_beta(Sigma0, y, X, C)
@@ -610,8 +615,8 @@ def test_litterman_banded_equals_dense_backcast(factor, agg, rho):
 
 
 def test_litterman_banded_full_fit_equals_dense():
-    """Full banded Litterman fit vs the dense fit: same two-level grid, so
-    rho/sigma2/beta and the distributed series must agree."""
+    """Full Litterman fit vs the dense pipeline at its optimum: y_hat and
+    the standard errors match the dense GLS at the fitted rho/sigma2."""
     rng = np.random.default_rng(7)
     factor, n_low = 4, 25
     n = n_low * factor
@@ -622,10 +627,11 @@ def test_litterman_banded_full_fit_equals_dense():
     u = np.cumsum(0.3 * rng.standard_normal(n))
     y = C @ (2.0 * X.ravel() + u)
 
-    yh_b, res_b, info_b = kernels._regression_fit(y, X, C, "litterman", None, banded=True)
+    yh_b, res_b, info_b = kernels._regression_fit(y, X, C, "litterman", None)
     res_d = kernels.fit_rho_sigma(y, X, C, kernels.litterman_covariance)
     np.testing.assert_allclose(res_b.fun, res_d.fun, rtol=1e-9)
     np.testing.assert_allclose(res_b.x, res_d.x, rtol=1e-6)
+    _assert_dense_profile_optimum(res_b, y, X, C, kernels.litterman_covariance)
     Sigma = kernels.litterman_covariance(*res_d.x, n)
     beta_d = kernels.gls_beta(Sigma, y, X, C)
     D = kernels.distribution_matrix(Sigma, C)
@@ -638,9 +644,9 @@ def test_litterman_banded_full_fit_equals_dense():
 
 
 def test_solve_series_dispatches_banded_litterman():
-    """Above BANDED_THRESHOLD, litterman routes through the banded fit —
-    the dense path's O(n^3) covariance INVERSE alone would dwarf the whole
-    banded solve at this size."""
+    """Above BANDED_THRESHOLD, solve_series runs the one regression fit for
+    litterman too — the dense path's O(n^3) covariance INVERSE alone would
+    dwarf the whole fit at this size."""
     rng = np.random.default_rng(9)
     factor, n_low = 12, 200
     n = n_low * factor  # 2400 >= BANDED_THRESHOLD
@@ -652,13 +658,13 @@ def test_solve_series_dispatches_banded_litterman():
     y = C @ (2.0 * X.ravel() + u)
     y_hat, result, info = kernels.solve_series(y, X, C, "litterman")
     assert result is not None and "beta" in info
-    yh_b, res_b, _ = kernels._regression_fit(y, X, C, "litterman", None, banded=True)
+    yh_b, res_b, _ = kernels._regression_fit(y, X, C, "litterman", None)
     np.testing.assert_array_equal(y_hat, yh_b)
     np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9)
 
 
 # ---------------------------------------------------------------------------
-# closed-form V0 and the regression fit path below BANDED_THRESHOLD
+# the LDL' recursion of V0 = C Sigma0 C' and the regression fit path
 # ---------------------------------------------------------------------------
 
 def _dense_sigma0(method: str, rho: float, n: int) -> np.ndarray:
@@ -673,14 +679,24 @@ def _dense_sigma0(method: str, rho: float, n: int) -> np.ndarray:
     return F @ F.T
 
 
+def _v0_solve(method: str, grid: np.ndarray, C: np.ndarray, rhs: np.ndarray) -> tuple:
+    """``(V0^{-1} rhs, log det V0)`` from the LDL' recursion for every rho of
+    ``grid``: (G, n_low, c) and (G,)."""
+    rows = kernels._row_shapes(kernels._blocks(C, C.shape[1]))
+    w, D, back = kernels._v0_factor(method, grid, rows, rhs)
+    return back(w / D[..., None]), np.log(D).sum(axis=1)
+
+
 @pytest.mark.parametrize("factor", [3, 4, 12])
 @pytest.mark.parametrize("agg", ["sum", "mean", "first", "last"])
 @pytest.mark.parametrize("method", ["chow-lin", "litterman"])
 def test_closed_form_v0_equals_dense(method, agg, factor):
-    """V0 = C Sigma0(rho) C' from the closed form equals the dense product
-    to 1e-13 relative on the coarse scan grid and on a refinement bracket
-    (the top one, where litterman is worst conditioned), with a 13-period
-    backcast ahead of the first constraint."""
+    """The LDL' recursion factors the dense V0 = C Sigma0(rho) C': on the
+    coarse scan grid and the top refinement bracket (where litterman is
+    worst conditioned), with a 13-period backcast ahead of the first
+    constraint, its x = V0^{-1} b leaves a residual
+    ||V0 x - b|| <= 1e-13 ||V0|| ||x|| (max norms), and its log det V0
+    matches slogdet to 1e-10."""
     n_low, backcast = 8, 13
     high_labels = np.concatenate(
         [np.full(backcast, -1), np.repeat(np.arange(n_low), factor)]
@@ -689,17 +705,76 @@ def test_closed_form_v0_equals_dense(method, agg, factor):
     n = C.shape[1]
     coarse = np.linspace(1e-5, 1 - 1e-5, 41)
     grid = np.concatenate([coarse, np.linspace(coarse[-2], coarse[-1], 33)])
-    V0 = kernels._v0_grid_fn(C, kernels.COVARIANCE_BUILDERS[method])(grid)
-    assert V0.shape == (len(grid), n_low, n_low)
+    b = np.random.default_rng(factor).normal(size=(n_low, 3))
+    x, logdet = _v0_solve(method, grid, C, b)
+    assert x.shape == (len(grid), n_low, 3)
     for g, rho in enumerate(grid):
         dense = C @ _dense_sigma0(method, rho, n) @ C.T
-        np.testing.assert_allclose(V0[g], dense, rtol=1e-13, atol=1e-13 * np.abs(dense).max())
+        residual = np.abs(dense @ x[g] - b).max() / (np.abs(dense).max() * np.abs(x[g]).max())
+        assert residual <= 1e-13, (rho, residual)
+        sign, want = np.linalg.slogdet(dense)
+        assert sign > 0 and abs(logdet[g] - want) <= 1e-10 * max(1.0, abs(want)), rho
+
+
+def _v0_longdouble(method: str, rho: float, C: np.ndarray) -> np.ndarray:
+    """V0 = C Sigma0 C' in np.longdouble, from Sigma0 C' by the O(n)
+    first-order recursions of both models (no n x n matrix)."""
+    ld = np.longdouble
+    r = ld(rho)
+
+    def ar(v, reverse=False):  # H^{-1} v column-wise, or H^{-T} v
+        out, acc = np.empty_like(v), np.zeros(v.shape[1], dtype=ld)
+        for t in range(len(v) - 1, -1, -1) if reverse else range(len(v)):
+            acc = v[t] + r * acc
+            out[t] = acc
+        return out
+
+    Ct = C.T.astype(ld)
+    if method == "chow-lin":
+        S = (ar(Ct) + ar(Ct, reverse=True) - Ct) / (1 - r * r)
+    else:
+        S = np.cumsum(ar(ar(np.cumsum(Ct[::-1], axis=0)[::-1], reverse=True)), axis=0)
+    rows, cols = np.nonzero(C)
+    V0 = np.zeros((len(C), len(C)), dtype=ld)
+    np.add.at(V0, rows, C[rows, cols].astype(ld)[:, None] * S[cols])
+    return V0
+
+
+@pytest.mark.parametrize("years", [3, 30, 200])
+@pytest.mark.parametrize("backcast", [0, 13])
+@pytest.mark.parametrize("agg", ["sum", "first"])
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_ldl_recursion_matches_longdouble(method, agg, backcast, years):
+    """V0^{-1} [CX, y] from the LDL' recursion is within 1e-7 (relative,
+    per column) of a long-double solve at rho from the bound 1e-5 to
+    1 - 1e-5.  At 200 years, where V0 is worst conditioned, it is also no
+    further from it than a float64 LU of V0 (or within 1e-14 of it: at
+    small rho both are at rounding)."""
+    rng = np.random.default_rng([years, backcast])
+    n = years * 12 + backcast
+    C = kernels.conversion_matrix(np.arange(years), _high_labels(years, 12, backcast), 12, agg)
+    t = np.arange(n)
+    x = 50.0 + 0.4 * t + 5.0 * np.sin(t / 5.0) + rng.normal(0.0, 2.0, n)
+    rhs = np.column_stack([C @ x, C @ np.ones(n), C @ (2.0 * x + np.cumsum(rng.normal(0, 3, n)))])
+    grid = np.array([1e-5, 0.5, 0.99, 0.999, 1 - 1e-5])
+    solved, _logdet = _v0_solve(method, grid, C, rhs)
+
+    def rel(a, b):
+        return float((np.abs(a - b).max(axis=0) / np.abs(b).max(axis=0)).max())
+
+    for g, rho in enumerate(grid):
+        V0 = _v0_longdouble(method, rho, C)
+        exact = _ld_solve(V0, rhs.astype(np.longdouble))
+        err = rel(solved[g], exact)
+        assert err <= 1e-7, (rho, err)
+        if years == 200:
+            assert err <= max(rel(np.linalg.solve(V0.astype(float), rhs), exact), 1e-14), (rho, err)
 
 
 @pytest.mark.parametrize("method", ["chow-lin", "litterman"])
 def test_long_fit_allocates_no_sigma_stack(method):
-    """A 100-year monthly fit (n = 1200, below BANDED_THRESHOLD) runs on the
-    closed-form path: its traced peak stays under two n x n matrices (the
+    """A 100-year monthly fit (n = 1200) runs on the LDL' recursion: its
+    traced peak stays under two n x n matrices (the
     dense builders hold at least three while forming one Sigma0), let alone
     a (G, n, n) covariance stack (41 x 1200^2 doubles = 472 MB)."""
     import tracemalloc
@@ -723,9 +798,9 @@ def test_long_fit_allocates_no_sigma_stack(method):
     assert np.all(np.isfinite(info["std_beta"]))
 
 
-def _ld_solve(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Gaussian elimination with partial pivoting in the arrays' dtype
-    (np.linalg has no long double routines)."""
+def _ld_lu_solve(A: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(A^{-1} B, log|det A|)`` by Gaussian elimination with partial
+    pivoting in the arrays' dtype (np.linalg has no long double routines)."""
     A, B = A.copy(), B.copy()
     n = len(A)
     for c in range(n):
@@ -736,7 +811,27 @@ def _ld_solve(A: np.ndarray, B: np.ndarray) -> np.ndarray:
         B[c + 1 :] -= f[:, None] * B[c]
     for c in range(n - 1, -1, -1):
         B[c] = (B[c] - A[c, c + 1 :] @ B[c + 1 :]) / A[c, c]
-    return B
+    return B, np.log(np.abs(np.diagonal(A))).sum()
+
+
+def _ld_solve(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return _ld_lu_solve(A, B)[0]
+
+
+def _negative_loglik_longdouble(params, y, X, C, method) -> float:
+    """The reference's NLL (``negative_loglik``: V = (1 + rho) sigma2 V0)
+    in np.longdouble."""
+    ld = np.longdouble
+    rho, sigma2 = (ld(p) for p in params)
+    V0 = _v0_longdouble(method, float(rho), C)
+    CX, yl = C.astype(ld) @ X.astype(ld), y.astype(ld)
+    k, n_low = X.shape[1], len(y)
+    solved, logdet0 = _ld_lu_solve(V0, np.column_stack([CX, yl]))
+    beta = _ld_solve(CX.T @ solved[:, :k], (CX.T @ solved[:, k])[:, None])[:, 0]
+    resid = yl - CX @ beta
+    s = (1 + rho) * sigma2
+    quad = resid @ _ld_solve(V0, resid[:, None])[:, 0] / s
+    return float(0.5 * (n_low * np.log(2 * np.pi * s) + logdet0 + quad))
 
 
 def _litterman_y_hat_longdouble(y, X, C, rho):
@@ -788,7 +883,7 @@ def test_regression_fit_matches_dense_fixture():
 
         y_hat, _result, info = kernels.solve_series(y, X, C, method)
         np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9, err_msg=str(key))
-        evaluate = kernels._regression_backend(y, X, C, method, False)[1]
+        evaluate = kernels._regression_backend(y, X, C, method)[1]
         nll_ref, _s, _b, at_ref = evaluate(rho_ref)
         if rel(y_hat) > 1e-10:
             nll_new, _s, _b, _y = evaluate(info["rho"])
@@ -803,6 +898,101 @@ def test_regression_fit_matches_dense_fixture():
             assert rel(at_ref, exact) <= max(rel(want, exact), 1e-12), key
         n_cases += 1
     assert n_cases == len(ref["rho"]) == 144
+
+
+def test_regression_fit_matches_long_fixture():
+    """Differential test against the banded-KKT fit of commit 87d7d32
+    (tests/long_fixture.py: chow-lin and litterman, every agg_func, 170 and
+    200 years A->M and 170 years Q->M, backcast 0 and 13; every case has
+    n >= 2000 points, which that tree fitted on the banded KKT).
+
+    * C y_hat = y to 1e-12 relative.
+    * The fitted rho is within 1e-6 of the fixture's, or, where the
+      stored y_hat points differ by more than 1e-9 relative, differs only
+      where the profile likelihood is flat to rounding: the NLL at both
+      rhos agrees to 1e-12.
+    * At the fixture's rho, y_hat, beta and sigma2 match it to 1e-9
+      relative.
+    """
+    import long_fixture
+
+    ref = np.load(os.path.join(HERE, "data", "long_fixture.npz"))
+    n_cases = 0
+    for i, (key, y, X, C) in enumerate(long_fixture.cases()):
+        method = key[0]
+        want = ref["y_hat"][ref["offsets"][i] : ref["offsets"][i + 1]]
+
+        def rel(a, b=want):
+            return float(np.abs(a[long_fixture.STORED] - b).max() / np.abs(b).max())
+
+        y_hat, _result, info = kernels.solve_series(y, X, C, method)
+        assert np.abs(C @ y_hat - y).max() <= 1e-12 * np.abs(y).max(), key
+        rho_ref = float(ref["rho"][i])
+        evaluate = kernels._regression_backend(y, X, C, method)[1]
+        nll_ref, s_ref, beta_ref, at_ref = evaluate(rho_ref)
+        if rel(y_hat) > 1e-9:
+            assert abs(evaluate(info["rho"])[0] - nll_ref) <= 1e-12 * abs(nll_ref), key
+        else:
+            # the profile search resolves rho to ~1e-6 (see _profile_fit)
+            assert abs(info["rho"] - rho_ref) <= 1e-6, key
+        # at the fixture's rho, y_hat, beta and sigma2 are the fixture's
+        assert rel(at_ref) <= 1e-9, key
+        np.testing.assert_allclose(beta_ref, ref["beta"][i], rtol=1e-9, err_msg=str(key))
+        np.testing.assert_allclose(s_ref / (1.0 + rho_ref), ref["sigma2"][i], rtol=1e-9)
+        n_cases += 1
+    assert n_cases == len(ref["rho"]) == 48
+
+
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_nelder_mead_objective_equals_dense(method):
+    """The simplex objective read off the LDL' profile equals the
+    reference's NLL (``negative_loglik``, V = (1 + rho) sigma2 V0), formed
+    in long double, to 1e-12 relative across rho and sigma2 (the dense
+    float64 objective misses it by up to 1e-11 near the rho bound).
+    Nelder-Mead on it stops at a
+    point whose dense NLL is within 1e-10 of the point Nelder-Mead reaches
+    on the dense objective: the two simplex paths part only where the
+    objective is flat to rounding (e.g. sigma2 ~ 95 resolved to ~3e-8
+    relative), so the points themselves agree to 1e-5."""
+    import dense_fixture
+
+    builder = kernels.COVARIANCE_BUILDERS[method]
+    key, y, X, C = next(c for c in dense_fixture.cases() if c[0][:4] == (method, "sum", "Q->M", 10))
+    profile = kernels._regression_backend(y, X, C, method)[0]
+    objective = kernels._simplex_objective(profile, len(y))
+    for rho in (1e-5, 0.3, 0.9, 1 - 1e-5):
+        for sigma2 in (1e-3, 1.0, 50.0):
+            params = np.array([rho, sigma2])
+            want = _negative_loglik_longdouble(params, y, X, C, method)
+            assert abs(objective(params) - want) <= 1e-12 * abs(want), (rho, sigma2)
+
+    result = kernels.solve_series(y, X, C, method, optimizer_kwargs={"method": "nelder-mead"})[1]
+    dense = kernels._nelder_mead_minimize(
+        lambda p: kernels.negative_loglik(p, y, X, C, builder), np.full(2, 0.8),
+        np.array([1e-5, 1e-5]), np.array([1 - 1e-5, np.inf]), xatol=1e-6, fatol=1e-8,
+    )[0]
+    f_dense = kernels.negative_loglik(dense, y, X, C, builder)
+    assert kernels.negative_loglik(result.x, y, X, C, builder) <= f_dense + 1e-10 * abs(f_dense)
+    np.testing.assert_allclose(result.x, dense, rtol=1e-5)
+
+
+def test_simplex_and_profile_fits_build_no_dense_covariance(monkeypatch):
+    """Neither optimizer builds an n x n covariance: with every dense
+    builder made to raise, both methods still fit under the profile default
+    and under Nelder-Mead."""
+    def refuse(*_args):
+        raise AssertionError("dense covariance built")
+
+    for method in kernels.COVARIANCE_BUILDERS:
+        monkeypatch.setitem(kernels.COVARIANCE_BUILDERS, method, refuse)
+    monkeypatch.setattr(kernels, "chow_lin_covariance", refuse)
+    monkeypatch.setattr(kernels, "litterman_covariance", refuse)
+    y, X, C = _degenerate_case("backcast_mean")
+    for method in ("chow-lin", "litterman"):
+        for opt in (None, {"method": "nelder-mead"}):
+            y_hat, result, _info = kernels.solve_series(y, X, C, method, optimizer_kwargs=opt)
+            np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9)
+            assert result.nfev > 0
 
 
 def _exact_fit_case(seed: int):
@@ -888,29 +1078,56 @@ def _degenerate_case(name: str):
     return y, X, C
 
 
-@pytest.mark.parametrize("banded", [False, True])
+def _block_form(C: np.ndarray) -> tuple:
+    """``(lo, hi, vals)`` of a dense constraint matrix with contiguous rows."""
+    lo = np.array([np.flatnonzero(row)[0] for row in C])
+    hi = np.array([np.flatnonzero(row)[-1] for row in C])
+    return lo, hi, np.concatenate([C[a, lo[a] : hi[a] + 1] for a in range(len(C))])
+
+
+@pytest.mark.parametrize("block_form", [False, True])
 @pytest.mark.parametrize("method", ["chow-lin", "litterman"])
 @pytest.mark.parametrize(
     "case", ["two_years", "k_equals_n_low", "constant_y", "zero_y", "backcast_mean"]
 )
-def test_degenerate_inputs_meet_constraint(case, method, banded):
-    """Both regression back ends give a finite y_hat with C y_hat = y and
-    finite standard errors on degenerate input.  With k >= n_low the
-    profile likelihood is flat, so the back ends may pick different rho:
-    only the constraint is asserted, not rho."""
+def test_degenerate_inputs_meet_constraint(case, method, block_form):
+    """The regression fit gives a finite y_hat with C y_hat = y and finite
+    standard errors on degenerate input, with C dense or in block form (the
+    two give the same fit).  With k >= n_low the profile likelihood is
+    flat, so only the constraint is asserted, not rho."""
     y, X, C = _degenerate_case(case)
-    y_hat, _result, info = kernels._regression_fit(y, X, C, method, None, banded)
+    y_hat, _result, info = kernels._regression_fit(
+        y, X, _block_form(C) if block_form else C, method, None
+    )
     assert np.all(np.isfinite(y_hat))
     np.testing.assert_allclose(C @ y_hat, y, rtol=1e-9, atol=1e-9)
     assert np.all(np.isfinite(info["std_beta"]))
+    if block_form:
+        np.testing.assert_array_equal(y_hat, kernels._regression_fit(y, X, C, method, None)[0])
 
 
-@pytest.mark.parametrize("banded", [False, True])
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_regression_fit_ignores_row_order(method):
+    """Permuting the constraint rows (and y with them) leaves the fit
+    unchanged; overlapping rows raise."""
+    y, X, C = _degenerate_case("backcast_mean")
+    perm = np.random.default_rng(5).permutation(len(y))
+    y_hat, result, info = kernels._regression_fit(y, X, C, method, None)
+    y_perm, result_perm, _ = kernels._regression_fit(y[perm], X, C[perm], method, None)
+    np.testing.assert_allclose(y_perm, y_hat, rtol=1e-12)
+    np.testing.assert_allclose(result_perm.x, result.x, rtol=1e-12)
+    C[1, C[0] != 0] = 1.0
+    with pytest.raises(ValueError, match="non-overlapping"):
+        kernels._regression_fit(y, X, C, method, None)
+
+
+@pytest.mark.parametrize("block_form", [False, True])
 @pytest.mark.parametrize("method", ["chow-lin", "litterman"])
 @pytest.mark.parametrize("case", ["collinear", "constant_x"])
-def test_degenerate_indicators_raise(case, method, banded):
+def test_degenerate_indicators_raise(case, method, block_form):
     """Collinear or constant indicator columns make CX' V^{-1} CX singular:
-    both back ends raise instead of returning a silent NaN series."""
+    the fit raises instead of returning a silent NaN series, with C dense
+    or in block form."""
     y, X, C = _degenerate_case(case)
     with pytest.raises(np.linalg.LinAlgError):
-        kernels._regression_fit(y, X, C, method, None, banded)
+        kernels._regression_fit(y, X, _block_form(C) if block_form else C, method, None)

@@ -7,16 +7,16 @@ length, typically 10^2-10^3).
 
 Paths (:func:`solve_series` dispatches): the Denton family takes one
 least-norm solve (:func:`_denton_least_norm`) at every length, in matrices
-of C's shape.  One regression driver (:func:`_regression_fit`) fits
-Chow-Lin and Litterman on either of two back ends: closed-form
-V0 = C Sigma0 C' stacks below ``BANDED_THRESHOLD`` points, and above it the
-interleaved KKT [[P, C'], [C, 0]] with P the band precision, through one
-assembly (:func:`_kkt_solve`) and one grid banded LU — neither forms an
-n x n covariance.  The dense forms (:func:`denton_covariance`,
-:func:`denton_cholette_distribution`, :func:`chow_lin_covariance`,
-:func:`litterman_covariance`, :func:`gls_beta`, :func:`distribution_matrix`)
-remain as the reference forms, and the covariance builders for the
-reference's Nelder-Mead surface.
+of C's shape.  Chow-Lin and Litterman take one regression fit
+(:func:`_regression_fit`) at every length: V0 = C Sigma0 C' is factored by
+one LDL' recursion over the constraint rows (:func:`_v0_factor`, the
+innovations form of the models' Kalman filter), O(n_low) per rho and
+vectorised over the rho grid, for both the profile search and the
+Nelder-Mead objective; no n x n covariance is formed.  The dense forms
+(:func:`denton_covariance`, :func:`denton_cholette_distribution`,
+:func:`chow_lin_covariance`, :func:`litterman_covariance`,
+:func:`gls_beta`, :func:`negative_loglik`, :func:`distribution_matrix`)
+remain as the reference forms the tests check against.
 
 The math reproduces the reference semantics (cites into
 ``/root/reference/tsdisagg/ts_disagg.py``) but the code is an independent
@@ -82,21 +82,22 @@ def conversion_matrix(
     if agg_func not in AGG_FUNCS:
         raise ValueError(f"Invalid agg_func {agg_func!r}")
 
-    n_low, n_high = len(low_labels), len(high_labels)
-    C = np.zeros((n_low, n_high))
+    low_labels, high_labels = np.asarray(low_labels), np.asarray(high_labels)
+    C = np.zeros((len(low_labels), len(high_labels)))
     weight = 1.0 / factor if agg_func == "mean" else 1.0
-
-    for i, label in enumerate(low_labels):
-        members = np.flatnonzero(high_labels == label)
-        if members.size == 0 or members.size != factor:
-            # absent or partial period -> stays all-zero
-            continue
-        if agg_func == "first":
-            C[i, members[0]] = weight
-        elif agg_func == "last":
-            C[i, members[-1]] = weight
-        else:
-            C[i, members] = weight
+    # a stable sort lists each label's members in time order
+    order = np.argsort(high_labels, kind="stable")
+    first = np.searchsorted(high_labels[order], low_labels, side="left")
+    count = np.searchsorted(high_labels[order], low_labels, side="right") - first
+    # absent or partial periods stay all-zero
+    rows = np.flatnonzero((count == factor) & (count > 0))
+    if agg_func == "first":
+        members = first[rows, None]
+    elif agg_func == "last":
+        members = first[rows, None] + factor - 1
+    else:
+        members = first[rows, None] + np.arange(factor)
+    C[rows[:, None], order[members]] = weight
     return C
 
 
@@ -415,106 +416,268 @@ def _nelder_mead_minimize(
 
 
 # ---------------------------------------------------------------------------
-# closed-form V0 = C Sigma0(rho) C' for a whole rho grid (no n x n matrix)
+# V0 = C Sigma0(rho) C' through one LDL' recursion over the constraint rows
 #
 # Every period constraint the relational layer builds has contiguous,
-# non-overlapping row support [s_a, e_a] with weights w_a, so V0 follows
-# from per-row geometric sums instead of an n x n Sigma0 per rho:
+# non-overlapping row support [lo_a, hi_a] with weights w_a.  Both models
+# are state-space processes s_t = F s_{t-1} + noise:
 #
-#   * Chow-Lin, Sigma0 = rho^|i-j| / (1-rho^2):  for a < b
-#       V0[a,b] = A_a rho^(s_b - e_a) B_b / (1-rho^2),
-#       A_a = sum_r w_ar rho^(e_a - s_a - r),  B_b = sum_r w_br rho^r,
-#     and each diagonal entry is one m x m sum over its own row.
-#   * Litterman, Sigma0 = Delta^{-1} H^{-1} H^{-T} Delta^{-T} (H = I - rho L):
-#       V0 = M M',  M = (C Delta^{-1}) H^{-1}.
-#     C Delta^{-1} is a reverse cumsum of each row (its total weight W_a
-#     before s_a), and H^{-1} a discounted reverse cumsum, so before its
-#     row's block M[a, j] = W_a g(s_a - j) + rho^(s_a - j) M[a, s_a] with
-#     g(k) = sum_{i<k} rho^i: all terms positive, stable up to rho -> 1.
+#   * Chow-Lin: s_t = x_t, the stationary AR(1) x_t = rho x_{t-1} + e_t, so
+#     F^d = rho^d and Sigma0 = rho^|i-j| / (1-rho^2);
+#   * Litterman: s_t = (x_t, e_t) with x_t = x_{t-1} + e_t and
+#     e_t = rho e_{t-1} + eps_t, started at zero (Sigma0 =
+#     Delta^{-1} H^{-1} H^{-T} Delta^{-T}), so F^d = [[1, rho g(d)],
+#     [0, rho^d]] with g(d) = sum_{i<d} rho^i.
+#
+# Row a's aggregate w_a' x[lo_a..hi_a] loads on s_{hi_{a-1}}, the state at
+# the end of the previous row (hi_{-1} = lo_0 - 1), through
+# u_a = sum_r w_ar h' F^{tau_r} with tau_r = lo_a + r - hi_{a-1}; the rest
+# of it is noise that enters after hi_{a-1}.  So V0 is quasiseparable,
+# V0[b, a] = u_b' Phi_{b-1} ... Phi_{a+1} v_a for a < b with
+# Phi_a = F^{hi_a - hi_{a-1}}, and its LDL' is the innovations form of the
+# Kalman filter over the rows.  With P_a the covariance of s_{hi_{a-1}}
+# given rows 0..a-1:
+#
+#   D_a     = u_a' P_a u_a + Qyy_a
+#   l_a     = (Phi_a P_a u_a + Qsy_a) / D_a
+#   P_{a+1} = Phi_a P_a Phi_a' + Qss_a - D_a l_a l_a'
+#
+# where Qyy, Qsy and Qss are the moments of row a's aggregate and of
+# s_{hi_a} from the noise after hi_{a-1} alone: a process started at zero,
+# whose moments are sums of positive terms, stable up to rho -> 1.  P is a
+# conditional covariance, so the recursion never forms the marginal
+# V0[a, a] (which grows like t^3 for Litterman) only to cancel it.  The
+# same loop runs the forward solve w = L^{-1} r (w_a = r_a - u_a' p_a,
+# p_{a+1} = Phi_a p_a + l_a w_a).  The likelihood needs only w for
+# r = [CX, y] and D, log det V0 being sum log D_a (:func:`_concentrate`);
+# the back-substitution x = L^{-T} v (x_a = v_a - l_a' q_a,
+# q_{a-1} = u_a x_a + Phi_a' q_a) runs once, at the fitted rho.  O(n_low)
+# per rho in (G,)-vector ops over a rho grid.  u, Phi and the Q moments
+# depend only on a row's shape (lead lo_a - hi_{a-1}, length and weights),
+# so they are formed once per run of rows of one shape.
 #
 # The post-fit step needs only Sigma0 (C' z) for one vector, which both
 # families give through O(n) first-order recursions (_SIGMA_TIMES), and the
-# band precision (_apply_precision_band) for the standard errors.
+# precision's square root (_whiten) for the standard errors.
 # ---------------------------------------------------------------------------
 
-def _v0_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _constraint_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row contiguous support ``[lo_i, hi_i]`` of a dense constraint
+    matrix — ``ValueError`` for an empty or non-contiguous row."""
+    nz = C != 0
+    counts = nz.sum(axis=1)
+    empty = np.flatnonzero(counts == 0)
+    if empty.size:
+        raise ValueError(f"constraint row {empty[0]} is empty")
+    lo = nz.argmax(axis=1)
+    hi = C.shape[1] - 1 - nz[:, ::-1].argmax(axis=1)
+    gappy = np.flatnonzero(hi - lo + 1 != counts)
+    if gappy.size:
+        raise ValueError(f"constraint row {gappy[0]} support is not contiguous")
+    return lo, hi
+
+
+def _blocks(C, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """``(lo, hi, W)``: each constraint row's first and last column and its
     weights, zero-padded to the longest row (``W[a, r] = C[a, lo_a + r]``).
-    ``ValueError`` unless rows are contiguous and do not overlap."""
-    lo, hi = _constraint_blocks(C)
-    if np.any(lo[1:] <= hi[:-1]):
-        raise ValueError("constraint rows overlap")
+    ``C`` is the dense (n_low, n) matrix, or — for series long enough that
+    it would itself be the memory wall, e.g. 8000 x 96000 = 6 GB — the block
+    form ``(lo, hi, vals)`` with ``vals`` the rows' coefficients
+    concatenated.  ``ValueError`` unless the rows are non-empty, contiguous,
+    non-overlapping and inside the n high-frequency columns."""
+    if isinstance(C, np.ndarray):
+        lo, hi = _constraint_blocks(C)
+    else:
+        lo, hi, vals = (np.asarray(v) for v in C)
+        lo, hi = lo.astype(int), hi.astype(int)
     lens = hi - lo + 1
-    rows = np.repeat(np.arange(len(lo)), lens)
-    cols = _block_col_idx(lo, lens)
-    W = np.zeros((len(lo), int(lens.max())))
-    W[rows, cols - lo[rows]] = C[rows, cols]
+    order = np.argsort(lo)
+    if (lo.size == 0 or np.any(lens < 1) or lo[order[0]] < 0 or hi.max() >= n
+            or np.any(lo[order[1:]] <= hi[order[:-1]])):
+        raise ValueError(
+            "constraint rows must be non-empty, non-overlapping and inside the "
+            "high-frequency axis"
+        )
+    r = np.arange(lens.max())
+    inside = r < lens[:, None]
+    if isinstance(C, np.ndarray):
+        cols = np.minimum(lo[:, None] + r, hi[:, None])
+        return lo, hi, np.where(inside, C[np.arange(lo.size)[:, None], cols], 0.0)
+    if vals.shape[0] != lens.sum():
+        raise ValueError("vals length must equal total block support")
+    W = np.zeros(inside.shape)
+    W[inside] = vals
     return lo, hi, W
 
 
-def _chow_lin_v0(rho: np.ndarray, blocks: tuple, n: int) -> np.ndarray:
-    """(G, n_low, n_low) Chow-Lin V0 stack (see the section comment)."""
+def _row_shapes(blocks: tuple) -> tuple:
+    """The row shapes of ``blocks`` (rows in column order):
+    ``(shape, span, tau, low, lag, back, Wj, WW, lo0)``.  ``shape[a]`` numbers
+    the run of equal shapes row a is in (a shape is the row's lead
+    lo_a - hi_{a-1}, length and weights; hi_{-1} = lo_0 - 1).  Per shape j:
+    ``span[j]`` = hi_a - hi_{a-1}; ``tau[j, r]`` = lo_a + r - hi_{a-1}, the
+    lead on the padding; ``low``/``lag`` the min and |difference| of every
+    pair of taus; ``back`` = span - tau; ``Wj[j]`` the weights and ``WW[j]``
+    their outer product.  ``lo0`` is the first row's first column."""
     lo, hi, W = blocks
-    n_low, m = W.shape
-    pw = rho[:, None] ** np.arange(n)[None, :]                  # (G, n)
-    r = np.arange(m)
-    to_last = np.maximum((hi - lo)[:, None] - r[None, :], 0)    # e_a - s_a - r
-    A = np.einsum("ar,gar->ga", W, pw[:, to_last])
-    B = np.einsum("ar,gr->ga", W, pw[:, :m])
-    gap = np.maximum(lo[None, :] - hi[:, None], 0)              # s_b - e_a
-    V = np.triu(A[:, :, None] * B[:, None, :] * pw[:, gap], 1)
-    V += V.transpose(0, 2, 1)
-    diag = np.arange(n_low)
-    lags = np.abs(r[:, None] - r[None, :])
-    V[:, diag, diag] = np.einsum("ar,grs,as->ga", W, pw[:, lags], W)
-    return V / (1.0 - rho**2)[:, None, None]
-
-
-def _litterman_v0(rho: np.ndarray, blocks: tuple, n: int) -> np.ndarray:
-    """(G, n_low, n_low) Litterman V0 stack = M M' (see the section
-    comment), from prefix sums instead of the (G, n_low, n) factor.
-
-    Row a of M is zero after e_a, equals ``in_row`` on its block, and before
-    it is W_a g(k) + mu_a rho^k at k = s_a - j.  With g(k + q) = g(q) +
-    rho^q g(k), every entry M[b, j] with j <= e_a < s_b splits as
-    W_b g(kap) + rho^kap (W_b g(q) + mu_b rho^q), kap = s_b - e_a - 1 and
-    q = e_a + 1 - j, so V0[a, b] needs only three per-row sums over j <= e_a
-    (t1, t2, t3), and those follow from prefix sums of g, rho^k and their
-    products."""
-    lo, hi, W = blocks
-    n_low, m = W.shape
-    G = len(rho)
-    pw = rho[:, None] ** np.arange(n + 1)[None, :]              # rho^k, (G, n+1)
-    g = np.concatenate([np.zeros((G, 1)), np.cumsum(pw[:, :n], axis=1)], axis=1)
-
-    def prefix(terms: np.ndarray) -> np.ndarray:                # sum over k = 1..K
-        return np.concatenate([np.zeros((G, 1)), np.cumsum(terms[:, 1:], axis=1)], axis=1)
-
-    sg, sp = prefix(g)[:, lo], prefix(pw)[:, lo]
-    sgg, sgp, spp = (prefix(t)[:, lo] for t in (g * g, g * pw, pw * pw))
-    K = np.cumsum(W[:, ::-1], axis=1)[:, ::-1]                  # C Delta^{-1} in-row
-    r = np.arange(m)
-    upper = np.triu(pw[:, np.abs(r[None, :] - r[:, None])])    # rho^(s-r), s >= r
-    in_row = np.einsum("grs,as->gar", upper, K)                 # (G, n_low, m)
-    tot, mu = K[:, 0], in_row[:, :, 0]
-    lens = hi - lo + 1
-    q = np.maximum(lens[:, None] - r[None, :], 0)               # e_a + 1 - j on the block
-    before1 = tot * sg + mu * sp
-    t1 = before1 + in_row.sum(axis=2)
-    t2 = (g[:, lens] * before1 + pw[:, lens] * (tot * sgg + mu * sgp)
-          + np.einsum("gar,gar->ga", in_row, g[:, q]))
-    t3 = pw[:, lens] * (tot * sgp + mu * spp) + np.einsum("gar,gar->ga", in_row, pw[:, q])
-    kap = np.maximum(lo[None, :] - hi[:, None] - 1, 0)          # s_b - e_a - 1
-    V = np.triu(
-        tot[None, None, :] * g[:, kap] * t1[:, :, None]
-        + pw[:, kap] * (tot[None, None, :] * t2[:, :, None] + mu[:, None, :] * t3[:, :, None]),
-        1,
+    lead = lo - np.concatenate([[lo[0] - 1], hi[:-1]])
+    keys = np.column_stack([lead, hi - lo + 1, W])
+    new = np.concatenate([[True], np.any(keys[1:] != keys[:-1], axis=1)])
+    lead, lens, Wj = keys[new, 0].astype(int), keys[new, 1].astype(int), keys[new, 2:]
+    r = np.arange(W.shape[1])
+    tau = np.where(r < lens[:, None], lead[:, None] + r, lead[:, None])
+    span = lead + lens - 1
+    return (
+        (np.cumsum(new) - 1).tolist(), span, tau,
+        np.minimum(tau[:, :, None], tau[:, None, :]), np.abs(tau[:, :, None] - tau[:, None, :]),
+        span[:, None] - tau, Wj, Wj[:, :, None] * Wj[:, None, :], int(lo[0]),
     )
-    V += V.transpose(0, 2, 1)
-    diag = np.arange(n_low)
-    V[:, diag, diag] = (tot**2 * sgg + 2.0 * tot * mu * sgp + mu**2 * spp
-                        + np.einsum("gar,gar->ga", in_row, in_row))
-    return V
+
+
+def _powers(rho: np.ndarray, top: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(rho^t, g(t), g2(t))`` for t = 0..top, g(t) = sum_{i<t} rho^i and
+    g2(t) = sum_{i<t} rho^(2i): (G, top + 1) each."""
+    pw = rho[:, None] ** np.arange(top + 1)
+    zero = np.zeros((len(rho), 1))
+    g = np.concatenate([zero, np.cumsum(pw[:, :-1], axis=1)], axis=1)
+    g2 = np.concatenate([zero, np.cumsum(pw[:, :-1] ** 2, axis=1)], axis=1)
+    return pw, g, g2
+
+
+def _columns(*arrays: np.ndarray) -> list[tuple]:
+    """Per row shape j, the tuple of every (G, J) array's column j, as (G, 1)."""
+    return [tuple(a[:, j, None] for a in arrays) for j in range(arrays[0].shape[1])]
+
+
+def _ar1_pieces(rho: np.ndarray, rows: tuple) -> tuple[list, np.ndarray]:
+    """Chow-Lin: per row shape ``(u, Phi, u^2, Phi u, Phi^2, Qyy, Qsy,
+    Qss)`` and P_0 = 1 / (1 - rho^2), the stationary variance.  The
+    zero-started AR(1) has Var x_t = g2(t) and Cov(x_t, x_t') =
+    rho^(t'-t) g2(t) for t <= t'."""
+    _shape, span, tau, low, lag, back, Wj, WW, _lo0 = rows
+    pw, _g, g2 = _powers(rho, int(span.max()))
+    u = (Wj * pw[:, tau]).sum(axis=2)
+    phi = pw[:, span]
+    pieces = _columns(
+        u,
+        phi,
+        u * u,
+        phi * u,
+        phi * phi,
+        (WW * pw[:, lag] * g2[:, low]).sum(axis=(2, 3)),
+        (Wj * pw[:, back] * g2[:, tau]).sum(axis=2),
+        g2[:, span],
+    )
+    return pieces, 1.0 / (1.0 - rho[:, None] ** 2)
+
+
+def _rw_pieces(rho: np.ndarray, rows: tuple) -> tuple[list, tuple]:
+    """Litterman: per row shape ``(u1, u2, f, phi, phi^2, Qyy, Qsy1, Qsy2,
+    Qss11, Qss12, Qss22)`` with Phi = [[1, f], [0, phi]], and P_0, the
+    covariance of the zero-started state at lo_0 - 1.  After t steps from
+    zero, Var e = g2(t), Cov(x, e) = g(t) g(t+1) / (1 + rho) and Var x is
+    the cumsum of 2 rho Cov(x, e)(t-1) + g2(t): all positive terms."""
+    _shape, span, tau, low, lag, back, Wj, WW, lo0 = rows
+    pw, g, g2 = _powers(rho, max(int(span.max()), lo0) + 1)
+    r, r3, r4 = rho[:, None], rho[:, None, None], rho[:, None, None, None]
+    ce = g[:, :-1] * g[:, 1:] / (1.0 + r)
+    ve = g2[:, :-1]
+    vx = np.cumsum(np.concatenate([np.zeros_like(r), 2.0 * r * ce[:, :-1] + ve[:, 1:]], axis=1),
+                   axis=1)
+    phi = pw[:, span]
+    pieces = _columns(
+        np.broadcast_to(Wj.sum(axis=1), phi.shape),
+        r * (Wj * g[:, tau]).sum(axis=2),
+        r * g[:, span],
+        phi,
+        phi * phi,
+        (WW * (vx[:, low] + r4 * g[:, lag] * ce[:, low])).sum(axis=(2, 3)),
+        (Wj * (vx[:, tau] + r3 * g[:, back] * ce[:, tau])).sum(axis=2),
+        (Wj * pw[:, back] * ce[:, tau]).sum(axis=2),
+        vx[:, span],
+        ce[:, span],
+        ve[:, span],
+    )
+    return pieces, (vx[:, lo0, None], ce[:, lo0, None], ve[:, lo0, None])
+
+
+def _ldl_ar1(shape: list, pieces: list, p: np.ndarray, rhs: np.ndarray) -> tuple:
+    """The LDL' recursion (see the section comment) for a scalar state:
+    ``(L^{-1} rhs, D, back)`` with ``back(v)`` = L^{-T} v; (G, n_low, c)
+    and (G, n_low)."""
+    pf = np.zeros((p.shape[0], rhs.shape[1]))
+    Ds, ells, ws = [], [], []
+    for r_a, j in zip(rhs, shape):
+        u, phi, uu, phiu, phi2, qyy, qsy, qss = pieces[j]
+        D = uu * p + qyy
+        num = phiu * p + qsy
+        ell = num / D
+        p = phi2 * p + qss - num * ell
+        w = r_a - u * pf
+        pf = phi * pf + ell * w
+        Ds.append(D)
+        ells.append(ell)
+        ws.append(w)
+
+    def back(v: np.ndarray) -> np.ndarray:
+        q = np.zeros_like(v[:, 0])
+        x = [q] * len(shape)
+        for a in range(len(shape) - 1, -1, -1):
+            u, phi = pieces[shape[a]][:2]
+            x[a] = v[:, a] - ells[a] * q
+            q = u * x[a] + phi * q
+        return np.stack(x, axis=1)
+
+    return np.stack(ws, axis=1), np.hstack(Ds), back
+
+
+def _ldl_rw(shape: list, pieces: list, p: tuple, rhs: np.ndarray) -> tuple:
+    """The LDL' recursion for Litterman's two-dimensional state, in scalar
+    ops on P = [[p11, p12], [p12, p22]]."""
+    p11, p12, p22 = p
+    pf1 = pf2 = np.zeros((p11.shape[0], rhs.shape[1]))
+    Ds, l1s, l2s, ws = [], [], [], []
+    for r_a, j in zip(rhs, shape):
+        u1, u2, f, phi, phi2, qyy, qs1, qs2, q11, q12, q22 = pieces[j]
+        pu1 = p11 * u1 + p12 * u2
+        pu2 = p12 * u1 + p22 * u2
+        D = u1 * pu1 + u2 * pu2 + qyy
+        num1 = pu1 + f * pu2 + qs1
+        num2 = phi * pu2 + qs2
+        l1, l2 = num1 / D, num2 / D
+        t = p12 + f * p22
+        p11 = p11 + f * (p12 + t) + q11 - num1 * l1
+        p12 = phi * t + q12 - num1 * l2
+        p22 = phi2 * p22 + q22 - num2 * l2
+        w = r_a - u1 * pf1 - u2 * pf2
+        pf1, pf2 = pf1 + f * pf2 + l1 * w, phi * pf2 + l2 * w
+        Ds.append(D)
+        l1s.append(l1)
+        l2s.append(l2)
+        ws.append(w)
+
+    def back(v: np.ndarray) -> np.ndarray:
+        q1 = q2 = np.zeros_like(v[:, 0])
+        x = [q1] * len(shape)
+        for a in range(len(shape) - 1, -1, -1):
+            u1, u2, f, phi = pieces[shape[a]][:4]
+            x[a] = v[:, a] - l1s[a] * q1 - l2s[a] * q2
+            q1, q2 = u1 * x[a] + q1, u2 * x[a] + f * q1 + phi * q2
+        return np.stack(x, axis=1)
+
+    return np.stack(ws, axis=1), np.hstack(Ds), back
+
+
+_STATE_FORMS = {"chow-lin": (_ar1_pieces, _ldl_ar1), "litterman": (_rw_pieces, _ldl_rw)}
+
+
+def _v0_factor(method: str, rho: np.ndarray, rows: tuple, rhs: np.ndarray) -> tuple:
+    """V0 = L D L' for every rho of a grid, applied to ``rhs`` (n_low, c):
+    ``(L^{-1} rhs, D, back)`` with ``back(v)`` = L^{-T} v, (G, n_low, c)
+    and (G, n_low); ``rows`` from :func:`_row_shapes`."""
+    pieces_fn, ldl = _STATE_FORMS[method]
+    pieces, p0 = pieces_fn(np.asarray(rho, dtype=float), rows)
+    return ldl(rows[0], pieces, p0, rhs)
 
 
 def _ar_filter(v: np.ndarray, rho: float, reverse: bool = False) -> np.ndarray:
@@ -540,57 +703,29 @@ def _litterman_sigma_times(rho: float, v: np.ndarray) -> np.ndarray:
     return np.cumsum(_ar_filter(u, rho))
 
 
-_V0_FORMS = {"chow-lin": _chow_lin_v0, "litterman": _litterman_v0}
 _SIGMA_TIMES = {"chow-lin": _chow_lin_sigma_times, "litterman": _litterman_sigma_times}
 
 
-def _v0_grid_fn(
-    C: np.ndarray, cov_builder: Callable[[float, float, int], np.ndarray]
-) -> Callable[[np.ndarray], np.ndarray]:
-    """``grid -> V0 stack`` for one of the two ``COVARIANCE_BUILDERS``: the
-    closed form on block-structured C; otherwise C Sigma0 C' per rho from
-    the builder (hand-made constraint matrices)."""
-    n = C.shape[1]
-    try:
-        blocks = _v0_blocks(C)
-    except ValueError:
-        return lambda grid: np.stack([C @ cov_builder(r, 1.0, n) @ C.T for r in grid])
-    v0_form = _V0_FORMS[next(m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder)]
-    return lambda grid: v0_form(np.asarray(grid, dtype=float), blocks, n)
-
-
 def _concentrate(
-    y: np.ndarray,
-    CX: np.ndarray,
-    Vinv_CX: np.ndarray,
-    Vinv_y: np.ndarray,
-    logdet: np.ndarray,
+    CXw: np.ndarray, yw: np.ndarray, D: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Concentrated GLS over a rho grid from V^{-1}[CX, y] (``(G, n_low,
-    k)`` and ``(G, n_low)``) and log det V of the unit-scale V = C Sigma0 C':
-    ``(nll, s_star, beta, z)`` per grid point, z = V^{-1}(y - CX beta).
-    sigma2 is a pure scale of Sigma, so the likelihood profiles it out at
-    s_star = resid' z / n_low; beta and z do not depend on it."""
-    n_low = y.shape[0]
-    A = np.einsum("ik,gil->gkl", CX, Vinv_CX)
-    b = np.einsum("ik,gi->gk", CX, Vinv_y)
-    beta = np.linalg.solve(A, b[..., None])[..., 0]
-    resid = y[None, :] - beta @ CX.T
-    z = Vinv_y - np.einsum("gik,gk->gi", Vinv_CX, beta)
-    s_star = np.maximum(np.einsum("gi,gi->g", resid, z) / n_low, 1e-300)
+    """Concentrated GLS over a rho grid in the coordinates of the unit-scale
+    V0 = L D L' = C Sigma0 C': from L^{-1}[CX, y] (``(G, n_low, k)`` and
+    ``(G, n_low)``) and D (``(G, n_low)``), ``(nll, s_star, beta, e)`` per
+    grid point, with e = D^{-1} L^{-1}(y - CX beta), so that
+    V0^{-1}(y - CX beta) = L^{-T} e, and log det V0 = sum log D.  sigma2 is
+    a pure scale of Sigma, so the likelihood profiles it out at
+    s_star = resid' V0^{-1} resid / n_low; beta and e do not depend on
+    it."""
+    n_low = D.shape[1]
+    CXd = (CXw / D[..., None]).transpose(0, 2, 1)
+    beta = np.linalg.solve(CXd @ CXw, CXd @ yw[..., None])
+    resid = yw - (CXw @ beta)[..., 0]
+    e = resid / D
+    s_star = np.maximum((resid * e).sum(axis=1) / n_low, 1e-300)
+    logdet = np.log(D).sum(axis=1)
     nll = 0.5 * (n_low * np.log(2.0 * np.pi) + n_low * np.log(s_star) + logdet + n_low)
-    return nll, s_star, beta, z
-
-
-def _scan(fn: Callable[[np.ndarray], np.ndarray], grid: np.ndarray, member_bytes: int,
-          budget: int) -> np.ndarray:
-    """``fn`` over ``grid`` in chunks whose working set fits ``budget``."""
-    chunk = max(1, budget // max(member_bytes, 1))
-    return np.concatenate([fn(grid[s : s + chunk]) for s in range(0, len(grid), chunk)])
-
-
-#: working-set budget of one chunk of the closed-form profile scan
-_V0_SCAN_BYTES = 256 << 20
+    return nll, s_star, beta[..., 0], e
 
 
 def _profile_fit(
@@ -671,343 +806,37 @@ def beta_std_errors(Sigma: np.ndarray, X: np.ndarray) -> np.ndarray:
     return np.sqrt(np.diagonal(np.linalg.inv(X.T @ Sinv_X)))
 
 
-# ---------------------------------------------------------------------------
-# the banded KKT of the long regression fits (SURVEY.md §7 M8 extension)
-#
-# Spark parallelism is across SERIES; a single long series still hits the
-# closed form's O(n_low^3) per rho.  The GLS distribution step is the
-# equality-constrained least squares
-#
-#     min w' P w   s.t.   C w = b        KKT: [[P, C'], [C, 0]] [w; mu] = [0; b]
-#
-# with P the AR(1) / random-walk precision Sigma0^{-1} of Chow-Lin and
-# Litterman.  The KKT is BANDED once each constraint row is interleaved
-# after its period's last member: P couples x_t only with x_{t +/- e} for
-# its e < n_diags diagonals, and each constraint row touches one period's
-# members.  Bandwidth ~ factor + n_diags, so one solve costs O(n * b^2) time
-# and O(n * b) memory — a 100k-point series solves in seconds where the
-# dense path would need 10^15 flops and 80 GB for Sigma.  One index skeleton
-# (_gls_kkt_indices), one assembly (_kkt_solve) and one grid LU
-# (_banded_lu_solve_grid_t) serve both methods.
-# ---------------------------------------------------------------------------
 
-def _constraint_blocks(C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row contiguous support ``[lo_i, hi_i]`` of the constraint matrix
-    — ``ValueError`` for an empty or non-contiguous row, so callers can fall
-    back to the closed form."""
-    n_low = C.shape[0]
-    lo = np.full(n_low, -1, dtype=int)
-    hi = np.full(n_low, -1, dtype=int)
-    for i in range(n_low):
-        nz = np.flatnonzero(C[i])
-        if nz.size == 0:
-            raise ValueError(f"constraint row {i} is empty")
-        lo[i], hi[i] = nz[0], nz[-1]
-        if not np.all(np.diff(nz) == 1):
-            raise ValueError(f"constraint row {i} support is not contiguous")
-    return lo, hi
-
-
-def _interleave_positions(
-    n: int, hi: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """Interleaved KKT ordering: x_t, then every lambda_i whose period ends
-    at t — the permutation that makes the KKT system banded.  ``hi`` must
-    be strictly increasing."""
-    if np.any(hi >= n):
-        raise ValueError("constraint end column beyond the high-freq axis")
-    pos = np.arange(n) + np.searchsorted(hi, np.arange(n))  # x_t after every lambda_i, hi_i < t
-    lpos = hi + np.arange(1, hi.shape[0] + 1)               # lambda_i right after x_{hi_i}
-    return pos, lpos, n + hi.shape[0]
-
-
-def _banded_lu_solve_grid_t(
-    abt: np.ndarray, kl: int, ku: int, b: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Solve a stack of ``G`` banded systems ``A x = b`` (a rho grid of a
-    profile-likelihood scan, or ``G = 1``) by Gaussian elimination with
-    partial pivoting, data-parallel over the stack so the per-column Python
-    overhead is paid once; ``b`` is multi-RHS, (G, n, m).  Pure NumPy
-    (scipy is not a dependency); the column loop costs O(n * (kl + ku) * kl)
-    scalar work per system — linear in n, which is the whole point.
-    Returns ``(x, logabsdet)``: the (G, n, m) solutions and each system's
-    log|det| (sum of log|pivot|).
-
-    Band storage is TRANSPOSED, ``abt`` (G, n, W) with
-    ``abt[g, c, kl + ku + i - c] = A[i, c]`` (one system-column per
-    C-contiguous row).  In this layout the elimination's parallelogram
-    update, multiplier row, and back-substitution row are all REGULAR
-    STRIDED VIEWS of the flat buffer (element (i, c) lives at flat
-    ``c*(W-1) + kl + ku + i``, so fixed-i-varying-c is a stride-(W-1)
-    walk) — one fused vector op each, no per-column index-array
-    gather/scatter.  The per-member pivot row swap still needs fancy
-    indexing but only fires at the (rare) columns where a member pivots.
-    ``abt`` and ``b`` are modified in place.
-    """
-    from numpy.lib.stride_tricks import as_strided
-
-    G, n, W = abt.shape
-    if not abt.flags.c_contiguous:
-        raise ValueError("band storage must be C-contiguous")  # reshape would copy
-    if W != 2 * kl + ku + 1:
-        raise ValueError(f"band storage has {W} rows, expected {2 * kl + ku + 1}")
-    diag = kl + ku
-    Fv = abt.reshape(G, n * W)
-    sG, sE = Fv.strides
-    sC = (W - 1) * sE
-    gi = np.arange(G)
-    cbase = np.arange(n + kl + ku)
-    pivs = np.empty((G, n))                # log|det| summed once at the end
-    for j in range(n):
-        nm = min(kl, n - 1 - j)
-        col = abt[:, j, diag : diag + nm + 1]
-        pj = np.argmax(np.abs(col), axis=1)
-        jend = min(j + ku + kl, n - 1)
-        if pj.any():
-            # swap system-rows j and j+pj[g] over columns j..jend: flat
-            # positions c*(W-1) + diag + j (+ pj) — per-member offsets, so
-            # fancy indexing, but only at pivoting columns
-            idx = cbase[j : jend + 1] * (W - 1) + (diag + j)
-            idx2 = idx[None, :] + pj[:, None]
-            r1 = Fv[:, idx].copy()
-            Fv[:, idx] = Fv[gi[:, None], idx2]
-            Fv[gi[:, None], idx2] = r1
-            tb = b[:, j, :].copy()
-            b[:, j, :] = b[gi, j + pj, :]
-            b[gi, j + pj, :] = tb
-        piv = abt[:, j, diag]
-        pivs[:, j] = piv
-        L2 = jend - j
-        if nm:
-            m = abt[:, j, diag + 1 : diag + nm + 1] / piv[:, None]
-            if L2:
-                off0 = (j + 1) * (W - 1) + diag + j
-                rowj = as_strided(Fv[:, off0:], shape=(G, L2), strides=(sG, sC))
-                blk = as_strided(
-                    Fv[:, off0 + 1 :], shape=(G, L2, nm), strides=(sG, sC, sE)
-                )
-                blk -= m[:, None, :] * rowj[:, :, None]
-            b[:, j + 1 : j + nm + 1, :] -= m[:, :, None] * b[:, j, None, :]
-    if not np.all(pivs):
-        raise np.linalg.LinAlgError("singular banded matrix in grid solve")
-    logdet = np.log(np.abs(pivs)).sum(axis=1)
-    x = np.empty_like(b)
-    for i in range(n - 1, -1, -1):
-        cend = min(i + ku + kl, n - 1)
-        L = cend - i
-        if L:
-            off = (i + 1) * (W - 1) + diag + i
-            rowi = as_strided(Fv[:, off:], shape=(G, L), strides=(sG, sC))
-            s = np.einsum("gl,glm->gm", rowi, x[:, i + 1 : cend + 1, :])
-            x[:, i, :] = (b[:, i, :] - s) / abt[:, i, diag][:, None]
-        else:
-            x[:, i, :] = b[:, i, :] / abt[:, i, diag][:, None]
-    return x, logdet
-
-
-def _gls_kkt_indices(C, n: int | None = None, n_diags: int = 2) -> dict:
-    """Skeleton of the interleaved KKT [[P, C'], [C, 0]] (see the section
-    comment): constraint blocks, interleaved ordering, flattened scatter
-    indices, and bandwidth.  Built once per series, reused by every solve.
-    ``n_diags`` is the band width of P: 2 (tridiagonal) for Chow-Lin's
-    AR(1) precision, 3 (pentadiagonal) for Litterman's.
-
-    ``C`` is either the dense constraint matrix, or — for series long
-    enough that a dense (n_low, n) would itself be the memory wall, e.g.
-    8000 x 96000 = 6 GB — the block form ``(lo, hi, vals)`` with per-row
-    contiguous support ``[lo_i, hi_i]`` and ``vals`` the concatenated
-    nonzero coefficients (requires explicit ``n``)."""
-    dense = isinstance(C, np.ndarray)
-    if dense:
-        n = C.shape[1]
-        lo, hi = _constraint_blocks(C)
-    else:
-        lo, hi, cvals = C
-        if n is None:
-            raise ValueError("block-form constraints need an explicit n")
-        lo, hi = np.asarray(lo, dtype=int), np.asarray(hi, dtype=int)
-        if lo[0] < 0 or np.any(hi < lo):
-            raise ValueError("constraint block support out of range")
-    if np.any(np.diff(hi) <= 0):
-        raise ValueError("constraint rows must end at strictly increasing columns")
-    n_low = lo.shape[0]
-    lens = hi - lo + 1
-    row_idx = np.repeat(np.arange(n_low), lens)
-    col_idx = _block_col_idx(lo, lens)
-    cvals = C[row_idx, col_idx].astype(float) if dense else np.asarray(cvals, dtype=float)
-    if cvals.shape[0] != col_idx.shape[0]:
-        raise ValueError("vals length must equal total block support")
-    pos, lpos, N = _interleave_positions(n, hi)
-    # scatter targets: the banded precision's diagonals (x_i, x_{i+e}) for
-    # e = 0..n_diags-1, then C entries (x_col, lambda_row) — lambda sits
-    # after its period's last member, so lpos[row] > pos[col] always:
-    # (a, b) = (pos[col], lpos[row])
-    ra = np.concatenate(
-        [pos[: n - e] for e in range(n_diags)] + [pos[col_idx]]
-    )
-    rb = np.concatenate(
-        [pos[e:] for e in range(n_diags)] + [lpos[row_idx]]
-    )
-    bw = int(np.max(rb - ra))
-    return {
-        "n_low": n_low, "N": N, "pos": pos, "lpos": lpos,
-        "ra": ra, "rb": rb, "cvals": cvals, "bw": bw,
-        "row_idx": row_idx, "col_idx": col_idx,
-    }
-
-
-def _block_col_idx(lo: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Concatenated ``arange(lo_i, lo_i + lens_i)`` per constraint block."""
-    if lens.sum() == 0:
-        return np.empty(0, dtype=int)
-    step = np.ones(int(lens.sum()), dtype=int)
-    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    # +1 within a block; at each block start, jump from the previous block's
-    # last column to this block's first
-    step[starts[1:]] = lo[1:] - (lo[:-1] + lens[:-1] - 1)
-    step[0] = lo[0] + 1  # cumsum yields lo[0] + 1 - 1 = lo[0] at position 0
-    return np.cumsum(step) - 1
-
-
-def _kkt_solve(
-    band: np.ndarray, skel: dict, B_low: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Assemble + solve the interleaved KKT [[P, C'], [C, 0]] [w; mu] =
-    [0; B_low] for a stack of G band precisions P, one per rho of a grid.
-    ``band`` (G, .) holds P's diagonals e = 0..n_diags-1 concatenated in
-    e-order (the layout of the skeleton's scatter indices); ``B_low``
-    (n_low, m) sits on the lambda rows.
-
-    Returns ``(mu, w, logdet)``: the lambda rows (G, n_low, m), the x rows
-    (G, n, m) — w minimizes w'Pw subject to C w = B_low — and log|det KKT|
-    per member: mu = -(C P^{-1} C')^{-1} B_low and
-    w = P^{-1} C' (C P^{-1} C')^{-1} B_low.
-    """
-    N, pos, lpos = skel["N"], skel["pos"], skel["lpos"]
-    ra, rb, cvals, bw = skel["ra"], skel["rb"], skel["cvals"], skel["bw"]
-    kl = ku = bw
-    diag = kl + ku
-    G = band.shape[0]
-    vv = np.concatenate([band, np.broadcast_to(cvals, (G, cvals.shape[0]))], axis=1)
-    # assemble straight into the transposed layout the strided solver wants
-    # (abt[g, c, diag + i - c] = A[i, c]); the skeleton has no duplicate
-    # (a, b) pairs, so fancy += is a plain scatter
-    abt = np.zeros((G, N, 2 * kl + ku + 1))
-    abt[:, rb, diag + ra - rb] += vv
-    off = ra != rb
-    abt[:, ra[off], diag + rb[off] - ra[off]] += vv[:, off]
-
-    B = np.zeros((G, N, B_low.shape[1]))
-    B[:, lpos, :] = B_low[None, :, :]
-    sol, logdet = _banded_lu_solve_grid_t(abt, kl, ku, B)
-    return sol[:, lpos, :], sol[:, pos, :], logdet
-
-
-# ---------------------------------------------------------------------------
-# banded Chow-Lin / Litterman precisions (SURVEY.md §4 scale path: the AR(1)
-# covariance has a closed-form TRIDIAGONAL inverse, Litterman's a
-# pentadiagonal one, so the whole GLS fit — profile likelihood included —
-# runs through the same _kkt_solve as the Denton family, O(n b^2) per rho,
-# never materializing Sigma)
-#
-# Identities used (M = unit-sigma2 covariance, P = M^{-1} its band precision):
-#   * Chow-Lin: M^{-1} = tridiag(diag=[1, 1+rho^2, ..., 1+rho^2, 1], off=-rho)
-#   * [[M^{-1}, C'], [C, 0]] [w; mu] = [0; b]  =>  mu = -(C M C')^{-1} b
-#     and w = M C' (C M C')^{-1} b — one banded solve yields BOTH the GLS
-#     normal-equation pieces (mu rows) and the distribution step (w rows).
-#   * log det(C M C') = log|det KKT| - log det M^{-1},
-#     log det M^{-1} = log(1 - rho^2) for the AR(1) precision, 0 for
-#     Litterman's (unit-triangular factors).
-# ---------------------------------------------------------------------------
-
-def _gram_band_chow_lin(rho: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Stacked band diagonals of Chow-Lin's AR(1) precision M^{-1} =
-    tridiag([1, 1+rho^2, ..., 1], -rho) for every rho, concatenated in
-    e-order, plus log det M^{-1} = log(1 - rho^2) per member."""
-    G = len(rho)
-    d0 = np.ones((G, n))
-    d0[:, 1:-1] = 1.0 + rho[:, None] ** 2
-    vv = np.concatenate(
-        [d0, np.broadcast_to(-rho[:, None], (G, n - 1))], axis=1
-    )
-    return vv, np.log(1.0 - rho**2)
-
-
-def _gram_band_litterman(rho: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Stacked band diagonals of Litterman's precision Delta' H' H Delta
-    (H = I - rho L, Delta = I - L): B = H Delta = I - (1+rho) L + rho L^2
-    has rows [1, -(1+rho), rho], so the Gram is PENTADIAGONAL with
-
-        g0 = 1 + (1+rho)^2 + rho^2   (edge-truncated at the last two rows)
-        g1 = -(1+rho)^2              (last entry -(1+rho))
-        g2 = rho
-
-    Both Delta and H are unit lower-triangular, so det(precision) = 1 and
-    the KKT log-det correction is ZERO per member."""
-    G = len(rho)
-    r = rho[:, None]
-    g0 = np.broadcast_to(1.0 + (1.0 + r) ** 2 + r**2, (G, n)).copy()
-    if n >= 2:
-        g0[:, -2] = 1.0 + (1.0 + rho) ** 2
-    g0[:, -1] = 1.0
-    g1 = np.broadcast_to(-((1.0 + r) ** 2), (G, max(n - 1, 0))).copy()
-    if n >= 2:
-        g1[:, -1] = -(1.0 + rho)
-    g2 = np.broadcast_to(r, (G, max(n - 2, 0)))
-    return np.concatenate([g0, g1, g2], axis=1), np.zeros(G)
-
-
-_GRAM_BANDS = {"chow-lin": (_gram_band_chow_lin, 2), "litterman": (_gram_band_litterman, 3)}
-
-
-#: memory budget for one banded profile-scan pass; the grid chunk adapts to
-#: it.  The wall-clock cost of the scan is dominated by the PER-COLUMN
-#: Python overhead of the elimination loop, paid once per pass — so the
-#: fewer passes the better, as long as the (chunk, 3bw+1, N) stack fits.
-_BANDED_SCAN_BYTES = 2 << 30
-
-
-def _banded_CX(X: np.ndarray, C, skel: dict) -> np.ndarray:
-    """C @ X for dense or block-form constraints."""
-    if isinstance(C, np.ndarray):
-        return C @ X
-    CX = np.zeros((skel["n_low"], X.shape[1]))
-    np.add.at(CX, skel["row_idx"], skel["cvals"][:, None] * X[skel["col_idx"]])
-    return CX
-
-
-def _apply_precision_band(rho: float, X: np.ndarray, reg_method: str) -> np.ndarray:
-    """M^{-1} @ X through the band diagonals (no dense precision)."""
-    gram_fn, n_diags = _GRAM_BANDS[reg_method]
-    n = X.shape[0]
-    vv, _ = gram_fn(np.array([rho]), n)
-    out = np.zeros_like(X, dtype=float)
-    start = 0
-    for e in range(n_diags):
-        g = vv[0, start : start + n - e]
-        start += n - e
-        if e == 0:
-            out += g[:, None] * X
-        else:
-            out[: n - e] += g[:, None] * X[e:]
-            out[e:] += g[:, None] * X[: n - e]
+def _whiten(rho: float, X: np.ndarray, reg_method: str) -> np.ndarray:
+    """B X with B'B = Sigma0^{-1}, by differences: Chow-Lin's AR(1)
+    precision factors as rows sqrt(1 - rho^2) x_0 and x_t - rho x_{t-1};
+    Litterman's Delta' H' H Delta as H Delta, d_t - rho d_{t-1} over the
+    first differences d of x (x_{-1} = 0)."""
+    X = np.asarray(X, dtype=float)
+    if reg_method == "chow-lin":
+        out = X.copy()
+        out[0] *= np.sqrt(1.0 - rho**2)
+        out[1:] -= rho * X[:-1]
+        return out
+    d = np.diff(X, axis=0, prepend=0.0)
+    out = d.copy()
+    out[1:] -= rho * d[:-1]
     return out
 
 
 def _std_errors(rho: float, sigma2: float, X: np.ndarray, reg_method: str) -> np.ndarray:
     """sqrt(diag((X' Sigma^{-1} X)^{-1})) with Sigma = sigma2 * Sigma0(rho),
-    through the band precision (ts_disagg.py:452-455).  sigma2 is applied
-    last, so an exact fit (sigma2 at the profile's 1e-300 floor) gives tiny
-    standard errors instead of overflowing."""
-    xtsx0 = X.T @ _apply_precision_band(rho, X, reg_method)
-    return np.sqrt(np.diagonal(np.linalg.inv(xtsx0)) * sigma2)
+    through the square root of the band precision (ts_disagg.py:452-455).
+    sigma2 is applied last, so an exact fit (sigma2 at the profile's 1e-300
+    floor) gives tiny standard errors instead of overflowing."""
+    BX = _whiten(rho, X, reg_method)
+    return np.sqrt(np.diagonal(np.linalg.inv(BX.T @ BX)) * sigma2)
 
 
 # ---------------------------------------------------------------------------
-# the regression fit driver: one fit for Chow-Lin and Litterman over two
-# back ends that differ only in where V^{-1} [CX, y] and log det V come
-# from (V = C Sigma0 C' at unit scale): the closed-form V0 stack, or the
-# banded KKT
+# the regression fit driver: one fit for Chow-Lin and Litterman, whose
+# likelihood and distribution step come from the LDL' recursion of the
+# unit-scale V0 = C Sigma0 C' at every length
 # ---------------------------------------------------------------------------
 
 _PROFILE_OPTIMIZERS = ("brent-profile", "profile")
@@ -1015,61 +844,60 @@ _SIMPLEX_OPTIMIZERS = ("nelder-mead", "powell", "l-bfgs-b")
 
 
 def _regression_backend(
-    y: np.ndarray, X: np.ndarray, C, method: str, banded: bool
+    y: np.ndarray, X: np.ndarray, C, method: str
 ) -> tuple[Callable[[np.ndarray], np.ndarray], Callable[[float], tuple]]:
-    """``(scan, evaluate)`` of the concentrated GLS fit of ``method``:
-    ``scan(grid)`` is the profile NLL over a rho grid, ``evaluate(rho)`` is
-    ``(nll, s_star, beta, y_hat)`` at one rho.
+    """``(profile, evaluate)`` of the concentrated GLS fit of ``method``:
+    ``profile(grid)`` is the (G, 2) array of ``(nll, s_star)`` over a rho
+    grid, ``evaluate(rho)`` is ``(nll, s_star, beta, y_hat)`` at one rho.
 
-    ``banded=False`` takes V^{-1} [CX, y] from the closed-form V0 stack and
-    distributes through Sigma0 C' z by the O(n) recursions; ``banded=True``
-    takes it from the banded KKT, whose w rows Sigma0 C' V^{-1} [CX, y] give
-    y_hat by linearity.  ``C`` may be in block form only when banded."""
-    y = np.asarray(y, dtype=float)
+    The likelihood needs only :func:`_v0_factor`'s forward pass,
+    L^{-1} [CX, y] and D; one back-substitution at the evaluated rho gives
+    z = V0^{-1}(y - CX beta), and y_hat distributes through Sigma0 C' z by
+    the O(n) recursions.  ``C`` is dense or in the block form of
+    :func:`_blocks`."""
     n, k = X.shape
-    if banded:
-        gram_fn, n_diags = _GRAM_BANDS[method]
-        skel = _gls_kkt_indices(C, n=n, n_diags=n_diags)
-        CX = _banded_CX(X, C, skel)
-        B_low = np.column_stack([CX, y])
-
-        def solve(grid: np.ndarray) -> tuple:
-            band, logdet_prec = gram_fn(grid, n)
-            mu, w, logdet_kkt = _kkt_solve(band, skel, B_low)
-            return -mu, logdet_kkt - logdet_prec, w
-
-        def distribute(rho: float, beta: np.ndarray, z: np.ndarray, w: np.ndarray) -> np.ndarray:
-            return X @ beta + (w[0, :, k] - w[0, :, :k] @ beta)
-
-        member_bytes, budget = (3 * skel["bw"] + 1) * skel["N"] * 8, _BANDED_SCAN_BYTES
-    else:
-        v0 = _v0_grid_fn(C, COVARIANCE_BUILDERS[method])
-        CX = C @ X
-        rhs = np.column_stack([CX, y])
-
-        def solve(grid: np.ndarray) -> tuple:
-            V0 = v0(grid)
-            _sign, logdet = np.linalg.slogdet(V0)
-            return np.linalg.solve(V0, np.broadcast_to(rhs, (len(V0), *rhs.shape))), logdet, None
-
-        def distribute(rho: float, beta: np.ndarray, z: np.ndarray, w: None) -> np.ndarray:
-            return X @ beta + _SIGMA_TIMES[method](rho, C.T @ z)
-
-        # a few (n_low, n_low) and (n,) temporaries per grid member
-        member_bytes, budget = 64 * (C.shape[0] ** 2 + n), _V0_SCAN_BYTES
+    lo, hi, W = _blocks(C, n)
+    # the fit does not depend on the order of the rows; the recursion runs
+    # them in time order
+    order = np.argsort(lo)
+    lo, hi, W = blocks = lo[order], hi[order], W[order]
+    y = np.asarray(y, dtype=float)[order]
+    cols = np.minimum(lo[:, None] + np.arange(W.shape[1]), hi[:, None])
+    CX = np.einsum("ar,ark->ak", W, X[cols])
+    rhs = np.column_stack([CX, y])
+    rows = _row_shapes(blocks)
 
     def terms(grid: np.ndarray) -> tuple:
-        Vinv_B, logdet, w = solve(grid)
-        return _concentrate(y, CX, Vinv_B[..., :k], Vinv_B[..., k], logdet), w
+        w, D, back = _v0_factor(method, grid, rows, rhs)
+        return *_concentrate(w[..., :k], w[..., k], D), back
 
-    def scan(grid: np.ndarray) -> np.ndarray:
-        return _scan(lambda g: terms(g)[0][0], np.asarray(grid, dtype=float), member_bytes, budget)
+    def profile(grid: np.ndarray) -> np.ndarray:
+        return np.column_stack(terms(np.asarray(grid, dtype=float))[:2])
 
     def evaluate(rho: float) -> tuple[float, float, np.ndarray, np.ndarray]:
-        (nll, s_star, beta, z), w = terms(np.array([rho]))
-        return float(nll[0]), float(s_star[0]), beta[0], distribute(rho, beta[0], z[0], w)
+        nll, s_star, beta, e, back = terms(np.array([rho]))
+        z = back(e[..., None])[0, :, 0]  # V0^{-1}(y - CX beta)
+        CTz = np.bincount(cols.ravel(), weights=(W * z[:, None]).ravel(), minlength=n)
+        return float(nll[0]), float(s_star[0]), beta[0], X @ beta[0] + _SIGMA_TIMES[method](rho, CTz)
 
-    return scan, evaluate
+    return profile, evaluate
+
+
+def _simplex_objective(
+    profile: Callable[[np.ndarray], np.ndarray], n_low: int
+) -> Callable[[np.ndarray], float]:
+    """The reference's NLL over (rho, sigma2) (:func:`negative_loglik`,
+    V = (1 + rho) sigma2 V0(rho)) read off the profile at rho: with
+    s = (1 + rho) sigma2 and r = s_star / s it is
+    nll(s_star) + n_low/2 (r - 1 - log r)."""
+
+    def objective(params: np.ndarray) -> float:
+        rho, sigma2 = params
+        nll, s_star = profile(np.array([rho]))[0]
+        ratio = s_star / ((1.0 + rho) * sigma2)
+        return float(nll + 0.5 * n_low * (ratio - 1.0 - np.log(ratio)))
+
+    return objective
 
 
 def _regression_fit(
@@ -1078,7 +906,6 @@ def _regression_fit(
     C,
     method: str,
     optimizer_kwargs: dict | None,
-    banded: bool,
 ) -> tuple[np.ndarray, FitResult, dict]:
     """Bounded ML fit of (rho, sigma2) for ``method`` ('chow-lin' or
     'litterman') with rho in (1e-5, 1-1e-5), the reference's feasible region
@@ -1088,38 +915,34 @@ def _regression_fit(
     Default strategy differs from the reference (which runs a 2-D scipy
     solver from (0.8, 0.8)): sigma2 is concentrated out analytically,
     leaving a 1-D profile likelihood in rho that :func:`_profile_fit`
-    searches through the back end's ``scan``; y_hat, beta and s_star come
-    from the ``evaluate`` at rho_star that search already ran.
+    searches; y_hat, beta and s_star come from the ``evaluate`` at rho_star
+    that search already ran.
 
     ``optimizer_kwargs['method']`` is honored, not ignored: ``'nelder-mead'``
     runs a real bounded 2-D Nelder-Mead on the reference's objective from the
     reference's x0=(0.8, 0.8) (ts_disagg.py:441-448), so ``return_optim_res``
     consumers get scipy-semantics ``nit``/``nfev``, and then ``evaluate``
-    once at its rho.  ``'powell'`` and ``'l-bfgs-b'`` (scipy solvers the
-    reference passes through; scipy is not a dependency here) are solved via
-    the same bounded Nelder-Mead with the substitution recorded in
-    ``FitResult.message``.  Unknown method names raise ``ValueError``
-    instead of being silently accepted; so does any but the profile
-    optimizer on the banded back end.  ``optimizer_kwargs['options']``
-    supports ``xatol``/``fatol``/``maxiter``.
+    once at its rho; its objective comes from the same profile
+    (:func:`_simplex_objective`), with no n x n covariance.  ``'powell'`` and
+    ``'l-bfgs-b'`` (scipy solvers the reference passes through; scipy is not
+    a dependency here) are solved via the same bounded Nelder-Mead with the
+    substitution recorded in ``FitResult.message``.  Unknown method names
+    raise ``ValueError`` instead of being silently accepted.
+    ``optimizer_kwargs['options']`` supports ``xatol``/``fatol``/``maxiter``.
     """
     kwargs = dict(optimizer_kwargs or {})
     opt = str(kwargs.get("method", "brent-profile")).lower()
-    if banded and opt not in _PROFILE_OPTIMIZERS:
-        raise ValueError(
-            f"banded GLS fits support only the concentrated profile optimizer, got method={opt!r}"
-        )
     if opt not in _PROFILE_OPTIMIZERS + _SIMPLEX_OPTIMIZERS:
         raise ValueError(
             f"Unsupported optimizer method {opt!r}: use 'nelder-mead', "
             "'powell', 'l-bfgs-b', or omit for the concentrated "
             "Brent-profile default."
         )
-    scan, evaluate = _regression_backend(y, X, C, method, banded)
+    profile, evaluate = _regression_backend(y, X, C, method)
     if opt in _SIMPLEX_OPTIMIZERS:
         options = dict(kwargs.get("options") or {})
         x, fx, nit, nfev = _nelder_mead_minimize(
-            lambda params: negative_loglik(params, y, X, C, COVARIANCE_BUILDERS[method]),
+            _simplex_objective(profile, len(y)),
             np.full(2, 0.8),  # reference x0 (ts_disagg.py:441)
             lower=np.array([_RHO_LO, 1e-5]),
             upper=np.array([_RHO_HI, np.inf]),
@@ -1137,7 +960,9 @@ def _regression_fit(
         rho, sigma2 = x
         _nll, _s, beta, y_hat = evaluate(rho)
     else:
-        rho, (nll, s_star, beta, y_hat), nfev = _profile_fit(scan, evaluate)
+        rho, (nll, s_star, beta, y_hat), nfev = _profile_fit(
+            lambda grid: profile(grid)[:, 0], evaluate
+        )
         sigma2 = s_star / (1.0 + rho)
         result = FitResult(
             x=np.array([rho, sigma2]), fun=nll, nfev=nfev, extras={"scaled_sigma2": s_star}
@@ -1158,24 +983,23 @@ def fit_rho_sigma(
     cov_builder: Callable[[float, float, int], np.ndarray],
     optimizer_kwargs: dict | None = None,
 ) -> FitResult:
-    """The closed-form back end's :class:`FitResult` of
-    :func:`_regression_fit` for the method whose builder in
-    ``COVARIANCE_BUILDERS`` is ``cov_builder`` (``ValueError`` for any
-    other builder)."""
+    """The :class:`FitResult` of :func:`_regression_fit` for the method whose
+    builder in ``COVARIANCE_BUILDERS`` is ``cov_builder`` (``ValueError``
+    for any other builder)."""
     method = next((m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder), None)
     if method is None:
         raise ValueError("cov_builder must be one of COVARIANCE_BUILDERS")
-    return _regression_fit(y, X, C, method, optimizer_kwargs, banded=False)[1]
+    return _regression_fit(y, X, C, method, optimizer_kwargs)[1]
 
 
 def chow_lin_banded_solve(
     y: np.ndarray, X: np.ndarray, C, rho: float
 ) -> tuple[np.ndarray, np.ndarray, float, float]:
-    """Fixed-rho banded Chow-Lin: ``(y_hat, beta, s_star, nll)`` — the
-    distribution/GLS machinery alone, for callers that bring their own rho
-    (and for parity testing against the dense pipeline config-by-config,
-    the direct analog of the Denton banded-vs-dense battery)."""
-    nll, s_star, beta, y_hat = _regression_backend(y, X, C, "chow-lin", True)[1](rho)
+    """Fixed-rho Chow-Lin: ``(y_hat, beta, s_star, nll)`` — the
+    distribution/GLS machinery alone, for callers that bring their own rho.
+    The name survives from the banded-KKT back end it used to run; it now
+    runs the one regression path, and ``C`` may be in block form."""
+    nll, s_star, beta, y_hat = _regression_backend(y, X, C, "chow-lin")[1](rho)
     return y_hat, beta, s_star, nll
 
 
@@ -1185,22 +1009,17 @@ def chow_lin_banded_fit(
     C,
     optimizer_kwargs: dict | None = None,
 ) -> tuple[np.ndarray, FitResult, dict]:
-    """Full banded Chow-Lin solve — the very-long-series twin of
-    :func:`solve_series`' regression path, with the SAME two-level
-    profile-likelihood grid (identical rho semantics) but O(n b^2) per
-    evaluation and O(n b) memory, and no dense constraint matrix needed.
-    A 96k-point series fits in seconds.
-
-    Only the default (profile) optimizer is supported; callers wanting the
-    reference's 2-D Nelder-Mead surface fall back to the dense path.
-    Raises ``ValueError`` for non-contiguous constraint support.
-    """
-    return _regression_fit(y, X, C, "chow-lin", optimizer_kwargs, banded=True)
+    """Full Chow-Lin fit, ``(y_hat, FitResult, info)``: the regression path
+    of :func:`solve_series` for a constraint matrix that may be in block
+    form ``(lo, hi, vals)``, where a dense C would itself be the memory
+    wall.  The name survives from the banded-KKT back end it used to run."""
+    return _regression_fit(y, X, C, "chow-lin", optimizer_kwargs)
 
 
-#: from this high-frequency length on, solve_series fits Chow-Lin and
-#: Litterman on the banded KKT (its scan costs a per-column Python loop, the
-#: closed form O(n_low^3) per rho); the Denton family does not read it
+#: the high-frequency length from which Chow-Lin and Litterman fits used to
+#: take a banded KKT; no kernel path reads it any more.  Kept for callers
+#: that split series into long and short by it (the perfbench workload
+#: designs)
 BANDED_THRESHOLD = 2000
 
 
@@ -1236,19 +1055,9 @@ def solve_series(
             f"Criterion should be one of 'proportional', 'additive'. Got {criterion}"
         )
 
-    n, k = X.shape
     if method in REGRESSION_METHODS:
-        if n >= BANDED_THRESHOLD:
-            # the closed-form V0 stacks cost O(n_low^3) per rho; the banded
-            # AR precisions make the whole fit O(n b^2).  Falls through for
-            # non-contiguous constraints or a non-profile optimizer request
-            # (both only realistic at small n).
-            try:
-                return _regression_fit(y, X, C, method, optimizer_kwargs, banded=True)
-            except ValueError:
-                pass
-        return _regression_fit(y, X, C, method, optimizer_kwargs, banded=False)
+        return _regression_fit(y, X, C, method, optimizer_kwargs)
 
-    if k != 1:
+    if X.shape[1] != 1:
         raise ValueError(f"{method} supports exactly one indicator column")
     return _denton_least_norm(y, X.ravel().astype(float), C, method, order, criterion), None, {}

@@ -23,8 +23,8 @@ the two inputs are *unioned* with a source tag and hash-partitioned once on
 ``series_id``.  The per-series outer merge then happens inside the kernel on
 a few hundred pandas rows — free.  At 100 TB / millions of series this
 halves shuffle volume and removes the join's sort entirely; skewed series
-are bounded by the largest single series (dense algebra is O(n^3) in series
-length, so very long series belong on the banded-kernel path anyway).
+are bounded by the largest single series (the one regression path is
+linear in series length, O(n_low) per rho).
 """
 
 from __future__ import annotations
