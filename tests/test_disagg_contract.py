@@ -1,5 +1,5 @@
 """The disaggregation queries leave it to the kernel to decide which series
-can be solved: under ``errors='skip'`` a series that ``prepare_inputs``
+can be solved: under ``errors='skip'`` a series that ``disagg._align``
 rejects is dropped.  Their DuckDB oracles restate that input contract as an
 ``elig`` CTE.  These tests build a seeded TPC-H-shaped schema holding one
 healthy series plus one series of each rejected kind, and check that the

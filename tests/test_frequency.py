@@ -203,6 +203,11 @@ def test_fast_infer_agrees_with_pandas(step, m0, y0, n, day):
         idx.freq.freqstr if idx.freq is not None else idx.inferred_freq
     )
     assert freq.infer_code(idx) == expected
+    # a raw datetime64[ns] array (the kernel stage's input) carries no
+    # .freq, so it must infer exactly what pandas infers from the stamps
+    raw = idx.to_numpy(dtype="datetime64[ns]")
+    assert freq._fast_infer(raw) == fast
+    assert freq.infer_code(raw) == pd.DatetimeIndex(raw).inferred_freq
 
 
 def test_fast_infer_rejects_irregular_and_intraday():

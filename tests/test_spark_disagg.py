@@ -113,6 +113,7 @@ def test_spark_matches_pandas_chow_lin(multi_series):
         np.testing.assert_allclose(
             got[sid].to_numpy(), expected.to_numpy(), rtol=1e-10
         )
+        assert got[sid].index.equals(expected.index)
 
 
 def test_spark_companion_path_denton(multi_series, spark):
@@ -127,6 +128,7 @@ def test_spark_companion_path_denton(multi_series, spark):
         np.testing.assert_allclose(
             got[sid].to_numpy(), expected.to_numpy(), rtol=1e-10
         )
+        assert got[sid].index.equals(expected.index)
         # aggregation constraint holds through the distributed path
         yearly = got[sid].groupby(got[sid].index.year).sum()
         np.testing.assert_allclose(
@@ -497,11 +499,39 @@ def test_kernel_stage_skew_and_error_isolation(spark):
     )
 
 
+@pytest.mark.parametrize("null_at", [0, 2, 4], ids=["first", "middle", "last"])
+def test_null_target_fails_its_series(spark, null_at):
+    """A null target value fails its series with the pandas API's
+    ``missing values`` error, wherever it sits: under ``'raise'`` the error
+    names the series, under ``'skip'`` the series is absent and the others
+    are untouched.  (Dropping the null row instead solved the series on a
+    year fewer, or failed it as a bad time index.)"""
+    years = pd.date_range("2000-01-01", freq="YS", periods=5)
+    low = pd.DataFrame(
+        {
+            "series_id": np.repeat(["ok", "holed"], 5),
+            "ts": np.tile(years, 2),
+            "y": np.concatenate([100.0 + np.arange(5.0), 200.0 + np.arange(5.0)]),
+        }
+    )
+    low.loc[5 + null_at, "y"] = np.nan
+    low_sdf = spark.createDataFrame(low)
+    kw = dict(method="denton-cholette", agg_func="sum", target_freq="QS")
+    with pytest.raises(Exception, match=r"series 'holed'.*missing values"):
+        disaggregate(low_sdf, **kw).collect()
+    out = disaggregate(low_sdf, errors="skip", **kw).toPandas()
+    assert set(out["series_id"]) == {"ok"}
+    ok = out.sort_values("ts")
+    want = disaggregate_series(
+        low.iloc[:5].set_index("ts")[["y"]], verbose=False, **kw
+    )
+    assert np.array_equal(ok["y_hat"].to_numpy(), want.to_numpy())
+
+
 def test_duplicate_low_stamps_raise_engine_error():
-    """Duplicate low-frequency timestamps must fall back from the reindex
-    merge fast path to the outer join and surface the engine's own
-    frequency error — not pandas' 'cannot reindex on an axis with
-    duplicate labels' (regression guard for the fast-path guard)."""
+    """Duplicate low-frequency timestamps surface the engine's own
+    frequency error: inference rejects a timeline with repeated stamps
+    before any alignment of the target with the indicators runs."""
     import pandas as pd
     import numpy as np
     import pytest as _pytest
@@ -753,5 +783,20 @@ def test_spark_fleet_reagg_invariant_property(spark):
                 rtol=1e-9,
                 err_msg=f"{method}/{agg_func}/{conv}/series={s}",
             )
+            # the Spark kernel stage and the pandas API run one core:
+            # the same stamps and the same values, bit for bit
+            low_s = pd.DataFrame({"y": truth[s]}, index=pd.DatetimeIndex(ts_low.to_numpy()))
+            high_s = None
+            if indicators is not None:
+                rows = ind_pdf[ind_pdf["series_id"] == s]
+                high_s = rows[["x1", "intercept"]].set_index(pd.DatetimeIndex(rows["ts"].to_numpy()))
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                want = disaggregate_series(
+                    low_s, high_s, method=method, agg_func=agg_func,
+                    target_freq=high_code if high_s is None else None, verbose=False,
+                )
+            assert np.array_equal(g["ts"].to_numpy(), want.index.to_numpy())
+            assert np.array_equal(g["y_hat"].to_numpy(), want.to_numpy())
 
     check()

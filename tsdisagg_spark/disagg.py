@@ -1,14 +1,16 @@
-"""Single-series, pandas-facing temporal disaggregation API.
+"""Single-series temporal disaggregation: one array-level core and the
+pandas-facing API around it.
 
 Behavior-parity surface for the reference's only public entry point
 ``disaggregate_series`` (``/root/reference/tsdisagg/ts_disagg.py:302-472``),
 re-implemented on top of this package's independent calendar
 (:mod:`tsdisagg_spark.frequency`) and numerics (:mod:`tsdisagg_spark.kernels`).
 
-This module is intentionally driver-side pandas: it exists so the engine's
-numerics can be golden-tested against the reference's R ``tempdisagg``
-fixtures, and it is the same kernel path the Spark layer runs per series
-inside ``applyInPandas`` (see :mod:`tsdisagg_spark.spark.disagg`).
+:func:`_disaggregate_arrays` is the one per-series path, on numpy arrays;
+:func:`_align` is its input contract.  The Spark kernel stage
+(:mod:`tsdisagg_spark.spark.disagg`) hands it each group's columns, and
+:func:`disaggregate_full` turns frames into those arrays and the result
+back into a ``pd.Series``, so pandas objects exist only at this boundary.
 """
 
 from __future__ import annotations
@@ -31,60 +33,150 @@ def _require_datetime_index(df: pd.DataFrame, arg_name: str) -> None:
         )
 
 
-def _require_complete(df: pd.DataFrame, arg_name: str) -> None:
-    # fast path for all-float frames (the fleet kernel's case): one numpy
-    # isnan over the block beats pandas' per-column isna reduction ~10x
-    vals = df.to_numpy()
-    missing = (
-        bool(np.isnan(vals).any())
-        if vals.dtype.kind == "f"
-        else bool(df.isna().any().any())
-    )
-    if missing:
-        raise ValueError(f"{arg_name} has missing values.")
+def _align(
+    low_ts: np.ndarray, y: np.ndarray, high_ts: np.ndarray | None, X: np.ndarray | None,
+    method: str, target_freq: str | None, low_freq: str | None = None,
+) -> tuple[np.ndarray, np.ndarray, int, str, str]:
+    """Validate one series and put it on its high-frequency timeline
+    (ts_disagg.py:213-299): resolve both frequency codes by the reference's
+    ladder (:246-270), synthesize the companion timeline and its all-ones
+    indicator when ``X`` is None, and require every low stamp to be a high
+    stamp.  ``low_freq`` (the ``.freq`` attached to a pandas index) is the
+    low code when given; every other code is inferred from the stamps.
 
+    Returns ``(high_ts, X, factor, low_code, high_code)``."""
+    if np.isnan(y).any():
+        raise ValueError("low_freq_df has missing values.")
+    if X is not None:
+        if np.isnan(X).any():
+            raise ValueError("high_freq_df has missing values.")
+        if high_ts[0] > low_ts[0]:
+            n_uncovered = int((low_ts < high_ts[0]).sum())
+            raise ValueError(
+                f"Start date found on high frequency data "
+                f"{np.datetime_as_string(high_ts[0], unit='D')} is after start date "
+                f"found on low frequency data {np.datetime_as_string(low_ts[0], unit='D')}. "
+                f"Interpolation is not possible in this case, because there is no "
+                f"observed high frequency data associated with the first "
+                f"{n_uncovered} low-frequency observations. Align the start date "
+                f"of these two dataframes and try again."
+            )
 
-def _inferred_only(index) -> str | None:
-    """``DatetimeIndex.inferred_freq`` semantics (ignores any attached
-    ``.freq``), with the engine's numpy fast path for regular
-    start-anchored shapes (frequency._fast_infer — identical strings)."""
-    idx = pd.DatetimeIndex(index)
-    code = freq._fast_infer(idx)
-    return code if code is not None else idx.inferred_freq
-
-
-def _resolve_frequencies(
-    low_df: pd.DataFrame,
-    high_df: pd.DataFrame | None,
-    target_freq: str | None,
-) -> tuple[str, str]:
-    """Reference's frequency-resolution ladder (ts_disagg.py:246-270)."""
-    low_code = freq.infer_code(low_df.index)
+    low_code = low_freq or freq.infer_code(low_ts)
     if not low_code:
         raise ValueError(
             "Low frequency dataframe does not have a valid time index with "
             "frequency information"
         )
-
-    if high_df is None:
+    if X is None:
         high_code = target_freq if target_freq else freq.step_down(low_code)
     elif target_freq is not None:
-        if _inferred_only(high_df.index) != target_freq:
+        if freq.infer_code(high_ts) != target_freq:
             raise ValueError(
                 "User provided target_freq does not match frequency information "
                 "found on indicator data high_freq_df."
             )
         high_code = target_freq
     else:
-        high_code = _inferred_only(high_df.index)
+        high_code = freq.infer_code(high_ts)
         if not high_code:
             raise ValueError(
                 "Indicator data high_freq_df does not have a valid time index with "
                 "frequency information"
             )
-
     freq.validate_codes(low_code, high_code)
-    return low_code, high_code
+    factor = freq.conversion_factor(low_code, high_code)
+
+    if X is None:
+        if method not in ("denton", "denton-cholette"):
+            raise ValueError(
+                'high_freq_df can only be None for methods "denton" and '
+                '"denton-cholette", otherwise a dataframe of high-frequency '
+                "indicators must be provided."
+            )
+        high_ts = freq.companion_index(low_ts, low_code, high_code).to_numpy()
+        X = np.ones((len(high_ts), 1))
+
+    # resolved frequencies make both timelines sorted and unique, so the
+    # reference's outer merge (ts_disagg.py:298) is the high timeline itself
+    # exactly when the low stamps are a subset of it
+    if not np.isin(low_ts, high_ts).all():
+        raise ValueError(
+            "Every low-frequency timestamp must coincide with a high-frequency "
+            "timestamp; found low-frequency stamps absent from the indicator "
+            "timeline."
+        )
+    return high_ts, X, factor, low_code, high_code
+
+
+def _disaggregate_arrays(
+    low_ts: np.ndarray, y: np.ndarray, high_ts: np.ndarray | None, X: np.ndarray | None,
+    *, method: str, agg_func: str = "sum", criterion: str = "proportional", h: int = 1,
+    target_freq: str | None = None, optimizer_kwargs: dict | None = None,
+    low_freq: str | None = None,
+) -> tuple[np.ndarray, np.ndarray, FitResult | None, dict, str]:
+    """The one per-series disaggregation path, on numpy arrays: the
+    target's wall-clock ``datetime64[ns]`` stamps and values, and the
+    indicator stamps and (n, k) matrix, or both None for the Denton
+    companion timeline.  Checks the arguments, aligns (:func:`_align`),
+    builds C from month ordinals, prunes uncovered low periods with a
+    warning and solves.  Returns ``(high_ts, y_hat, result, info,
+    low_code)``."""
+    kernels._check_method_args(method, criterion, agg_func)
+    high_ts, X, factor, low_code, _high_code = _align(
+        low_ts, y, high_ts, X, method, target_freq, low_freq
+    )
+
+    # --- constraint matrix over calendar periods (ts_disagg.py:45-81) ---
+    label_family = "yearly" if freq.family(low_code) == "yearly" else "quarterly"
+    low_labels = kernels.period_labels(low_ts, label_family)
+    high_labels = kernels.period_labels(high_ts, label_family)
+    C = kernels.conversion_matrix(low_labels, high_labels, factor, agg_func)
+
+    # --- coverage pruning (ts_disagg.py:398-407) ---
+    covered = C.any(axis=1)
+    if not covered.all():
+        dropped = np.datetime_as_string(low_ts[~covered], unit="D")
+        warnings.warn(
+            f"Insufficent high-frequency data to decompose the following dates: "
+            f'{", ".join(dropped)}',
+            UserWarning,
+        )
+    y_hat, result, info = kernels.solve_series(
+        y[covered], X, C[covered], method, criterion=criterion, order=h,
+        optimizer_kwargs=optimizer_kwargs,
+    )
+    return high_ts, np.ravel(y_hat), result, info, low_code
+
+
+def _wall_stamps(index: pd.DatetimeIndex) -> np.ndarray:
+    """Stamps on the wall clock, which a tz-aware index's ``.year`` reads."""
+    if index.tz is not None:
+        index = index.tz_localize(None)
+    return index.to_numpy(dtype="datetime64[ns]")
+
+
+def _frame_arrays(low_df: pd.DataFrame, pos: int, high_freq_df) -> tuple:
+    """The index checks of the pandas API and the whole target frame's
+    missing-value check (the core checks ``y`` and ``X``), then its inputs:
+    ``(high_df, (low_ts, y, high_ts, X), low_freq)`` with ``y`` the low
+    column at position ``pos`` and ``high_df`` None or a frame."""
+    _require_datetime_index(low_df, "low_freq_df")
+    if low_df.isna().to_numpy().any():
+        raise ValueError("low_freq_df has missing values.")
+    high_df = high_ts = X = None
+    if high_freq_df is not None:
+        high_df = high_freq_df.to_frame() if isinstance(high_freq_df, pd.Series) else high_freq_df
+        _require_datetime_index(high_df, "high_freq_df")
+        high_ts, X = _wall_stamps(high_df.index), high_df.to_numpy(dtype=float)
+    y = low_df.iloc[:, pos].to_numpy(dtype=float)
+    return high_df, (_wall_stamps(low_df.index), y, high_ts, X), low_df.index.freqstr
+
+
+def _companion_index(ts: np.ndarray, low_df: pd.DataFrame) -> pd.DatetimeIndex:
+    """A companion timeline's index, on the target's time zone."""
+    index = pd.DatetimeIndex(ts)
+    return index if low_df.index.tz is None else index.tz_localize(low_df.index.tz)
 
 
 def prepare_inputs(
@@ -93,75 +185,37 @@ def prepare_inputs(
     target_freq: str | None,
     method: str,
 ) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame, int, str, str]:
-    """Validate, resolve frequencies, synthesize the companion indicator when
-    allowed, and outer-merge target with indicators on the time axis
-    (ts_disagg.py:213-299).
+    """:func:`_align` on frames, for perfbench's replay, which times it.
 
-    Returns ``(merged, low_df, high_df, factor, low_code, high_code)``.
-    """
-    low_df = low_freq_df.copy()
-    _require_datetime_index(low_df, "low_freq_df")
-    _require_complete(low_df, "low_freq_df")
-
-    if high_freq_df is not None:
-        high_df = (
-            high_freq_df.to_frame()
-            if isinstance(high_freq_df, pd.Series)
-            else high_freq_df.copy()
-        )
-        _require_datetime_index(high_df, "high_freq_df")
-        _require_complete(high_df, "high_freq_df")
-        if high_df.index[0] > low_df.index[0]:
-            n_uncovered = int((low_df.index < high_df.index[0]).sum())
-            raise ValueError(
-                f"Start date found on high frequency data "
-                f"{high_df.index[0].strftime('%Y-%m-%d')} is after start date found "
-                f"on low frequency data {low_df.index[0].strftime('%Y-%m-%d')}. "
-                f"Interpolation is not possible in this case, because there is no "
-                f"observed high frequency data associated with the first "
-                f"{n_uncovered} low-frequency observations. Align the start date "
-                f"of these two dataframes and try again."
-            )
-    else:
-        high_df = None
-
-    low_code, high_code = _resolve_frequencies(low_df, high_df, target_freq)
-    factor = freq.conversion_factor(low_code, high_code)
-
-    # rename only the first column — reference quirk for multi-column targets
-    # (ts_disagg.py:276-283); callers resolve the target by original name first.
-    target_name = str(low_df.columns[0])
-    low_label, high_label = freq.output_column_names(target_name, low_code, high_code)
-    low_df = low_df.rename(columns={target_name: low_label})
-
+    Returns ``(merged, low_df, high_df, factor, low_code, high_code)``:
+    ``merged`` is ``low_df`` (first column renamed ``<family>_<name>``) on
+    the high timeline, then ``high_df`` (indicators or companion column)."""
+    high_df, arrays, low_freq = _frame_arrays(low_freq_df, 0, high_freq_df)
+    high_ts, X, factor, low_code, high_code = _align(*arrays, method, target_freq, low_freq)
+    target_name = low_freq_df.columns[0]
+    low_label, high_label = freq.output_column_names(str(target_name), low_code, high_code)
+    low_df = low_freq_df.rename(columns={target_name: low_label})
     if high_df is None:
-        if method not in ("denton", "denton-cholette"):
-            raise ValueError(
-                'high_freq_df can only be None for methods "denton" and '
-                '"denton-cholette", otherwise a dataframe of high-frequency '
-                "indicators must be provided."
-            )
-        timeline = freq.companion_index(low_df.index, low_code, high_code)
-        high_df = pd.DataFrame({high_label: np.ones(len(timeline))}, index=timeline)
-
-    # outer-merge on the time axis (ts_disagg.py:298).  Fleet fast path:
-    # when the low stamps are a subset of a sorted unique high timeline —
-    # every well-formed disaggregation input — the union index IS the high
-    # index and the join degenerates to a reindex of the target column
-    # (verified equal to the pandas join for this shape; ~5x cheaper, and
-    # prepare_inputs runs once per series per applyInPandas group)
-    if (
-        high_df.index.is_monotonic_increasing
-        and high_df.index.is_unique
-        and low_df.index.is_unique  # reindex rejects duplicate labels
-        and low_df.index.isin(high_df.index).all()
-    ):
-        merged = high_df.copy()
-        for i, col in enumerate(low_df.columns):
-            merged.insert(i, col, low_df[col].reindex(high_df.index))
-    else:
-        merged = low_df.join(high_df, how="outer")
+        high_df = pd.DataFrame({high_label: X[:, 0]}, index=_companion_index(high_ts, low_df))
+    merged = pd.concat([low_df.reindex(high_df.index), high_df], axis=1)
     return merged, low_df, high_df, factor, low_code, high_code
+
+
+def _report_columns(X_columns: list[str], info: dict, n_obs: int) -> dict:
+    """The columns of :func:`regression_report_frame`."""
+    beta, std = np.ravel(info["beta"]), np.ravel(info["std_beta"])
+    dof = n_obs - (len(beta) + 2)
+    t_crit = student_t_ppf(1 - 0.025, dof)
+    t_stat = beta / std
+    return {
+        "variable": X_columns,
+        "coef": beta,
+        "sd_err": std,
+        "t": t_stat,
+        "p_value": student_t_sf(np.abs(t_stat), dof),
+        "ci_low": beta - t_crit * std,
+        "ci_high": beta + t_crit * std,
+    }
 
 
 def regression_report_frame(
@@ -170,21 +224,7 @@ def regression_report_frame(
     """GLS diagnostics as a small DataFrame (replaces the reference's stdout
     report, ts_disagg.py:179-210): one row per indicator with coef, sd err,
     t, p-value and the 95% CI."""
-    beta, std = np.ravel(info["beta"]), np.ravel(info["std_beta"])
-    dof = n_obs - (len(beta) + 2)
-    t_crit = student_t_ppf(1 - 0.025, dof)
-    t_stat = beta / std
-    return pd.DataFrame(
-        {
-            "variable": X_columns,
-            "coef": beta,
-            "sd_err": std,
-            "t": t_stat,
-            "p_value": student_t_sf(np.abs(t_stat), dof),
-            "ci_low": beta - t_crit * std,
-            "ci_high": beta + t_crit * std,
-        }
-    )
+    return pd.DataFrame(_report_columns(X_columns, info, n_obs))
 
 
 def disaggregate_full(
@@ -206,90 +246,44 @@ def disaggregate_full(
     Returns a dict with keys ``output`` (pd.Series on the high-frequency
     axis), ``result`` (:class:`~tsdisagg_spark.kernels.FitResult` or None),
     ``info`` (regression internals), ``report`` (diagnostics DataFrame or
-    None), ``n_obs``.
+    None), ``n_obs``.  Only ``target_column`` enters the solve.
 
     ``compute_report=False`` skips building the diagnostics DataFrame (the
-    t-quantile continued fractions are a measurable cost per series at fleet
-    width; the Spark grouped kernel only consumes ``output``).
+    t-quantile continued fractions are a measurable cost per series).
     """
     if isinstance(low_freq_df, pd.Series):
         low_freq_df = low_freq_df.to_frame()
-
-    if method not in kernels.METHODS:
-        raise ValueError(
-            f"Method should be one of 'denton', 'denton-cholette', 'chow-lin', "
-            f"'litterman'. Got {method}."
-        )
-    if criterion not in ("proportional", "additive"):
-        raise ValueError(
-            f"Criterion should be one of 'proportional', 'additive'. Got {criterion}"
-        )
-    if agg_func not in kernels.AGG_FUNCS:
-        raise ValueError(
-            f"agg_func should be one of 'mean', 'sum', 'first', 'last'. Got {agg_func}"
-        )
 
     target_column = target_column or low_freq_df.columns[0]
     if target_column not in low_freq_df.columns:
         raise ValueError(f"target_column {target_column!r} is not a column of low_freq_df")
     target_pos = int(np.flatnonzero(low_freq_df.columns == target_column)[0])
 
-    merged, low_df, high_df, factor, low_code, high_code = prepare_inputs(
-        low_freq_df, high_freq_df, target_freq, method
-    )
-
-    # --- constraint matrix over calendar periods (ts_disagg.py:45-81) ---
-    low_family = freq.family(low_code)
-    label_family = "yearly" if low_family == "yearly" else "quarterly"
-    low_labels = kernels.period_labels(low_df.index, label_family)
-    high_labels = kernels.period_labels(high_df.index, label_family)
-    C = kernels.conversion_matrix(low_labels, high_labels, factor, agg_func)
-
-    if len(merged) != len(high_df):
-        raise ValueError(
-            "Every low-frequency timestamp must coincide with a high-frequency "
-            "timestamp; found low-frequency stamps absent from the indicator "
-            "timeline."
-        )
-
-    # --- coverage pruning (ts_disagg.py:398-407) ---
-    uncovered = ~C.any(axis=1)
-    if uncovered.any():
-        dropped = low_df.index.strftime("%Y-%m-%d")[uncovered]
-        warnings.warn(
-            f"Insufficent high-frequency data to decompose the following dates: "
-            f'{", ".join(dropped)}',
-            UserWarning,
-        )
-    target_label = merged.columns[target_pos]
-    y = merged.iloc[:, target_pos].dropna().to_numpy()[~uncovered]
-    C = C[~uncovered, :]
-    X_frame = merged.drop(columns=[target_label])
-    X = X_frame.to_numpy(dtype=float)
-
-    y_hat, result, info = kernels.solve_series(
-        y, X, C, method, criterion=criterion, order=h,
-        optimizer_kwargs=optimizer_kwargs,
+    high_df, arrays, low_freq = _frame_arrays(low_freq_df, target_pos, high_freq_df)
+    ts, y_hat, result, info, low_code = _disaggregate_arrays(
+        *arrays, method=method, agg_func=agg_func, criterion=criterion, h=h,
+        target_freq=target_freq, optimizer_kwargs=optimizer_kwargs, low_freq=low_freq,
     )
 
     report = None
     if info and (compute_report or verbose):
-        report = regression_report_frame(list(X_frame.columns), info, X.shape[0])
+        report = regression_report_frame(list(high_df.columns), info, len(ts))
         if verbose:
-            print(f"Dependent Variable: {target_label}")
+            # the reference renames the first low column only (ts_disagg.py:276-283)
+            label = f"{freq.family(low_code)}_{target_column}" if target_pos == 0 else target_column
+            print(f"Dependent Variable: {label}")
             print(f"GLS Estimates using {method.title()}'s covariance matrix")
             print(report.to_string(index=False))
             print(f"rho = {info['rho']:.4f}  sigma.sq = {info['sigma2']:.4f}")
 
-    output = pd.Series(np.asarray(y_hat).ravel(), index=merged.index, name=target_column)
-    output.index.freq = _inferred_only(output.index)
-
+    index = _companion_index(ts, low_freq_df) if high_df is None else high_df.index.copy(deep=True)
+    index.freq = freq.infer_code(ts)
     return {
-        "output": output,
+        "output": pd.Series(y_hat, index=index, name=target_column),
         "result": result,
         "info": info,
         "report": report,
-        "n_obs": X.shape[0],
+        "n_obs": len(ts),
     }
 
 

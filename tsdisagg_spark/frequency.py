@@ -32,7 +32,6 @@ MONTH_ABBRS = (
 #: canonical frequency-family names, ordered coarse -> fine
 YEARLY, QUARTERLY, MONTHLY = "yearly", "quarterly", "monthly"
 _FAMILY_RANK = {YEARLY: 2, QUARTERLY: 1, MONTHLY: 0}
-_FAMILY_CODE = {YEARLY: "Y", QUARTERLY: "Q", MONTHLY: "M"}
 
 #: months spanned by one period of each family
 MONTHS_PER_PERIOD = {YEARLY: 12, QUARTERLY: 3, MONTHLY: 1}
@@ -123,27 +122,29 @@ def step_down(code: str) -> str:
     raise FrequencyError(f"No frequency lower than {fam} currently supported")
 
 
-def _fast_infer(idx: pd.DatetimeIndex) -> str | None:
-    """Numpy inference for the regular start-anchored families the engine
-    actually converts (MS / QS-* / YS-*): all stamps on day 1 at midnight
-    with a constant month step of 1/3/12.  Returns exactly the string
-    pandas ``inferred_freq`` produces for these shapes (QS anchors cycle
-    OCT/NOV/DEC by start month mod 3, YS anchors by start month —
-    verified empirically for every start month and pinned by a property
-    test), or None to fall back to pandas for everything else.  This is
-    the fleet hot path: pandas' rule-based inference costs ~0.4 ms per
-    call, which at thousands of ``applyInPandas`` groups was a measurable
-    slice of kernel CPU."""
-    if len(idx) < 3 or idx.tz is not None:
+def _fast_infer(ts) -> str | None:
+    """Numpy inference, on month ordinals, for the regular start-anchored
+    families the engine actually converts (MS / QS-* / YS-*): all stamps on
+    day 1 at midnight with a constant month step of 1/3/12.  Returns exactly
+    the string pandas ``inferred_freq`` produces for these shapes (QS
+    anchors cycle OCT/NOV/DEC by start month mod 3, YS anchors by start
+    month — pinned by a property test), or None to fall back to pandas for
+    everything else, tz-aware stamps included.  Pandas' rule-based
+    inference costs ~0.4 ms per call, paid twice per series otherwise."""
+    if getattr(getattr(ts, "dtype", None), "tz", None) is not None:
         return None
-    if (idx.asi8 % 86_400_000_000_000 != 0).any() or (idx.day != 1).any():
+    ts = np.asarray(ts, dtype="datetime64[ns]")
+    if len(ts) < 3:
         return None
-    months = idx.year.to_numpy() * 12 + idx.month.to_numpy()
-    steps = np.diff(months)
+    months = ts.astype("datetime64[M]")
+    if (months != ts).any():
+        return None
+    ordinals = months.astype(np.int64)
+    steps = np.diff(ordinals)
     step = steps[0]
     if not (steps == step).all():
         return None
-    m0 = int(idx.month[0])
+    m0 = int(ordinals[0]) % 12 + 1
     if step == 1:
         return "MS"
     if step == 3:
@@ -156,15 +157,14 @@ def _fast_infer(idx: pd.DatetimeIndex) -> str | None:
 def infer_code(index) -> str | None:
     """Infer a pandas-style frequency code from a datetime index/array.
 
-    Agrees with the reference's use of ``DatetimeIndex.inferred_freq``
-    (ts_disagg.py:246,264,295-296): a numpy fast path covers the regular
-    start-anchored families (bit-identical strings, see
-    :func:`_fast_infer`); everything else delegates to pandas."""
-    idx = pd.DatetimeIndex(index)
-    if idx.freq is not None:
-        return idx.freq.freqstr
-    code = _fast_infer(idx)
-    return code if code is not None else idx.inferred_freq
+    Agrees with ``DatetimeIndex.inferred_freq`` (ts_disagg.py:246,264,
+    295-296), except that a ``.freq`` attached to a ``DatetimeIndex`` wins
+    (a datetime64 array has none).  :func:`_fast_infer` answers the regular
+    start-anchored shapes; pandas answers the rest."""
+    if isinstance(index, pd.DatetimeIndex) and index.freq is not None:
+        return index.freq.freqstr
+    code = _fast_infer(index)
+    return code if code is not None else pd.DatetimeIndex(index).inferred_freq
 
 
 # ---------------------------------------------------------------------------

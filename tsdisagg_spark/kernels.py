@@ -52,14 +52,16 @@ def period_labels(ts, low_family: str) -> np.ndarray:
     (ts_disagg.py:60-66) — i.e. membership is by *calendar* year/quarter of
     the stamp regardless of any month anchor on the frequency code.  We encode
     the same label as an integer so the identical expression works in Spark
-    SQL: ``year`` for yearly lows, ``4*year + (month-1)//3`` for quarterly.
+    SQL: ``year`` for yearly lows, ``4*year + (month-1)//3`` for quarterly,
+    read from month ordinals m as ``m // 12 + 1970`` and ``m // 3 + 4*1970``
+    (a tz-aware index on its wall clock, as its ``.year`` reads it).
     """
-    import pandas as pd
-
-    idx = pd.DatetimeIndex(ts)
+    if getattr(ts, "tz", None) is not None:
+        ts = ts.tz_localize(None)
+    months = np.asarray(ts, dtype="datetime64[ns]").astype("datetime64[M]").astype(np.int64)
     if low_family == "yearly":
-        return idx.year.to_numpy()
-    return (idx.year * 4 + (idx.month - 1) // 3).to_numpy()
+        return months // 12 + 1970
+    return months // 3 + 4 * 1970
 
 
 def conversion_matrix(
@@ -1027,6 +1029,23 @@ BANDED_THRESHOLD = 2000
 # whole-series solve (shared by the pandas API and the Spark grouped kernel)
 # ---------------------------------------------------------------------------
 
+def _check_method_args(method: str, criterion: str, agg_func: str = "sum") -> None:
+    """Argument checks shared by :func:`solve_series` and ``disagg``'s core."""
+    if method not in METHODS:
+        raise ValueError(
+            f"Method should be one of 'denton', 'denton-cholette', 'chow-lin', "
+            f"'litterman'. Got {method}."
+        )
+    if criterion not in ("proportional", "additive"):
+        raise ValueError(
+            f"Criterion should be one of 'proportional', 'additive'. Got {criterion}"
+        )
+    if agg_func not in AGG_FUNCS:
+        raise ValueError(
+            f"agg_func should be one of 'mean', 'sum', 'first', 'last'. Got {agg_func}"
+        )
+
+
 def solve_series(
     y: np.ndarray,
     X: np.ndarray,
@@ -1045,16 +1064,7 @@ def solve_series(
     Returns ``(y_hat, optimize_result_or_None, info)`` where ``info`` carries
     regression diagnostics (beta, rho, sigma2, std errors) for report output.
     """
-    if method not in METHODS:
-        raise ValueError(
-            f"Method should be one of 'denton', 'denton-cholette', 'chow-lin', "
-            f"'litterman'. Got {method}."
-        )
-    if criterion not in ("proportional", "additive"):
-        raise ValueError(
-            f"Criterion should be one of 'proportional', 'additive'. Got {criterion}"
-        )
-
+    _check_method_args(method, criterion)
     if method in REGRESSION_METHODS:
         return _regression_fit(y, X, C, method, optimizer_kwargs)
 

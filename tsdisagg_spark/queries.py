@@ -1113,7 +1113,7 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
     demonstrates the engine's scale thesis: the dense kernel is per-series
     tiny; throughput comes from hash-partitioned parallelism.
 
-    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    The kernel's input contract (disagg._align, ts_disagg.py:213-299)
     decides which series solve: errors='skip' drops a series it rejects.
     Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import _SRC_IND, _SRC_LOW, _TAG
@@ -1302,7 +1302,7 @@ def disagg_litterman_nation(spark, sf_dir):
     monthly shipped value, re-aggregated over complete years so the
     Litterman covariance path proves C @ y_hat = y relationally.
 
-    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    The kernel's input contract (disagg._align, ts_disagg.py:213-299)
     decides which series solve: errors='skip' drops a series it rejects.
     Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import disaggregate
@@ -1383,7 +1383,7 @@ def disagg_denton_mean(spark, sf_dir):
     monthly y_hat must average back to the yearly mean exactly
     (conversion_matrix 'mean' rows; ts_disagg.py agg_func='mean').
 
-    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    The kernel's input contract (disagg._align, ts_disagg.py:213-299)
     decides which series solve: errors='skip' drops a series it rejects.
     Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import disaggregate
@@ -1430,7 +1430,7 @@ def disagg_denton_companion(spark, sf_dir):
     the re-aggregation must reproduce ALL quarterly values (no completeness
     filter needed, which itself checks the synthesized timeline's shape).
 
-    The kernel's input contract (disagg.prepare_inputs, ts_disagg.py:213-299)
+    The kernel's input contract (disagg._align, ts_disagg.py:213-299)
     decides which series solve: errors='skip' drops a series it rejects.
     Only the oracle restates that contract, as its `elig` CTE."""
     from tsdisagg_spark.spark.disagg import disaggregate

@@ -13,28 +13,30 @@ Architecture (Spark-first, not a port):
 * One kernel stage (:func:`_kernel_stage`) serves both entry points:
   :func:`disaggregate` emits each series' high-frequency path and
   :func:`fit_reports` its regression report, over the same repartition,
-  per-series unpacking and error isolation.
+  per-series split and error isolation, and solve each series' numpy
+  columns with the pandas API's own array core.
 
 Scale design — the whole plan has exactly ONE shuffle:
 
 Instead of ``low FULL OUTER JOIN indicators ON (series, ts)`` followed by
 ``groupBy(series)`` (two exchanges: one on (series, ts), one on (series)),
 the two inputs are *unioned* with a source tag and hash-partitioned once on
-``series_id``.  The per-series outer merge then happens inside the kernel on
-a few hundred pandas rows — free.  At 100 TB / millions of series this
-halves shuffle volume and removes the join's sort entirely; skewed series
-are bounded by the largest single series (the one regression path is
-linear in series length, O(n_low) per rho).
+``series_id``.  Inside the kernel the per-series merge is a subset test of
+the target stamps against the indicator stamps.  At 100 TB / millions of
+series this halves shuffle volume and removes the join's sort entirely;
+skewed series are bounded by the largest single series (the one
+regression path is linear in series length, O(n_low) per rho).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tsdisagg_spark.disagg import disaggregate_full
+from tsdisagg_spark.disagg import _disaggregate_arrays, _report_columns
 
 _SRC_LOW, _SRC_IND = 0, 1
 _TAG = "__src"
@@ -78,6 +80,7 @@ def _tagged_union(
 def _kernel_stage(
     unioned: DataFrame,
     ind_cols: list[str],
+    solve_kw: dict,
     emit,
     schema_tail: list[T.StructField],
     *,
@@ -92,11 +95,12 @@ def _kernel_stage(
     ``unioned`` has :func:`_tagged_union`'s shape: ``(series_col, ts_col
     TIMESTAMP, value_col DOUBLE, *ind_cols DOUBLE, _TAG INT)``, with
     ``value_col`` null on indicator rows and ``ind_cols`` null on target
-    rows.  Each series is unpacked into a target frame and an indicator
-    frame (``None`` without indicator values) and handed to ``emit(low_df,
-    high_df)``, which returns the ``schema_tail`` columns or ``None`` for no
-    rows; the stage prepends the series key.  A failing series raises an
-    error naming it, or under ``errors='skip'`` yields no rows.
+    rows.  One argsort on the stamps splits each series into numpy columns
+    for the array core, which solves it with ``solve_kw``;
+    ``emit(ts, y_hat, info, indicator_names)`` returns the ``schema_tail``
+    columns as a dict, or ``None`` for no rows, and the stage prepends the
+    series key.  A failing series raises an error naming it, or under
+    ``errors='skip'`` yields no rows.
 
     The stage is CPU-bound, not byte-bound: AQE would coalesce its byte-tiny
     shuffle to one or two tasks and serialize the solves.  An explicit
@@ -116,35 +120,31 @@ def _kernel_stage(
     def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = pdf[series_col].iloc[0]
         try:
-            low_rows = (
-                pdf[pdf[_TAG] == _SRC_LOW]
-                .sort_values(ts_col)
-                .dropna(subset=[value_col])
-            )
-            low_df = pd.DataFrame(
-                {value_col: low_rows[value_col].to_numpy()},
-                index=pd.DatetimeIndex(low_rows[ts_col]),
-            )
-            high_df = None
+            ts = pdf[ts_col].to_numpy()
+            order = np.argsort(ts, kind="stable")
+            ts = ts[order]
+            is_low = pdf[_TAG].to_numpy()[order] == _SRC_LOW
+            y = pdf[value_col].to_numpy(dtype=float)[order][is_low]
+            high_ts = X = None
+            names: list[str] = []
             if ind_cols:
-                ind_rows = pdf[pdf[_TAG] == _SRC_IND].sort_values(ts_col)
-                # per-series indicator matrix; drop all-null columns so mixed
-                # fleets (some series with k=1, some k=2) can share one input
-                high_df = pd.DataFrame(
-                    {c: ind_rows[c].to_numpy() for c in ind_cols},
-                    index=pd.DatetimeIndex(ind_rows[ts_col]),
-                ).dropna(axis=1, how="all")
-                if high_df.shape[1] == 0:
-                    high_df = None
-            out = emit(low_df, high_df)
+                X = pdf[ind_cols].to_numpy(dtype=float)[order][~is_low]
+                # drop all-null columns so mixed fleets (some series with
+                # k=1, some k=2) can share one input
+                keep = ~np.isnan(X).all(axis=0)
+                names = [c for c, kept in zip(ind_cols, keep) if kept]
+                X, high_ts = (X[:, keep], ts[~is_low]) if names else (None, None)
+            out_ts, y_hat, _result, info, _code = _disaggregate_arrays(
+                ts[is_low], y, high_ts, X, **solve_kw
+            )
+            out = emit(out_ts, y_hat, info, names)
         except Exception as exc:  # noqa: BLE001 — per-series isolation
             if errors == "skip":
                 return empty
             raise RuntimeError(f"disaggregation failed for series {sid!r}: {exc}") from exc
         if out is None:
             return empty
-        out.insert(0, series_col, sid)
-        return out
+        return pd.DataFrame({series_col: sid, **out})
 
     width = unioned.sparkSession.sparkContext.defaultParallelism
     unioned = unioned.repartition(width, series_col)
@@ -182,7 +182,8 @@ def disaggregate(
         ``'skip'`` drops series whose solve fails instead of failing the job
         — at millions of series one malformed group should not kill a
         1000-executor stage.  A dropped series leaves no record: it is
-        simply absent from the output.
+        simply absent from the output.  A null target value fails its
+        series, as a missing value fails the single-series API.
 
     Returns
     -------
@@ -230,20 +231,14 @@ def _disaggregate_unioned(
     a cold cached upstream and compute it once per leg (measured: the
     lineitem month aggregation ran 2-4x per action in
     disagg_chow_lin_suppliers before the round-14 restructure)."""
-
-    def emit(low_df, high_df) -> pd.DataFrame:
-        out = disaggregate_full(
-            low_df, high_df, target_freq=target_freq, agg_func=agg_func,
-            method=method, criterion=criterion, h=h,
-            optimizer_kwargs=optimizer_kwargs, verbose=False, compute_report=False,
-        )["output"]
-        return pd.DataFrame({ts_col: out.index, "y_hat": out.to_numpy(dtype=float)})
-
+    solve_kw = dict(
+        method=method, agg_func=agg_func, criterion=criterion, h=h,
+        target_freq=target_freq, optimizer_kwargs=optimizer_kwargs,
+    )
     tail = [T.StructField(ts_col, T.TimestampType()), T.StructField("y_hat", T.DoubleType())]
     return _kernel_stage(
-        unioned, ind_cols, emit, tail,
-        series_col=series_col, ts_col=ts_col, value_col=value_col,
-        errors=errors,
+        unioned, ind_cols, solve_kw, lambda ts, y_hat, _info, _names: {ts_col: ts, "y_hat": y_hat},
+        tail, series_col=series_col, ts_col=ts_col, value_col=value_col, errors=errors,
     )
 
 
@@ -277,17 +272,14 @@ def fit_reports(
     (ts_disagg.py:179-210), queryable instead of printed.  A series whose
     fit fails fails the job with an error naming it."""
 
-    def emit(low_df, high_df) -> pd.DataFrame | None:
-        arts = disaggregate_full(
-            low_df, high_df, agg_func=agg_func, method=method,
-            optimizer_kwargs=optimizer_kwargs, verbose=False,
-        )
-        if arts["report"] is None:
+    def emit(ts, _y_hat, info, names) -> dict | None:
+        if not info:
             return None
-        return arts["report"].assign(rho=arts["info"]["rho"], sigma2=arts["info"]["sigma2"])
+        return {**_report_columns(names, info, len(ts)), "rho": info["rho"], "sigma2": info["sigma2"]}
 
+    solve_kw = dict(method=method, agg_func=agg_func, optimizer_kwargs=optimizer_kwargs)
     unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
     return _kernel_stage(
-        unioned, ind_cols, emit, _REPORT_SCHEMA_TAIL,
+        unioned, ind_cols, solve_kw, emit, _REPORT_SCHEMA_TAIL,
         series_col=series_col, ts_col=ts_col, value_col=value_col,
     )
