@@ -1131,3 +1131,26 @@ def test_degenerate_indicators_raise(case, method, block_form):
     y, X, C = _degenerate_case(case)
     with pytest.raises(np.linalg.LinAlgError):
         kernels._regression_fit(y, X, _block_form(C) if block_form else C, method, None)
+
+
+def test_call_contract_is_per_family():
+    """The call contract checks h only for the Denton family and the
+    optimizer only for the regression methods, which each ignore the
+    other's argument; the public fit aliases reject an unknown optimizer
+    through it."""
+    y, X, C = _degenerate_case("ten_years")
+    bad_opt = {"method": "trust-constr"}
+    with pytest.raises(ValueError, match="Unsupported optimizer method 'trust-constr'"):
+        kernels.chow_lin_banded_fit(y, X, C, bad_opt)
+    with pytest.raises(ValueError, match="Unsupported optimizer method 'trust-constr'"):
+        kernels.fit_rho_sigma(y, X, C, kernels.litterman_covariance, bad_opt)
+    with pytest.raises(ValueError, match="Unsupported optimizer method 'trust-constr'"):
+        kernels.solve_series(y, X, C, "chow-lin", order=-1, optimizer_kwargs=bad_opt)
+    with pytest.raises(ValueError, match="h must be >= 0"):
+        kernels.solve_series(y, X[:, :1], C, "denton", order=-1, optimizer_kwargs=bad_opt)
+    base = kernels.solve_series(y, X, C, "chow-lin")[0]
+    assert np.array_equal(kernels.solve_series(y, X, C, "chow-lin", order=-1)[0], base)
+    den = kernels.solve_series(y, X[:, :1], C, "denton")[0]
+    assert np.array_equal(
+        kernels.solve_series(y, X[:, :1], C, "denton", optimizer_kwargs=bad_opt)[0], den
+    )

@@ -2,6 +2,7 @@
 reproduce the (golden-tested) single-series pandas API per series."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tsdisagg_spark import disaggregate_series
+from tsdisagg_spark.frequency import FrequencyError
 from tsdisagg_spark.spark.disagg import disaggregate, fit_reports
 
 DATA = "/root/reference/tests/data"
@@ -248,6 +250,108 @@ def test_fit_reports_failure_names_series(synthetic_series):
     )
     with pytest.raises(Exception, match="series 's0'"):
         fit_reports(poisoned, ind_sdf, method="chow-lin", agg_func="sum").collect()
+
+
+def _one_series_frames(spark):
+    """One healthy six-year series ``s0`` in long format, with a monthly
+    two-column and a monthly one-column indicator frame."""
+    years = pd.date_range("2000-01-01", periods=6, freq="YS")
+    months = pd.date_range("2000-01-01", periods=72, freq="MS")
+    low = pd.DataFrame({"series_id": "s0", "ts": years, "y": 100.0 + 10.0 * np.arange(6)})
+    ind = pd.DataFrame(
+        {"series_id": "s0", "ts": months, "x1": np.linspace(1.0, 3.0, 72), "intercept": 1.0}
+    )
+    return (
+        spark.createDataFrame(low),
+        spark.createDataFrame(ind),
+        spark.createDataFrame(ind.drop(columns="intercept")),
+    )
+
+
+_NO_INDICATORS = (
+    'high_freq_df can only be None for methods "denton" and "denton-cholette", '
+    "otherwise a dataframe of high-frequency indicators must be provided."
+)
+
+#: call mistakes -> (entry point, indicator frame, arguments, error, message)
+_CALL_MISTAKES = {
+    "method": (
+        "disaggregate", None, dict(method="dentn", target_freq="MS"), ValueError,
+        "Method should be one of 'denton', 'denton-cholette', 'chow-lin', 'litterman'. Got dentn.",
+    ),
+    "criterion": (
+        "disaggregate", None, dict(criterion="propo", target_freq="MS"), ValueError,
+        "Criterion should be one of 'proportional', 'additive'. Got propo",
+    ),
+    "agg_func": (
+        "disaggregate", None, dict(agg_func="median", target_freq="MS"), ValueError,
+        "agg_func should be one of 'mean', 'sum', 'first', 'last'. Got median",
+    ),
+    "h": (
+        "disaggregate", None, dict(h=-1, target_freq="MS"), ValueError,
+        "the differencing order h must be >= 0, got -1",
+    ),
+    "optimizer": (
+        "disaggregate", "two", dict(method="chow-lin", optimizer_kwargs={"method": "trust-constr"}),
+        ValueError, "Unsupported optimizer method 'trust-constr'",
+    ),
+    "target_freq": (
+        "disaggregate", None, dict(target_freq="W"), FrequencyError,
+        "Only annual, quarterly and monthly frequencies are supported, found W",
+    ),
+    "no_indicators": (
+        "disaggregate", None, dict(method="chow-lin"), ValueError, _NO_INDICATORS,
+    ),
+    "fit_reports_denton": (
+        "fit_reports", "one", dict(method="denton-cholette"), ValueError,
+        "fit_reports needs a regression method: 'chow-lin' or 'litterman'. Got denton-cholette.",
+    ),
+    "fit_reports_method": (
+        "fit_reports", "two", dict(method="chow_lin"), ValueError,
+        "Method should be one of 'denton', 'denton-cholette', 'chow-lin', 'litterman'. Got chow_lin.",
+    ),
+    "fit_reports_no_indicators": (
+        "fit_reports", None, dict(method="litterman"), ValueError, _NO_INDICATORS,
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "case, errors",
+    [
+        (case, errors)
+        for case, (entry, *_rest) in sorted(_CALL_MISTAKES.items())
+        for errors in (("raise", "skip") if entry == "disaggregate" else (None,))
+    ],
+)
+def test_call_mistake_raises_on_driver_before_any_job(spark, case, errors):
+    """A call mistake fails the call itself, on the driver, under both
+    ``errors`` modes (``fit_reports`` has none), with the message of the
+    argument check and no series named, and no Spark job runs.  (Checked
+    per series, each mistake used to fail every series: an empty result
+    under ``'skip'``, a job failure blaming series 's0' under ``'raise'``,
+    and an empty report from ``fit_reports`` with a Denton method.)"""
+    entry, indicators, kw, exc, message = _CALL_MISTAKES[case]
+    low, ind_two, ind_one = _one_series_frames(spark)
+    ind = {"two": ind_two, "one": ind_one, None: None}[indicators]
+    call = (
+        (lambda: disaggregate(low, ind, errors=errors, **kw))
+        if entry == "disaggregate"
+        else (lambda: fit_reports(low, ind, **kw))
+    )
+    sc = spark.sparkContext
+    group = f"call-contract-{case}-{errors}"
+    sc.setJobGroup(group, "call contract probe")
+    try:
+        with pytest.raises(exc, match=re.escape(message)) as info:
+            call()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert "series" not in str(info.value) and "s0" not in str(info.value)
+        low.count()  # the probe does see a job when one runs
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
 
 
 def test_single_shuffle_plan(multi_series):

@@ -33,6 +33,14 @@ def _require_datetime_index(df: pd.DataFrame, arg_name: str) -> None:
         )
 
 
+#: a regression method without indicators (a call, or a series' all-null ones)
+_NO_INDICATORS = (
+    'high_freq_df can only be None for methods "denton" and '
+    '"denton-cholette", otherwise a dataframe of high-frequency '
+    "indicators must be provided."
+)
+
+
 def _align(
     low_ts: np.ndarray, y: np.ndarray, high_ts: np.ndarray | None, X: np.ndarray | None,
     method: str, target_freq: str | None, low_freq: str | None = None,
@@ -84,16 +92,11 @@ def _align(
                 "Indicator data high_freq_df does not have a valid time index with "
                 "frequency information"
             )
-    freq.validate_codes(low_code, high_code)
     factor = freq.conversion_factor(low_code, high_code)
 
     if X is None:
         if method not in ("denton", "denton-cholette"):
-            raise ValueError(
-                'high_freq_df can only be None for methods "denton" and '
-                '"denton-cholette", otherwise a dataframe of high-frequency '
-                "indicators must be provided."
-            )
+            raise ValueError(_NO_INDICATORS)
         high_ts = freq.companion_index(low_ts, low_code, high_code).to_numpy()
         X = np.ones((len(high_ts), 1))
 
@@ -118,11 +121,10 @@ def _disaggregate_arrays(
     """The one per-series disaggregation path, on numpy arrays: the
     target's wall-clock ``datetime64[ns]`` stamps and values, and the
     indicator stamps and (n, k) matrix, or both None for the Denton
-    companion timeline.  Checks the arguments, aligns (:func:`_align`),
-    builds C from month ordinals, prunes uncovered low periods with a
-    warning and solves.  Returns ``(high_ts, y_hat, result, info,
-    low_code)``."""
-    kernels._check_method_args(method, criterion, agg_func)
+    companion timeline.  Aligns (:func:`_align`), builds C from month
+    ordinals, prunes uncovered low periods with a warning and solves; the
+    caller has checked the arguments (:func:`kernels._check_method_args`).
+    Returns ``(high_ts, y_hat, result, info, low_code)``."""
     high_ts, X, factor, low_code, _high_code = _align(
         low_ts, y, high_ts, X, method, target_freq, low_freq
     )
@@ -251,6 +253,7 @@ def disaggregate_full(
     ``compute_report=False`` skips building the diagnostics DataFrame (the
     t-quantile continued fractions are a measurable cost per series).
     """
+    kernels._check_method_args(method, criterion, agg_func, h, optimizer_kwargs)
     if isinstance(low_freq_df, pd.Series):
         low_freq_df = low_freq_df.to_frame()
 

@@ -77,12 +77,6 @@ def family(code: str) -> str:
     )
 
 
-def validate_codes(*codes: str) -> None:
-    """Whitelist check for every code (time_conversion.py:66-71)."""
-    for code in codes:
-        family(code)
-
-
 def is_start_anchored(code: str) -> bool:
     """True for period-start stamps (``S`` suffix on the base)."""
     return split_code(code)[0].endswith("S")

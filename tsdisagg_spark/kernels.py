@@ -31,7 +31,7 @@ implementation:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
@@ -178,12 +178,10 @@ def _denton_least_norm(
 
     A zero indicator month under ``proportional`` has d = 0 and so
     y_hat = 0; a low period whose weighted row C diag(d) is all zero cannot
-    meet its constraint and raises, as do h < 0 and Denton-Cholette with
-    fewer low periods than h (u[:k] would not be determined).
+    meet its constraint and raises, as does Denton-Cholette with fewer low
+    periods than h (u[:k] would not be determined).
     """
     n_low, n = C.shape
-    if order < 0:
-        raise ValueError(f"the differencing order h must be >= 0, got {order}")
     k = order if method == "denton-cholette" else 0
     if n_low < k:
         raise ValueError(
@@ -254,7 +252,6 @@ class FitResult:
     nit: int = 0
     nfev: int = 0
     message: str = "converged"
-    extras: dict = field(default_factory=dict)
 
 
 def gls_beta(Sigma: np.ndarray, y: np.ndarray, X: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -928,21 +925,14 @@ def _regression_fit(
     (:func:`_simplex_objective`), with no n x n covariance.  ``'powell'`` and
     ``'l-bfgs-b'`` (scipy solvers the reference passes through; scipy is not
     a dependency here) are solved via the same bounded Nelder-Mead with the
-    substitution recorded in ``FitResult.message``.  Unknown method names
-    raise ``ValueError`` instead of being silently accepted.
+    substitution recorded in ``FitResult.message``; any other name fails
+    the call contract (:func:`_check_method_args`).
     ``optimizer_kwargs['options']`` supports ``xatol``/``fatol``/``maxiter``.
     """
-    kwargs = dict(optimizer_kwargs or {})
-    opt = str(kwargs.get("method", "brent-profile")).lower()
-    if opt not in _PROFILE_OPTIMIZERS + _SIMPLEX_OPTIMIZERS:
-        raise ValueError(
-            f"Unsupported optimizer method {opt!r}: use 'nelder-mead', "
-            "'powell', 'l-bfgs-b', or omit for the concentrated "
-            "Brent-profile default."
-        )
+    opt = _optimizer(optimizer_kwargs)
     profile, evaluate = _regression_backend(y, X, C, method)
     if opt in _SIMPLEX_OPTIMIZERS:
-        options = dict(kwargs.get("options") or {})
+        options = dict((optimizer_kwargs or {}).get("options") or {})
         x, fx, nit, nfev = _nelder_mead_minimize(
             _simplex_objective(profile, len(y)),
             np.full(2, 0.8),  # reference x0 (ts_disagg.py:441)
@@ -966,9 +956,7 @@ def _regression_fit(
             lambda grid: profile(grid)[:, 0], evaluate
         )
         sigma2 = s_star / (1.0 + rho)
-        result = FitResult(
-            x=np.array([rho, sigma2]), fun=nll, nfev=nfev, extras={"scaled_sigma2": s_star}
-        )
+        result = FitResult(x=np.array([rho, sigma2]), fun=nll, nfev=nfev)
     info = {
         "beta": beta,
         "rho": rho,
@@ -991,6 +979,7 @@ def fit_rho_sigma(
     method = next((m for m, b in COVARIANCE_BUILDERS.items() if b is cov_builder), None)
     if method is None:
         raise ValueError("cov_builder must be one of COVARIANCE_BUILDERS")
+    _check_method_args(method, optimizer_kwargs=optimizer_kwargs)
     return _regression_fit(y, X, C, method, optimizer_kwargs)[1]
 
 
@@ -1015,6 +1004,7 @@ def chow_lin_banded_fit(
     of :func:`solve_series` for a constraint matrix that may be in block
     form ``(lo, hi, vals)``, where a dense C would itself be the memory
     wall.  The name survives from the banded-KKT back end it used to run."""
+    _check_method_args("chow-lin", optimizer_kwargs=optimizer_kwargs)
     return _regression_fit(y, X, C, "chow-lin", optimizer_kwargs)
 
 
@@ -1029,8 +1019,19 @@ BANDED_THRESHOLD = 2000
 # whole-series solve (shared by the pandas API and the Spark grouped kernel)
 # ---------------------------------------------------------------------------
 
-def _check_method_args(method: str, criterion: str, agg_func: str = "sum") -> None:
-    """Argument checks shared by :func:`solve_series` and ``disagg``'s core."""
+def _optimizer(optimizer_kwargs: dict | None) -> str:
+    """The optimizer named by ``optimizer_kwargs['method']``, lower-cased."""
+    return str((optimizer_kwargs or {}).get("method", "brent-profile")).lower()
+
+
+def _check_method_args(
+    method: str, criterion: str = "proportional", agg_func: str = "sum", h: int = 1,
+    optimizer_kwargs: dict | None = None,
+) -> None:
+    """The call contract, checked once per call before any series is read
+    (ts_disagg.py:379-388): the method, criterion and agg_func whitelists,
+    h >= 0 for the Denton family and the optimizer for the regression
+    methods (each family ignores the other's argument)."""
     if method not in METHODS:
         raise ValueError(
             f"Method should be one of 'denton', 'denton-cholette', 'chow-lin', "
@@ -1044,6 +1045,16 @@ def _check_method_args(method: str, criterion: str, agg_func: str = "sum") -> No
         raise ValueError(
             f"agg_func should be one of 'mean', 'sum', 'first', 'last'. Got {agg_func}"
         )
+    if method in REGRESSION_METHODS:
+        opt = _optimizer(optimizer_kwargs)
+        if opt not in _PROFILE_OPTIMIZERS + _SIMPLEX_OPTIMIZERS:
+            raise ValueError(
+                f"Unsupported optimizer method {opt!r}: use 'nelder-mead', "
+                "'powell', 'l-bfgs-b', or omit for the concentrated "
+                "Brent-profile default."
+            )
+    elif h < 0:
+        raise ValueError(f"the differencing order h must be >= 0, got {h}")
 
 
 def solve_series(
@@ -1064,7 +1075,7 @@ def solve_series(
     Returns ``(y_hat, optimize_result_or_None, info)`` where ``info`` carries
     regression diagnostics (beta, rho, sigma2, std errors) for report output.
     """
-    _check_method_args(method, criterion)
+    _check_method_args(method, criterion, h=order, optimizer_kwargs=optimizer_kwargs)
     if method in REGRESSION_METHODS:
         return _regression_fit(y, X, C, method, optimizer_kwargs)
 

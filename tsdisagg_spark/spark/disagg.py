@@ -1,20 +1,14 @@
 """Distributed multi-series temporal disaggregation.
 
-Architecture (Spark-first, not a port):
-
-* The *relational* half — merging target and indicator observations, period
-  labelling, coverage checks — is declared with DataFrame operations so
-  Catalyst handles pushdown/pruning.
-* The *dense* half — constraint matrix, covariances, GLS, ML fit — runs as a
-  grouped-map pandas UDF (``applyInPandas``) per series: each group is one
-  series' few hundred rows, Arrow-transferred, solved with the exact same
-  pure-NumPy kernels that are golden-tested against R ``tempdisagg``
-  (:mod:`tsdisagg_spark.kernels`, :mod:`tsdisagg_spark.disagg`).
-* One kernel stage (:func:`_kernel_stage`) serves both entry points:
-  :func:`disaggregate` emits each series' high-frequency path and
-  :func:`fit_reports` its regression report, over the same repartition,
-  per-series split and error isolation, and solve each series' numpy
-  columns with the pandas API's own array core.
+Targets and indicators are unioned with a source tag
+(:func:`_tagged_union`) and solved by one grouped-map kernel stage
+(:func:`_kernel_stage`) behind both entry points: :func:`disaggregate`
+emits each series' high-frequency path and :func:`fit_reports` its
+regression report.  The stage hands each series' numpy columns to the
+pandas API's own array core (:func:`tsdisagg_spark.disagg._disaggregate_arrays`),
+golden-tested against R ``tempdisagg``.  The call's arguments are checked
+once, on the driver, before the plan is built; inside the stage only a
+series' data can fail it.
 
 Scale design — the whole plan has exactly ONE shuffle:
 
@@ -36,7 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tsdisagg_spark.disagg import _disaggregate_arrays, _report_columns
+from tsdisagg_spark import frequency as freq
+from tsdisagg_spark import kernels
+from tsdisagg_spark.disagg import _NO_INDICATORS, _disaggregate_arrays, _report_columns
 
 _SRC_LOW, _SRC_IND = 0, 1
 _TAG = "__src"
@@ -98,8 +94,11 @@ def _kernel_stage(
     rows.  One argsort on the stamps splits each series into numpy columns
     for the array core, which solves it with ``solve_kw``;
     ``emit(ts, y_hat, info, indicator_names)`` returns the ``schema_tail``
-    columns as a dict, or ``None`` for no rows, and the stage prepends the
-    series key.  A failing series raises an error naming it, or under
+    columns as a dict, and the stage prepends the series key.  A call
+    mistake (``errors``, :func:`kernels._check_method_args` over
+    ``solve_kw``, ``target_freq``'s family, a regression method without
+    indicator columns) raises here, on the driver, under both ``errors``
+    modes.  A series whose data fail raises an error naming it, or under
     ``errors='skip'`` yields no rows.
 
     The stage is CPU-bound, not byte-bound: AQE would coalesce its byte-tiny
@@ -112,6 +111,11 @@ def _kernel_stage(
     partitions 2.0s, 128 partitions 3.3s)."""
     if errors not in ("raise", "skip"):
         raise ValueError("errors must be 'raise' or 'skip'")
+    kernels._check_method_args(**{k: v for k, v in solve_kw.items() if k != "target_freq"})
+    if solve_kw.get("target_freq") is not None:
+        freq.family(solve_kw["target_freq"])
+    if not ind_cols and solve_kw["method"] in kernels.REGRESSION_METHODS:
+        raise ValueError(_NO_INDICATORS)
     schema = T.StructType(
         [T.StructField(series_col, unioned.schema[series_col].dataType), *schema_tail]
     )
@@ -142,8 +146,6 @@ def _kernel_stage(
             if errors == "skip":
                 return empty
             raise RuntimeError(f"disaggregation failed for series {sid!r}: {exc}") from exc
-        if out is None:
-            return empty
         return pd.DataFrame({series_col: sid, **out})
 
     width = unioned.sparkSession.sparkContext.defaultParallelism
@@ -179,11 +181,13 @@ def disaggregate(
         required unless each series' frequency can be stepped down
         automatically.
     errors : ``'raise'`` | ``'skip'``
-        ``'skip'`` drops series whose solve fails instead of failing the job
-        — at millions of series one malformed group should not kill a
-        1000-executor stage.  A dropped series leaves no record: it is
+        ``'skip'`` drops series whose data fail the solve instead of failing
+        the job — at millions of series one malformed group should not kill
+        a 1000-executor stage.  A dropped series leaves no record: it is
         simply absent from the output.  A null target value fails its
-        series, as a missing value fails the single-series API.
+        series, as a missing value fails the single-series API.  A call
+        mistake (say an unknown method or h < 0) is no series' failure: it
+        raises from this call, on the driver, under both modes.
 
     Returns
     -------
@@ -210,19 +214,14 @@ def _disaggregate_unioned(
     unioned: DataFrame,
     ind_cols: list[str],
     *,
-    method: str,
-    agg_func: str,
-    criterion: str = "proportional",
-    h: int = 1,
-    target_freq: str | None = None,
-    optimizer_kwargs: dict | None = None,
     series_col: str = "series_id",
     ts_col: str = "ts",
     value_col: str = "y",
     errors: str = "raise",
+    **solve_kw,
 ) -> DataFrame:
     """:func:`disaggregate` over an ALREADY-TAGGED union frame (shape as in
-    :func:`_kernel_stage`).
+    :func:`_kernel_stage`), ``solve_kw`` being its method arguments.
 
     Callers that can DERIVE the union in one pass over a shared upstream
     aggregate (e.g. via grouping sets) use this entry point so the shared
@@ -231,10 +230,6 @@ def _disaggregate_unioned(
     a cold cached upstream and compute it once per leg (measured: the
     lineitem month aggregation ran 2-4x per action in
     disagg_chow_lin_suppliers before the round-14 restructure)."""
-    solve_kw = dict(
-        method=method, agg_func=agg_func, criterion=criterion, h=h,
-        target_freq=target_freq, optimizer_kwargs=optimizer_kwargs,
-    )
     tail = [T.StructField(ts_col, T.TimestampType()), T.StructField("y_hat", T.DoubleType())]
     return _kernel_stage(
         unioned, ind_cols, solve_kw, lambda ts, y_hat, _info, _names: {ts_col: ts, "y_hat": y_hat},
@@ -269,12 +264,16 @@ def fit_reports(
     """Per-series GLS regression diagnostics as a DataFrame
     ``(series, variable, coef, sd_err, t, p_value, ci_low, ci_high, rho,
     sigma2)`` — the engine's replacement for the reference's stdout report
-    (ts_disagg.py:179-210), queryable instead of printed.  A series whose
-    fit fails fails the job with an error naming it."""
+    (ts_disagg.py:179-210), queryable instead of printed.  Regression
+    methods only: a Denton method, like any other call mistake, raises from
+    this call on the driver.  A series whose fit fails fails the job with
+    an error naming it."""
+    if method in ("denton", "denton-cholette"):
+        raise ValueError(
+            f"fit_reports needs a regression method: 'chow-lin' or 'litterman'. Got {method}."
+        )
 
-    def emit(ts, _y_hat, info, names) -> dict | None:
-        if not info:
-            return None
+    def emit(ts, _y_hat, info, names) -> dict:
         return {**_report_columns(names, info, len(ts)), "rho": info["rho"], "sigma2": info["sigma2"]}
 
     solve_kw = dict(method=method, agg_func=agg_func, optimizer_kwargs=optimizer_kwargs)
