@@ -566,5 +566,6 @@ def test_disagg_kernel_width_is_pinned(spark):
     kernel exchange to 2 tasks and serialized 1000 solves onto 2 cores."""
     for name in sorted(n for n in Q.QUERIES if n.startswith("disagg_")):
         plan = _plan(Q.QUERIES[name](spark, SF))
-        assert "FlatMapGroupsInPandas" in plan, (name, plan)
+        assert "FlatMapGroupsInArrow" in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
         assert "REPARTITION_BY_NUM" in plan, (name, plan)

@@ -36,7 +36,7 @@ _PATTERNS = [
     ("sort-merge joins", r"SortMergeJoin"),
     ("shuffle-hash joins", r"ShuffledHashJoin"),
     ("codegen spans", r"\*\(\d+\)"),
-    ("python stages", r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|BatchEvalPython"),
+    ("python stages", r"ArrowEvalPython|FlatMapGroupsIn(?:Pandas|Arrow)|MapInPandas|BatchEvalPython"),
 ]
 
 

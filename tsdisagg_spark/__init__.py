@@ -3,7 +3,7 @@
 Capabilities mirror ``jessegrabowski/tsdisagg`` (Denton, Denton-Cholette,
 Chow-Lin, Litterman temporal disaggregation) re-expressed Spark-first:
 relational preprocessing as DataFrame/Catalyst plans, dense per-series
-numerics as Arrow-batched grouped pandas UDFs, plus large-scale data-pipeline
+numerics as one grouped-map Arrow UDF stage, plus large-scale data-pipeline
 operators (dedup, similarity search, text analysis, streaming windows).
 """
 

@@ -119,7 +119,7 @@ def _disaggregate_arrays(
     low_freq: str | None = None,
 ) -> tuple[np.ndarray, np.ndarray, FitResult | None, dict, str]:
     """The one per-series disaggregation path, on numpy arrays: the
-    target's wall-clock ``datetime64[ns]`` stamps and values, and the
+    target's wall-clock ``datetime64`` stamps (any unit) and values, and the
     indicator stamps and (n, k) matrix, or both None for the Denton
     companion timeline.  Aligns (:func:`_align`), builds C from month
     ordinals, prunes uncovered low periods with a warning and solves; the

@@ -1,7 +1,7 @@
 """Per-series numerical kernels for temporal disaggregation.
 
 Pure NumPy — importable and unit-testable without Spark.  On the cluster
-these run *inside* a grouped-map pandas UDF (one call per series), so every
+these run *inside* a grouped-map Arrow UDF (one call per series), so every
 function here operates on a single series' arrays (n = high-frequency
 length, typically 10^2-10^3).
 

@@ -50,7 +50,7 @@ _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _ensure_workers_can_import(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via ``addPyFile``.
 
-    The grouped-kernel closures (``applyInPandas``/``mapInPandas``) resolve
+    The grouped-kernel closures (``applyInArrow``/``applyInPandas``/``mapInPandas``) resolve
     their globals by importing ``tsdisagg_spark`` on the worker.  A session
     built by an external harness carries no PYTHONPATH for the workers, so
     without this every kernel-backed query dies with an import error on the

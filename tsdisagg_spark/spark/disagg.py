@@ -4,11 +4,14 @@ Targets and indicators are unioned with a source tag
 (:func:`_tagged_union`) and solved by one grouped-map kernel stage
 (:func:`_kernel_stage`) behind both entry points: :func:`disaggregate`
 emits each series' high-frequency path and :func:`fit_reports` its
-regression report.  The stage hands each series' numpy columns to the
-pandas API's own array core (:func:`tsdisagg_spark.disagg._disaggregate_arrays`),
-golden-tested against R ``tempdisagg``.  The call's arguments are checked
-once, on the driver, before the plan is built; inside the stage only a
-series' data can fail it.
+regression report.  The stage takes each series as an Arrow table, reads
+its columns as numpy arrays and hands them to the pandas API's own array
+core (:func:`tsdisagg_spark.disagg._disaggregate_arrays`), golden-tested
+against R ``tempdisagg``; its output goes back as one Arrow table per
+series, so no pandas object exists on the Spark path.  Stamps are read and
+written on the session time zone's wall clock.  The call's arguments are
+checked once, on the driver, before the plan is built; inside the stage
+only a series' data can fail it.
 
 Scale design — the whole plan has exactly ONE shuffle:
 
@@ -25,10 +28,12 @@ regression path is linear in series length, O(n_low) per rho).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tsdisagg_spark import frequency as freq
 from tsdisagg_spark import kernels
@@ -46,7 +51,8 @@ def _tagged_union(
     value_col: str,
 ) -> tuple[DataFrame, list[str]]:
     """Union target and indicator rows into one long frame with a source tag,
-    aligning schemas with explicit null columns (no join — see module doc)."""
+    aligning schemas with explicit null columns (no join — see module doc).
+    Stamps become session-zoned TIMESTAMP whatever ``spark.sql.timestampType``."""
     ind_cols: list[str] = []
     if indicators is not None:
         ind_cols = [
@@ -55,7 +61,7 @@ def _tagged_union(
 
     low_part = low.select(
         F.col(series_col),
-        F.col(ts_col).cast("timestamp").alias(ts_col),
+        F.col(ts_col).cast(T.TimestampType()).alias(ts_col),
         F.col(value_col).cast("double").alias(value_col),
         *[F.lit(None).cast("double").alias(c) for c in ind_cols],
         F.lit(_SRC_LOW).alias(_TAG),
@@ -65,7 +71,7 @@ def _tagged_union(
 
     ind_part = indicators.select(
         F.col(series_col),
-        F.col(ts_col).cast("timestamp").alias(ts_col),
+        F.col(ts_col).cast(T.TimestampType()).alias(ts_col),
         F.lit(None).cast("double").alias(value_col),
         *[F.col(c).cast("double").alias(c) for c in ind_cols],
         F.lit(_SRC_IND).alias(_TAG),
@@ -91,15 +97,19 @@ def _kernel_stage(
     ``unioned`` has :func:`_tagged_union`'s shape: ``(series_col, ts_col
     TIMESTAMP, value_col DOUBLE, *ind_cols DOUBLE, _TAG INT)``, with
     ``value_col`` null on indicator rows and ``ind_cols`` null on target
-    rows.  One argsort on the stamps splits each series into numpy columns
-    for the array core, which solves it with ``solve_kw``;
+    rows.  Each series arrives as an Arrow table whose stamps are instants
+    in the session time zone; the stage reads their wall-clock time, and
+    one argsort on it splits the series into numpy columns for the array
+    core, which solves it with ``solve_kw``.  The output stamps go back to
+    instants in that zone (a fall-back hour's ambiguous wall time on
+    standard time, as ``applyInPandas`` does), then
     ``emit(ts, y_hat, info, indicator_names)`` returns the ``schema_tail``
-    columns as a dict, and the stage prepends the series key.  A call
-    mistake (``errors``, :func:`kernels._check_method_args` over
-    ``solve_kw``, ``target_freq``'s family, a regression method without
-    indicator columns) raises here, on the driver, under both ``errors``
-    modes.  A series whose data fail raises an error naming it, or under
-    ``errors='skip'`` yields no rows.
+    columns as a dict of equal-length arrays, and the stage prepends the
+    series key.  A call mistake (``errors``,
+    :func:`kernels._check_method_args` over ``solve_kw``, ``target_freq``'s
+    family, a regression method without indicator columns) raises here, on
+    the driver, under both ``errors`` modes.  A series whose data fail
+    raises an error naming it, or under ``errors='skip'`` yields no rows.
 
     The stage is CPU-bound, not byte-bound: AQE would coalesce its byte-tiny
     shuffle to one or two tasks and serialize the solves.  An explicit
@@ -119,20 +129,21 @@ def _kernel_stage(
     schema = T.StructType(
         [T.StructField(series_col, unioned.schema[series_col].dataType), *schema_tail]
     )
-    empty = pd.DataFrame(columns=schema.names)
+    arrow_schema = to_arrow_schema(schema)
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = pdf[series_col].iloc[0]
+    def run_group(key: tuple, table: pa.Table) -> pa.Table:
+        sid = key[0].as_py()
         try:
-            ts = pdf[ts_col].to_numpy()
+            stamps = table.column(ts_col)
+            ts = pc.local_timestamp(stamps).to_numpy()
             order = np.argsort(ts, kind="stable")
             ts = ts[order]
-            is_low = pdf[_TAG].to_numpy()[order] == _SRC_LOW
-            y = pdf[value_col].to_numpy(dtype=float)[order][is_low]
+            is_low = table.column(_TAG).to_numpy()[order] == _SRC_LOW
+            y = table.column(value_col).to_numpy()[order][is_low]
             high_ts = X = None
             names: list[str] = []
             if ind_cols:
-                X = pdf[ind_cols].to_numpy(dtype=float)[order][~is_low]
+                X = np.column_stack([table.column(c).to_numpy() for c in ind_cols])[order][~is_low]
                 # drop all-null columns so mixed fleets (some series with
                 # k=1, some k=2) can share one input
                 keep = ~np.isnan(X).all(axis=0)
@@ -141,16 +152,18 @@ def _kernel_stage(
             out_ts, y_hat, _result, info, _code = _disaggregate_arrays(
                 ts[is_low], y, high_ts, X, **solve_kw
             )
+            out_ts = pc.assume_timezone(pa.array(out_ts), stamps.type.tz, ambiguous="latest")
             out = emit(out_ts, y_hat, info, names)
         except Exception as exc:  # noqa: BLE001 — per-series isolation
             if errors == "skip":
-                return empty
+                return arrow_schema.empty_table()
             raise RuntimeError(f"disaggregation failed for series {sid!r}: {exc}") from exc
-        return pd.DataFrame({series_col: sid, **out})
+        n = len(next(iter(out.values())))
+        return pa.Table.from_pydict({series_col: [sid] * n, **out}, schema=arrow_schema)
 
     width = unioned.sparkSession.sparkContext.defaultParallelism
     unioned = unioned.repartition(width, series_col)
-    return unioned.groupBy(series_col).applyInPandas(run_group, schema=schema)
+    return unioned.groupBy(series_col).applyInArrow(run_group, schema=schema)
 
 
 def disaggregate(
@@ -274,7 +287,8 @@ def fit_reports(
         )
 
     def emit(ts, _y_hat, info, names) -> dict:
-        return {**_report_columns(names, info, len(ts)), "rho": info["rho"], "sigma2": info["sigma2"]}
+        fill = {v: np.full(len(names), info[v]) for v in ("rho", "sigma2")}
+        return {**_report_columns(names, info, len(ts)), **fill}
 
     solve_kw = dict(method=method, agg_func=agg_func, optimizer_kwargs=optimizer_kwargs)
     unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)

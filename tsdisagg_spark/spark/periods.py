@@ -10,7 +10,7 @@ timeline synthesis (``time_conversion.py:224-253``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from tsdisagg_spark import frequency as freq
@@ -68,31 +68,4 @@ def business_month_end(ts: Column) -> Column:
         F.when(dow == 1, F.date_sub(month_end, 2))
         .when(dow == 7, F.date_sub(month_end, 1))
         .otherwise(month_end)
-    )
-
-
-def tumbling_period(ts: Column, family: str) -> Column:
-    """Convenience: the (start, label) struct for grouping by calendar period."""
-    return F.struct(
-        period_start(ts, family).alias("period_start"),
-        period_label(ts, family).alias("period_label"),
-    )
-
-
-def coverage(
-    high: DataFrame,
-    ts_col: str,
-    low_family: str,
-    factor: int,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Per-period member counts with a ``is_complete`` flag — the relational
-    form of the reference's partial-period detection (ts_disagg.py:34-35,
-    398-404).  One hash aggregation; no window functions."""
-    keys = list(group_cols or [])
-    label = period_label(F.col(ts_col), low_family).alias("period_label")
-    return (
-        high.groupBy(*keys, label)
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .withColumn("is_complete", F.col("n_members") == F.lit(factor))
     )

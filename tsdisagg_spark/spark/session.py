@@ -1,7 +1,7 @@
 """SparkSession factory with engine-appropriate defaults.
 
-Tuned for the disaggregation workload: Arrow transfer for the grouped-map
-kernel boundary, adaptive execution for runtime re-planning (skew joins,
+Tuned for the disaggregation workload: Arrow transfer for pandas
+collection, adaptive execution for runtime re-planning (skew joins,
 coalesced shuffle partitions), UTC session time so calendar arithmetic is
 deterministic across engines.
 """
@@ -13,8 +13,9 @@ import os
 from pyspark.sql import SparkSession
 
 ENGINE_DEFAULTS: dict[str, str] = {
-    # Arrow-batched pandas UDF boundary: the dense per-series kernels receive
-    # columnar batches instead of pickled rows (10-100x on wide groups).
+    # Arrow for toPandas() and createDataFrame(pandas) (the tests and
+    # perfbench collect results this way); grouped-map UDFs ship Arrow
+    # batches whatever this says.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # AQE re-plans at runtime: coalesces small shuffle partitions, converts
