@@ -47,3 +47,60 @@ def test_env_override_wins(tmp_path, monkeypatch):
     assert session.get_spark(master="local[1]")["spark.driver.memory"] == "3g"
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
     assert session.get_spark(master="local[1]")["spark.driver.memory"] == session.default_driver_memory()
+
+
+def _tree(root, files):
+    for name, text in files.items():
+        path = root / name
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+    return str(root)
+
+
+def _zip(path, files):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, text in files.items():
+            zf.writestr(name, text)
+    return str(path)
+
+
+def _worker_path(tmp_path, installed):
+    """Spark's archives ahead of a package directory on PYTHONPATH, and a
+    site directory holding ``installed`` on the search path; returns the
+    PYTHONPATH entries and :func:`worker_pythonpath`'s answer."""
+    from tsdisagg_spark._worker_daemon import worker_pythonpath
+
+    shipped = {"pyspark/__init__.py": "", "pyspark/version.py": "__version__: str = '4.1.2'\n"}
+    entries = [
+        _zip(tmp_path / "pyspark.zip", shipped),
+        _zip(tmp_path / "py4j-src.zip", {"py4j/__init__.py": ""}),
+        _zip(tmp_path / "spark-core.jar", {"META-INF/MANIFEST.MF": ""}),
+        _tree(tmp_path / "pkg", {"mypkg/__init__.py": ""}),
+    ]
+    search = [_tree(tmp_path / "site", installed)]
+    return entries, worker_pythonpath(entries, search)
+
+
+def test_worker_path_drops_archives_for_matching_install(tmp_path):
+    entries, kept = _worker_path(tmp_path, {
+        "pyspark/__init__.py": "",
+        "pyspark/version.py": "__version__: str = '4.1.2'\n",
+        "py4j/__init__.py": "",
+    })
+    assert kept == entries[3:]
+
+
+def test_worker_path_keeps_archives_without_installed_pyspark(tmp_path):
+    entries, kept = _worker_path(tmp_path, {"py4j/__init__.py": ""})
+    assert kept == entries
+
+
+def test_worker_path_keeps_archives_on_version_mismatch(tmp_path):
+    entries, kept = _worker_path(tmp_path, {
+        "pyspark/__init__.py": "",
+        "pyspark/version.py": "__version__: str = '4.0.0'\n",
+        "py4j/__init__.py": "",
+    })
+    assert kept == entries

@@ -417,6 +417,37 @@ def test_single_shuffle_plan(multi_series):
         assert "REPARTITION_BY_NUM" in plan, plan
 
 
+def test_workers_import_installed_pyspark(spark):
+    """The engine's sessions start their Python workers on the pyspark the
+    driver imports, not on Spark's ``pyspark.zip``, so no task holds a
+    ``zipimporter`` over Spark's archives for ``importlib.invalidate_caches()``
+    to re-read.  Archives the session itself ships with ``addPyFile`` (the
+    registry queries ship this package) live under the SparkFiles root and
+    are not Spark's."""
+    import pyarrow as pa
+    import pyspark
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyspark
+        from pyspark import SparkFiles
+
+        for _ in batches:
+            pass
+        shipped = SparkFiles.getRootDirectory()
+        held = [
+            v.archive for v in sys.path_importer_cache.values()
+            if isinstance(v, zipimport.zipimporter) and not v.archive.startswith(shipped)
+        ]
+        yield pa.RecordBatch.from_pydict({"file": [pyspark.__file__], "zips": [len(held)]})
+
+    rows = spark.range(4, numPartitions=4).mapInArrow(probe, "file string, zips long").collect()
+    assert len(rows) == 4
+    assert {(r["file"], r["zips"]) for r in rows} == {(pyspark.__file__, 0)}
+
+
 @pytest.fixture(params=["reference", "synthetic"])
 def quarterly_csv(request, tmp_path):
     """A quarterly CSV with ``period`` as yyyy/M/d and blank ``Value`` rows:

@@ -3,7 +3,9 @@
 Tuned for the disaggregation workload: Arrow transfer for pandas
 collection, adaptive execution for runtime re-planning (skew joins,
 coalesced shuffle partitions), UTC session time so calendar arithmetic is
-deterministic across engines.
+deterministic across engines, and Python workers started by
+:mod:`tsdisagg_spark._worker_daemon`, which runs them on the installed
+pyspark instead of Spark's ``pyspark.zip`` so no task re-reads the zip.
 """
 
 from __future__ import annotations
@@ -40,6 +42,13 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
+    # Workers import pyspark from the installed package, not Spark's zips:
+    # with the zips on PYTHONPATH every Python task's invalidate_caches()
+    # re-reads ~27k archive records (0.09-0.27 s).  The archives stay when
+    # the installed pyspark or py4j is missing or its version.py differs
+    # from pyspark.zip's.  Sessions the engine did not build (such as the
+    # one handed to __spark_entry__.entry) keep Spark's own daemon.
+    "spark.python.daemon.module": "tsdisagg_spark._worker_daemon",
 }
 
 
